@@ -319,10 +319,21 @@ object MinHash {
     *    did, and min(A ∪ B) — the only cross-group survivor either way —
     *    is a representative by definition.
     * MinHashSpec pins collapsed ≡ pair-derived on a planted mega-cluster;
-    * [[graft.MinHashSkewProbe]] measures the quadratic counterfactual. */
+    * [[graft.MinHashSkewProbe]] measures the quadratic counterfactual.
+    *
+    * CACHE CONTRACT: as [[nearDuplicatePairs]] — the persisted signature
+    * frame outlives the call. [[graft.pipeline.Pipeline]] uses
+    * [[dedupReleasable]] instead, which hands the unpersist back. */
   def dedup(df: DataFrame, textCol: String, idCol: String,
             n: Int = 3, k: Int = 64, bands: Int = 16,
-            threshold: Double = 0.7): DataFrame = {
+            threshold: Double = 0.7): DataFrame =
+    dedupReleasable(df, textCol, idCol, n, k, bands, threshold)._1
+
+  /** [[dedup]] plus the release of its persisted signature frame; call
+    * the release only after the kept frame has been consumed. */
+  private[graft] def dedupReleasable(df: DataFrame, textCol: String,
+      idCol: String, n: Int = 3, k: Int = 64, bands: Int = 16,
+      threshold: Double = 0.7): (DataFrame, () => Unit) = {
     require(k % bands == 0, s"k=$k must be a multiple of bands=$bands")
     // Multi-consumer persist (r14): sigs feeds the rep collapse, the
     // dup-loser join, AND (as repSigs) all four sigPairs consumers.
@@ -337,8 +348,8 @@ object MinHash {
     val repSigs = reps.select(col("_gf_rep").as("_gf_id"), col("_gf_sig"))
     val pairLosers = sigPairs(repSigs, k, bands, threshold)
       .select(col("id_b").as("_gf_loser"))
-    df.join(dupLosers.unionByName(pairLosers).distinct(),
-      df(idCol) === col("_gf_loser"), "left_anti")
+    (df.join(dupLosers.unionByName(pairLosers).distinct(),
+      df(idCol) === col("_gf_loser"), "left_anti"), () => sigs.unpersist())
   }
 
   /** Persist a signature index — the state an INCREMENTAL near-dedup

@@ -22,8 +22,8 @@ import scala.jdk.CollectionConverters._
   *
   * Config shape (own design, not the reference's schema — the reference
   * splits per-module files; here one document holds the ordered chain,
-  * which is the natural Spark shape since the whole chain is one lazy
-  * Catalyst plan):
+  * which is the natural Spark shape since the whole chain composes
+  * lazily — see [[Pipeline]]):
   *
   * {{{
   * run_id: demo

@@ -8,7 +8,9 @@ import graft.outliers.{DetectMethod, HandleStrategy, Outliers}
 import graft.quality.{Rule, Validator}
 import graft.text.{CorpusOps, GopherRules, TextAnalysis}
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.plans.logical.LeafNode
 import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.storage.StorageLevel
 
 /** One pipeline stage — the typed counterpart of a reference module
   * invocation in `run_toolkit_pipeline.py` (each m0X module consumes the
@@ -84,31 +86,63 @@ final case class QuotaStage(groupCol: String, keyCol: String,
 
 /** Config-driven module chain — Spark-native counterpart of the
   * reference's `run_toolkit_pipeline.py`. Each stage is lazy plan
-  * composition: the whole pipeline stays ONE Catalyst plan (Spark fuses
-  * the narrow stages into the same whole-stage-codegen spans), executed
-  * only when the result is consumed.
+  * composition: `run` launches no job over the pipeline input, and Spark
+  * fuses the narrow stages into the same whole-stage-codegen spans; the
+  * work runs only when the result is consumed.
   *
-  * One documented exception: `decontaminate` builds its broadcast Bloom
-  * filter at composition time — two benchmark-SIZED jobs (gram count +
-  * filter aggregation) plus the bench parquet read run inside `run`.
-  * The corpus-side plan stays lazy; only the small build side is eager,
-  * the same way any broadcast build is.
+  * Stages whose kept frame joins back to a per-row result computed from
+  * their own input — `near_dedup` (signatures → anti-join), `lm_filter`
+  * and `ft_filter` (scores → semi-join), `decontaminate` (Bloom hits →
+  * anti-join) and `span_dedup` (cleaned text → join) — read that input
+  * twice. Left as one plan, each such stage doubles the recomputation of
+  * everything upstream of it, so `run` persists their input
+  * (MEMORY_AND_DISK, still lazy: the cache fills during the caller's
+  * first action) and the whole chain runs once. Stages that read their
+  * input a second time only through a one-row aggregate (outliers,
+  * impute) or a report (validate, the gopher/mojibake audits,
+  * `embedding_centroids`) stay uncached: there a cache costs more than
+  * the re-read. A leaf input (a file scan, a checkpoint) is not cached
+  * either; an input the caller already cached is reused, and stays the
+  * caller's to release.
+  *
+  * Build sides are eager the way any broadcast build is: `decontaminate`
+  * builds its Bloom filter (two benchmark-sized jobs plus the bench
+  * parquet read), `lm_filter` trains its count tables on the reference,
+  * `ft_filter` opens its persisted model.
   */
 object Pipeline {
 
-  /** `release()` unpersists any build-side state a stage cached (today:
-    * `lm_filter`'s count tables). Call it AFTER `df` and every report
-    * you need are materialized — the frames stay correct afterwards
-    * (cached tables recompute on access), but the caching benefit is
-    * gone, so a caller that consumes lazily should consume first.
-    * Idempotent; a no-op for pipelines with no cached build sides. */
+  /** `release()` unpersists what `run` cached: the stage inputs named
+    * above, `near_dedup`'s signature frame and the build-side state of
+    * `lm_filter`/`ft_filter`. Call it AFTER `df` and every report you
+    * need are materialized — the frames stay correct afterwards (they
+    * recompute on access), but the caching benefit is gone. A caller
+    * that never calls it keeps those caches until the session's
+    * `catalog.clearCache()`. Idempotent; a no-op for pipelines with
+    * nothing cached. */
   final case class Result(df: DataFrame, reports: Map[String, DataFrame],
                           release: () => Unit = () => ())
 
   def run(df: DataFrame, stages: Seq[Stage]): Result = {
     val reports = Map.newBuilder[String, DataFrame]
     val releasables = Seq.newBuilder[() => Unit]
-    val out = stages.zipWithIndex.foldLeft(df) { case (acc, (stage, i)) =>
+    /** The stage input a kept frame joins back to, persisted once. A
+      * leaf input (a file scan, a checkpoint) has no upstream work to
+      * save, and a cached one is already read once. */
+    def joinedBack(input: DataFrame): DataFrame =
+      if (input.queryExecution.logical.isInstanceOf[LeafNode] ||
+          input.storageLevel != StorageLevel.NONE) input
+      else {
+        val cached = input.persist(StorageLevel.MEMORY_AND_DISK)
+        releasables += (() => cached.unpersist())
+        cached
+      }
+    val out = stages.zipWithIndex.foldLeft(df) { case (in, (stage, i)) =>
+      val acc = stage match {
+        case _: NearDedupStage | _: SpanDedupStage | _: LmFilterStage |
+             _: FtFilterStage | _: DecontaminateStage => joinedBack(in)
+        case _ => in
+      }
       stage match {
         case NormalizeStage(cfg) =>
           val (next, log) = Normalizer(acc, cfg)
@@ -150,7 +184,10 @@ object Pipeline {
           // the report above (is_clean false, never null)
           acc.filter(TextAnalysis.isCleanText(col(textCol)))
         case NearDedupStage(textCol, idCol, threshold) =>
-          graft.dedup.MinHash.dedup(acc, textCol, idCol, threshold = threshold)
+          val (kept, releaseSigs) = graft.dedup.MinHash.dedupReleasable(
+            acc, textCol, idCol, threshold = threshold)
+          releasables += releaseSigs
+          kept
         case SpanDedupStage(textCol, idCol, n) =>
           val cleaned = CorpusOps.dedupeSpans(
             acc.select(col(idCol), col(textCol)), idCol, textCol, n)
@@ -207,7 +244,9 @@ object Pipeline {
           Quota.capPerGroup(acc, groupCol, keyCol, quota, seed)
       }
     }
-    val rel = releasables.result()
+    // downstream first: an upstream unpersist re-plans cached frames
+    // that read it and have not filled yet
+    val rel = releasables.result().reverse
     Result(out, reports.result(), () => rel.foreach(_.apply()))
   }
 }

@@ -50,18 +50,17 @@ object Reports {
     // (Future.sequence), and the manifest still writes strictly LAST —
     // the completeness-marker discipline is untouched.
     val entries = {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
+      import scala.concurrent.{ExecutionContext, Future}
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
         math.min(4, tables.size))
       implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      try Await.result(Future.sequence(tables.map { case (name, df) =>
+      try graft.Waits.await(Future.sequence(tables.map { case (name, df) =>
         Future {
           val p = s"$base/reports/${Artifacts.safe(name)}"
           df.write.mode(SaveMode.Overwrite).parquet(p)
           Artifacts.Entry(name, "report", p)
         }
-      }), Duration.Inf)
+      }), s"report bundle $runId: table writes")
       finally pool.shutdown()
     }
     import spark.implicits._
@@ -201,12 +200,11 @@ object Reports {
       .filter(col("kind") === "report")
       .select("artifact", "path").collect()
     if (entries.isEmpty) return Seq.empty
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
+    import scala.concurrent.{ExecutionContext, Future}
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.min(4, entries.length))
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try Await.result(Future.sequence(entries.toSeq.map { e =>
+    try graft.Waits.await(Future.sequence(entries.toSeq.map { e =>
       Future {
         val (name, path) = (e.getString(0), e.getString(1))
         val df = spark.read.parquet(path)
@@ -214,7 +212,7 @@ object Reports {
         val rows = df.orderBy(cols.map(col): _*).limit(maxRows + 1).collect()
         (name, cols, rows.take(maxRows).toSeq, rows.length > maxRows)
       }
-    }), Duration.Inf)
+    }), s"report bundle $runId: table renders")
     finally pool.shutdown()
   }
 

@@ -1090,8 +1090,7 @@ object NearDupQueries {
         // concurrently, then the three IVF-derived probes and the PQ
         // probe overlap. Each route is internally unchanged and
         // deterministic, so the graded numbers cannot move.
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
+        import scala.concurrent.{ExecutionContext, Future}
         val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
         implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
         val (ivf, ivfadc, ivfadcR, pq) = try {
@@ -1121,10 +1120,10 @@ object NearDupQueries {
           }
           val fPq = fPqIndex.map(pqIndex => graft.sim.Pq.topK(pqIndex,
             queries, "vec_id", "embedding", k = 10))
-          Await.result(
+          graft.Waits.await(
             fIvf.zip(fIvfAdc).zip(fIvfAdcR).zip(fPq).map {
               case (((a, b), c), d) => (a, b, c, d)
-            }, Duration.Inf)
+            }, "ann_recall: index builds")
         } finally pool.shutdown()
         val lsh = Similarity.lshTopK(e, "vec_id", "embedding",
           queries, "vec_id", "embedding", k = 10, nPlanes = 8)

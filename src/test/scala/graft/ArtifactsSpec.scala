@@ -136,4 +136,15 @@ class ArtifactsSpec extends SparkSpec {
       Reports.renderHtml(spark, out, "r1", maxRows = 0)
     }
   }
+
+  test("a stuck driver-side wait raises DriverWaitTimeout, not a hang") {
+    import scala.concurrent.duration._
+    val never = scala.concurrent.Promise[Unit]().future
+    val e = intercept[DriverWaitTimeout] {
+      Waits.await(never, "stuck writes", 50.millis)
+    }
+    assert(e.getMessage.contains("stuck writes") &&
+      e.getCause.isInstanceOf[java.util.concurrent.TimeoutException])
+    assert(Waits.await(scala.concurrent.Future.successful(3), "done") == 3)
+  }
 }

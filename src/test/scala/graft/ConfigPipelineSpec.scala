@@ -552,4 +552,89 @@ class ConfigPipelineSpec extends SparkSpec {
     }
     assert(bad.getMessage.contains("n_shards"))
   }
+
+  /** A small curation corpus plus the side inputs its join-back stages
+    * read: an LM reference, a persisted fastText model, a benchmark set.
+    * Planted: an exact dup (2 of 1), a near dup (3 of 1), an off-domain
+    * doc (5) for the LM gate, a contaminated doc (6), a "bad" doc (7)
+    * for the fastText gate. */
+  private def withCurationInputs(body: (String, String, String, String) => Unit): Unit = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-join-back").toFile
+    val p = (name: String) => new java.io.File(dir, name).getAbsolutePath
+    val story = "the cat sat on the mat and the dog sat by the door while the " +
+      "sun was warm and the day was long and the cat was happy"
+    val span = (1 to 12).map(i => s"bench$i").mkString(" ")
+    try {
+      Seq(
+        (1L, s"$story with the dog"),
+        (2L, s"THE ${story.drop(4)}  with the dog  "),
+        (3L, s"$story with the bird"),
+        (4L, "the dog was happy and the cat sat on the mat by the door " +
+          "and the day was warm and the sun was long on the cat"),
+        (5L, "quarterly revenue guidance exceeded consensus estimates while " +
+          "margins compressed amid elevated logistics expenditures overseas"),
+        (6L, s"the cat sat on the mat and $span and the dog sat by the door"),
+        (7L, s"the cat was sad and the dog was sad bad bad bad and the day was long")
+      ).toDF("doc_id", "text").write.parquet(p("corpus"))
+      Seq.fill(4)(Tuple1(story)).toDF("text").write.parquet(p("ref"))
+      Seq((100L, span)).toDF("doc_id", "text").write.parquet(p("bench"))
+      graft.text.FastText.writeModelFeatures(spark,
+        Seq(("cat", 1.0), ("bad", -4.0)).toDF("feature", "weight"),
+        bias = 0.0, p("model"))
+      body(p("corpus"), p("ref"), p("model"), p("bench"))
+    } finally {
+      def rm(f: java.io.File): Unit = {
+        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(): Unit
+      }
+      rm(dir)
+    }
+  }
+
+  test("release() leaves no cached frame behind once the result is written") {
+    withCurationInputs { (corpus, ref, model, bench) =>
+      spark.catalog.clearCache()
+      val res = Pipeline.run(spark.read.parquet(corpus), Seq(
+        NearDedupStage("text", "doc_id", 0.7),
+        LmFilterStage("text", "doc_id", ref, -6.0, 0.4),
+        FtFilterStage("text", "doc_id", model, 0.5),
+        DecontaminateStage("text", "doc_id", bench, 8, 0.01)))
+      val out = s"${java.nio.file.Files.createTempDirectory("graft-out")}/kept"
+      res.df.write.parquet(out)
+      res.release()
+      assert(spark.sharedState.cacheManager.isEmpty,
+        "a stage's cache outlived Result.release")
+      // the frame stays correct after the release (it recomputes)
+      assert(res.df.select("doc_id").as[Long].collect().toSet ==
+        spark.read.parquet(out).select("doc_id").as[Long].collect().toSet)
+    }
+  }
+
+  test("a fused curation chain evaluates each input row once") {
+    withCurationInputs { (corpus, ref, _, bench) =>
+      val stages = Seq(
+        TextFilterStage("text", 0.2, Seq("en")),
+        ExactDedupStage("text", "doc_id"),
+        NearDedupStage("text", "doc_id", 0.7),
+        LmFilterStage("text", "doc_id", ref, -6.0, 0.4),
+        DecontaminateStage("text", "doc_id", bench, 8, 0.01))
+      val evals = spark.sparkContext.longAccumulator("input row evaluations")
+      val seen = udf { () => evals.add(1L); true }.asNondeterministic()
+      val res = Pipeline.run(spark.read.parquet(corpus).filter(seen()), stages)
+      val out = s"${java.nio.file.Files.createTempDirectory("graft-out")}/kept"
+      res.df.write.parquet(out)
+      res.release()
+      assert(evals.value == 7L, s"${evals.value} evaluations of 7 input rows")
+      // the same chain one stage at a time, each stage's output cut loose
+      val stepwise = stages.foldLeft(spark.read.parquet(corpus)) { (acc, stage) =>
+        val r = Pipeline.run(acc, Seq(stage))
+        val next = r.df.localCheckpoint()
+        r.release()
+        next
+      }
+      val kept = spark.read.parquet(out).select("doc_id").as[Long].collect().sorted
+      assert(kept.toSeq == stepwise.select("doc_id").as[Long].collect().sorted.toSeq)
+      // every gate fired: exact dup, near dup, off-domain, contaminated
+      assert(kept.toSeq == Seq(1L, 4L, 7L), s"kept ${kept.mkString(",")}")
+    }
+  }
 }
