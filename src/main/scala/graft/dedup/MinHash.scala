@@ -41,13 +41,8 @@ object MinHash {
   /** Band hashes for LSH bucketing: `bands` buckets of `k/bands` signature
     * rows each. Two docs with Jaccard ~s collide in ≥1 band with
     * probability 1-(1-s^r)^b. */
-  def bandHashes(sigCol: Column, k: Int, bands: Int): Column = {
-    require(k % bands == 0,
-      s"k=$k must be a multiple of bands=$bands — integer truncation would silently drop the trailing ${k % bands} signature lanes")
-    val r = k / bands
-    array((0 until bands).map(j =>
-      xxhash64(lit(j), slice(sigCol, j * r + 1, r))): _*)
-  }
+  def bandHashes(sigCol: Column, k: Int, bands: Int): Column =
+    Lsh(Xx, k, bands).bandKeys(sigCol)
 
   /** Estimated Jaccard = fraction of matching signature positions. */
   def estJaccard(sigA: Column, sigB: Column, k: Int): Column =
@@ -74,24 +69,113 @@ object MinHash {
     * formulations; this one adds almost nothing on top of it. */
   def signatures(df: DataFrame, textCol: String, idCol: String,
                  n: Int, k: Int): DataFrame =
-    signaturesOfShingleCol(df, shingles(col(textCol), n), idCol, k)
+    Lsh(Xx, k).signatures(df, shingles(col(textCol), n), idCol)
 
   /** [[signatures]] over an already-tokenized array column. */
   def signaturesOfTokens(df: DataFrame, toksCol: String, idCol: String,
                          n: Int, k: Int): DataFrame =
-    signaturesOfShingleCol(df, shinglesOfTokens(col(toksCol), n), idCol, k)
+    Lsh(Xx, k).signatures(df, shinglesOfTokens(col(toksCol), n), idCol)
 
-  private def signaturesOfShingleCol(df: DataFrame, shingleCol: Column,
-                                     idCol: String, k: Int): DataFrame = {
-    val hashed = df
-      .select(col(idCol).as("_gf_id"), explode(shingleCol).as("_gf_s"))
-      .select(col("_gf_id"), xxhash64(col("_gf_s")).as("_gf_hh"))
-    hashed.groupBy("_gf_id")
-      .agg(min(xxhash64(col("_gf_hh"), lit(0))).as("_gf_m0"),
-        (1 until k).map(i => min(xxhash64(col("_gf_hh"), lit(i))).as(s"_gf_m$i")): _*)
-      .select(col("_gf_id"),
-        array((0 until k).map(i => col(s"_gf_m$i")): _*).as("_gf_sig"))
+  /** What separates a MinHash lane from its twin: the shingle hash, lane
+    * i's permutation of that hash, and the key of band j (of r lanes) of
+    * a signature column. Everything else is [[Lsh]]. */
+  private[dedup] final case class Kernel(hash: Column => Column,
+                                         lane: (Column, Int) => Column,
+                                         bandKey: (Column, Int, Int) => Column)
+
+  /** The production kernel: xxhash64 throughout (fast, 64-bit, rows-only). */
+  private val Xx = Kernel(
+    s => xxhash64(s),
+    (h, i) => xxhash64(h, lit(i)),
+    (sig, j, r) => xxhash64(lit(j), slice(sig, j * r + 1, r)))
+
+  /** The LSH core both lanes run: signature aggregation → band buckets →
+    * candidate join → estimator, over `(_gf_id, _gf_sig array<bigint>)`
+    * signature frames. A bare signature frame is the one-band case. */
+  private[dedup] final case class Lsh(kernel: Kernel, k: Int, bands: Int = 1) {
+    require(bands >= 1 && k >= 1 && k % bands == 0,
+      s"k=$k must be a positive multiple of bands=$bands — k = 0 signs " +
+        "every doc alike, and integer truncation would silently drop the " +
+        "trailing lanes")
+    private val r = k / bands
+
+    /** The relational signature frame — see [[MinHash.signatures]]. */
+    def signatures(df: DataFrame, shingleCol: Column,
+                   idCol: String): DataFrame = {
+      val hashed = df
+        .select(col(idCol).as("_gf_id"), explode(shingleCol).as("_gf_s"))
+        .select(col("_gf_id"), kernel.hash(col("_gf_s")).as("_gf_hh"))
+      val lanes = (0 until k).map(i =>
+        min(kernel.lane(col("_gf_hh"), i)).as(s"_gf_m$i"))
+      hashed.groupBy("_gf_id").agg(lanes.head, lanes.tail: _*)
+        .select(col("_gf_id"),
+          array((0 until k).map(i => col(s"_gf_m$i")): _*).as("_gf_sig"))
+    }
+
+    def bandKeys(sig: Column): Column =
+      array((0 until bands).map(j => kernel.bandKey(sig, j, r)): _*)
+
+    /** (band, band_key, id-as-`idAlias`) bucket rows of a signature frame
+      * — THE bucketing projection, shared by every band-join consumer.
+      * Enforces (not assumes) that the stored signature length matches
+      * `k`: an index built with a different k would band-hash wrong slices
+      * and silently stop matching — fail loudly instead. */
+    def buckets(sigs: DataFrame, idAlias: String): DataFrame = {
+      // isNotNull guard: under legacy (non-ANSI) size(null) = -1 semantics
+      // a null signature row would raise a misleading "length -1" error
+      // here instead of being dropped by posexplode as before
+      val checked = when(col("_gf_sig").isNotNull && size(col("_gf_sig")) =!= k,
+          raise_error(concat(lit("graft: signature length "),
+            size(col("_gf_sig")).cast("string"),
+            lit(s" does not match k=$k — index and probe must use the same k")))
+            .cast("array<bigint>"))
+        .otherwise(col("_gf_sig"))
+      sigs.select(col("_gf_id").as(idAlias),
+        posexplode(bandKeys(checked)).as(Seq("_gf_band", "_gf_bh")))
+    }
+
+    /** Scores candidate pairs `(id_<a>, id_<b>, …)`: joins each `sides`
+      * signature frame back by id as `_gf_sig_<tag>` (a side whose
+      * signature already rides the candidates is not listed) and keeps
+      * `(id_<a>, id_<b>, est_jaccard)` at or above `threshold`. */
+    def scored(cand: DataFrame, a: String, b: String, threshold: Double)(
+        sides: (String, DataFrame)*): DataFrame =
+      sides.foldLeft(cand) { case (acc, (tag, sigs)) =>
+        acc.join(sigs.select(col("_gf_id").as(s"id_$tag"),
+          col("_gf_sig").as(s"_gf_sig_$tag")), Seq(s"id_$tag"))
+      }.select(col(s"id_$a"), col(s"id_$b"),
+          estJaccard(col(s"_gf_sig_$a"), col(s"_gf_sig_$b"), k).as("est_jaccard"))
+        .filter(col("est_jaccard") >= threshold)
+
+    /** Self-join pairs over a signature frame: (id_a < id_b, est_jaccard).
+      * The band join is ID-ONLY — see [[nearDuplicatePairs]]. */
+    def pairs(sigs: DataFrame, threshold: Double): DataFrame = {
+      val cand = buckets(sigs, "id_a").join(buckets(sigs, "id_b"), Seq("_gf_band", "_gf_bh"))
+        .filter(col("id_a") < col("id_b"))
+        .select("id_a", "id_b")
+        .distinct()
+      scored(cand, "a", "b", threshold)("a" -> sigs, "b" -> sigs)
+    }
   }
+
+  /** The family's one persist point: a signature frame feeding several
+    * consumers (band-bucket sides, estimator joins) runs its shingle →
+    * hash → k-lane aggregation once (r14). One doc × (k+1) longs per row
+    * — signature-table-sized, never corpus-sized.
+    *
+    * CACHE CONTRACT: the returned plans own no action, so they cannot
+    * unpersist the frame, and it outlives the call. These public entry
+    * points leave one behind: [[nearDuplicatePairs]], [[dedup]],
+    * [[crossNearDuplicatePairs]] and [[decontaminateNear]] (one per side),
+    * [[NgramJaccard.pairs]], and [[PortableMinHash.pairs]],
+    * [[PortableMinHash.pairsOfTokens]], [[PortableMinHash.kept]] and
+    * [[PortableMinHash.jaccardPairs]]. Long-lived sessions that call them
+    * repeatedly must clear or unpersist between calls (the Verify/Bench
+    * harnesses call `cacheManager.clearCache()` between queries);
+    * [[graft.pipeline.Pipeline]] uses [[dedupReleasable]], which hands the
+    * unpersist back. [[SimHash.pairsOverSims]] is the SimHash family's twin. */
+  private[dedup] def persisted(sigs: DataFrame): DataFrame =
+    sigs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
   /** Candidate near-duplicate pairs (idA < idB, est_jaccard >= threshold).
     * Returns (id_a, id_b, est_jaccard).
@@ -103,93 +187,38 @@ object MinHash {
     * estimator. Shipping signatures with the band rows instead would
     * multiply the shuffle by bands × sigBytes/20 (~400× at defaults).
     *
-    * CACHE CONTRACT: the returned plan persists its signature-table-sized
-    * frame (multi-consumer subtree) and owns no action, so it cannot
-    * unpersist it. Long-lived sessions that call this repeatedly must
-    * clear or unpersist between calls (the Verify/Bench harnesses call
-    * `cacheManager.clearCache()` between queries); the same applies to
-    * [[SimHash.nearDuplicatePairs]] and [[PortableMinHash.pairs]]. */
+    * CACHE CONTRACT: see [[persisted]]. */
   def nearDuplicatePairs(df: DataFrame, textCol: String, idCol: String,
                          n: Int = 3, k: Int = 64, bands: Int = 16,
-                         threshold: Double = 0.7): DataFrame = {
-    require(k % bands == 0, s"k=$k must be a multiple of bands=$bands")
-    // The signature frame feeds FOUR consumers inside sigPairs (two
-    // band-bucket sides + two estimator joins); persist it so the
-    // shingle→hash→K-lane aggregation runs once (the PortableMinHash.pairs
-    // precedent, r14). One doc × (k+1) longs per row — signature-table-
-    // sized, never corpus-sized; harnesses clear caches between queries.
-    val sigs = signatures(df, textCol, idCol, n, k)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    sigPairs(sigs, k, bands, threshold)
-  }
-
-  /** (band, band_hash, id-as-`idAlias`) bucket rows of a signature frame
-    * — THE bucketing projection, shared by every band-join consumer.
-    * Enforces (not assumes) that the stored signature length matches `k`:
-    * an index built with a different k would band-hash wrong slices and
-    * silently stop matching — fail loudly instead. */
-  private def bandBuckets(sigs: DataFrame, k: Int, bands: Int,
-                          idAlias: String): DataFrame = {
-    // isNotNull guard: under legacy (non-ANSI) size(null) = -1 semantics a
-    // null signature row would raise a misleading "length -1" error here
-    // instead of being dropped by posexplode as before
-    val checked = when(col("_gf_sig").isNotNull && size(col("_gf_sig")) =!= k,
-        raise_error(concat(lit("graft: signature length "),
-          size(col("_gf_sig")).cast("string"),
-          lit(s" does not match k=$k — index and probe must use the same k")))
-          .cast("array<bigint>"))
-      .otherwise(col("_gf_sig"))
-    sigs.select(col("_gf_id").as(idAlias),
-      posexplode(bandHashes(checked, k, bands)).as(Seq("_gf_band", "_gf_bh")))
-  }
+                         threshold: Double = 0.7): DataFrame =
+    Lsh(Xx, k, bands).pairs(persisted(signatures(df, textCol, idCol, n, k)),
+      threshold)
 
   /** [[nearDuplicatePairs]] body over an already-computed signature frame
     * — callers that hold signatures (stored index, multi-use batch) skip
     * the re-shingling entirely. */
   private[graft] def sigPairs(sigs: DataFrame, k: Int, bands: Int,
-                              threshold: Double): DataFrame = {
-    val a = bandBuckets(sigs, k, bands, "id_a")
-    val b = bandBuckets(sigs, k, bands, "id_b")
-    val cand = a.join(b, Seq("_gf_band", "_gf_bh"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-      .distinct()
-    cand
-      .join(sigs.select(col("_gf_id").as("id_a"), col("_gf_sig").as("_gf_sig_a")), Seq("id_a"))
-      .join(sigs.select(col("_gf_id").as("id_b"), col("_gf_sig").as("_gf_sig_b")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        estJaccard(col("_gf_sig_a"), col("_gf_sig_b"), k).as("est_jaccard"))
-      .filter(col("est_jaccard") >= threshold)
-  }
+                              threshold: Double): DataFrame =
+    Lsh(Xx, k, bands).pairs(sigs, threshold)
 
   /** Cross-corpus near-duplicate pairs: for each left doc, the right docs
     * whose MinHash estimate clears `threshold` — near-dup DECONTAMINATION
     * (a paraphrased benchmark item still matches) and cross-source overlap
     * audits. Same id-only band join as [[nearDuplicatePairs]]; when
     * `right` is benchmark-sized, Catalyst broadcasts its signature side.
-    * Returns (id_l, id_r, est_jaccard). */
+    * Returns (id_l, id_r, est_jaccard). CACHE CONTRACT: see [[persisted]]. */
   def crossNearDuplicatePairs(left: DataFrame, right: DataFrame,
                               textCol: String, idCol: String,
                               n: Int = 3, k: Int = 64, bands: Int = 16,
                               threshold: Double = 0.7): DataFrame = {
-    require(k % bands == 0, s"k=$k must be a multiple of bands=$bands")
-    def sides(df: DataFrame, tag: String) = {
-      // each side feeds its band buckets AND its estimator join (r14)
-      val sigs = signatures(df, textCol, idCol, n, k)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      (sigs.select(col("_gf_id").as(s"id_$tag"), col("_gf_sig").as(s"_gf_sig_$tag")),
-        bandBuckets(sigs, k, bands, s"id_$tag"))
-    }
-    val (lSigs, lBuckets) = sides(left, "l")
-    val (rSigs, rBuckets) = sides(right, "r")
-    lBuckets.join(rBuckets, Seq("_gf_band", "_gf_bh"))
+    val lsh = Lsh(Xx, k, bands)
+    // each side feeds its band buckets AND its estimator join (r14)
+    val l = persisted(signatures(left, textCol, idCol, n, k))
+    val r = persisted(signatures(right, textCol, idCol, n, k))
+    val cand = lsh.buckets(l, "id_l").join(lsh.buckets(r, "id_r"), Seq("_gf_band", "_gf_bh"))
       .select("id_l", "id_r")
       .distinct()
-      .join(lSigs, Seq("id_l"))
-      .join(rSigs, Seq("id_r"))
-      .select(col("id_l"), col("id_r"),
-        estJaccard(col("_gf_sig_l"), col("_gf_sig_r"), k).as("est_jaccard"))
-      .filter(col("est_jaccard") >= threshold)
+    lsh.scored(cand, "l", "r", threshold)("l" -> l, "r" -> r)
   }
 
   /** Incremental near-dedup: drop new-batch docs that near-match the
@@ -205,9 +234,9 @@ object MinHash {
                       textCol: String, idCol: String,
                       n: Int = 3, k: Int = 64, bands: Int = 16,
                       threshold: Double = 0.7): DataFrame = {
-    require(k % bands == 0, s"k=$k must be a multiple of bands=$bands")
+    val lsh = Lsh(Xx, k, bands)
     // ONE signature pass over the batch: within-batch losers come from
-    // sigPairs on the same frame (not a nested dedup() that would
+    // the pair core on the same frame (not a nested dedup() that would
     // re-shingle), survivors' signatures are an anti-join on ids, and
     // only those survivors probe the index. The signature aggregation's
     // exchange is reused across all consumers.
@@ -220,17 +249,15 @@ object MinHash {
     // anti-join build sides are insensitive to duplicate rows, so the
     // loser frames skip dedup entirely — only candIds dedups (each
     // surviving pair must pay exactly one estimator)
-    val withinLosers = sigPairs(batchSigs, k, bands, threshold)
+    val withinLosers = lsh.pairs(batchSigs, threshold)
       .select(col("id_b").as("_gf_loser"))
     val survivorSigs = batchSigs
       .join(withinLosers, batchSigs("_gf_id") === col("_gf_loser"), "left_anti")
-    val candIds = bandBuckets(survivorSigs, k, bands, "id_b")
-      .join(bandBuckets(indexSigs, k, bands, "id_i"), Seq("_gf_band", "_gf_bh"))
+    val candIds = lsh.buckets(survivorSigs, "id_b")
+      .join(lsh.buckets(indexSigs, "id_i"), Seq("_gf_band", "_gf_bh"))
       .select("id_b", "id_i").distinct()
-    val indexLosers = candIds
-      .join(survivorSigs.select(col("_gf_id").as("id_b"), col("_gf_sig").as("_gf_sig_b")), Seq("id_b"))
-      .join(indexSigs.select(col("_gf_id").as("id_i"), col("_gf_sig").as("_gf_sig_i")), Seq("id_i"))
-      .filter(estJaccard(col("_gf_sig_b"), col("_gf_sig_i"), k) >= threshold)
+    val indexLosers = lsh.scored(candIds, "b", "i", threshold)(
+        "b" -> survivorSigs, "i" -> indexSigs)
       .select(col("id_b").as("_gf_loser"))
     batch.join(withinLosers.unionByName(indexLosers),
       batch(idCol) === col("_gf_loser"), "left_anti")
@@ -250,7 +277,7 @@ object MinHash {
     * each candidate pays one exact estimator against the stored signature.
     * The index side re-derives band buckets from the stored `(id, sig)`
     * frame — a projection of the index, never a re-read of its text — and
-    * inherits [[bandBuckets]]' k-mismatch raise.
+    * inherits [[Lsh.buckets]]' k-mismatch raise.
     *
     * Returns (id_d, id_i, est_jaccard) with est_jaccard >= threshold. On
     * a batch frame pairs are distinct. On a STREAMING frame a pair that
@@ -263,19 +290,17 @@ object MinHash {
                  textCol: String, idCol: String,
                  n: Int = 3, k: Int = 64, bands: Int = 16,
                  threshold: Double = 0.7): DataFrame = {
-    require(k % bands == 0, s"k=$k must be a multiple of bands=$bands")
+    val lsh = Lsh(Xx, k, bands)
     val sigd = docs.select(col(idCol).as("id_d"),
         signature(shingles(col(textCol), n), k).as("_gf_sig_d"))
       .filter(col("_gf_sig_d").isNotNull)
+    // the doc side's signature rides its band rows: a stream cannot
+    // rejoin it by id
     val banded = sigd.select(col("id_d"), col("_gf_sig_d"),
-      posexplode(bandHashes(col("_gf_sig_d"), k, bands)).as(Seq("_gf_band", "_gf_bh")))
-    val matched = banded
-      .join(bandBuckets(indexSigs, k, bands, "id_i"), Seq("_gf_band", "_gf_bh"))
-      .join(indexSigs.select(col("_gf_id").as("id_i"), col("_gf_sig").as("_gf_sig_i")),
-        Seq("id_i"))
-      .select(col("id_d"), col("id_i"),
-        estJaccard(col("_gf_sig_d"), col("_gf_sig_i"), k).as("est_jaccard"))
-      .filter(col("est_jaccard") >= threshold)
+      posexplode(lsh.bandKeys(col("_gf_sig_d"))).as(Seq("_gf_band", "_gf_bh")))
+    val matched = lsh.scored(
+        banded.join(lsh.buckets(indexSigs, "id_i"), Seq("_gf_band", "_gf_bh")),
+        "d", "i", threshold)("i" -> indexSigs)
     if (docs.isStreaming) matched else matched.distinct()
   }
 
@@ -321,9 +346,7 @@ object MinHash {
     * MinHashSpec pins collapsed ≡ pair-derived on a planted mega-cluster;
     * [[graft.MinHashSkewProbe]] measures the quadratic counterfactual.
     *
-    * CACHE CONTRACT: as [[nearDuplicatePairs]] — the persisted signature
-    * frame outlives the call. [[graft.pipeline.Pipeline]] uses
-    * [[dedupReleasable]] instead, which hands the unpersist back. */
+    * CACHE CONTRACT: see [[persisted]]. */
   def dedup(df: DataFrame, textCol: String, idCol: String,
             n: Int = 3, k: Int = 64, bands: Int = 16,
             threshold: Double = 0.7): DataFrame =
@@ -334,11 +357,10 @@ object MinHash {
   private[graft] def dedupReleasable(df: DataFrame, textCol: String,
       idCol: String, n: Int = 3, k: Int = 64, bands: Int = 16,
       threshold: Double = 0.7): (DataFrame, () => Unit) = {
-    require(k % bands == 0, s"k=$k must be a multiple of bands=$bands")
+    val lsh = Lsh(Xx, k, bands)
     // Multi-consumer persist (r14): sigs feeds the rep collapse, the
-    // dup-loser join, AND (as repSigs) all four sigPairs consumers.
-    val sigs = signatures(df, textCol, idCol, n, k)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // dup-loser join, AND (as repSigs) all four pair-core consumers.
+    val sigs = persisted(signatures(df, textCol, idCol, n, k))
     val reps = sigs.groupBy(col("_gf_sig"))
       .agg(min(col("_gf_id")).as("_gf_rep"))
     // m×1 per signature group: skew-safe (the hot key meets ONE build row)
@@ -346,7 +368,7 @@ object MinHash {
       .filter(col("_gf_id") =!= col("_gf_rep"))
       .select(col("_gf_id").as("_gf_loser"))
     val repSigs = reps.select(col("_gf_rep").as("_gf_id"), col("_gf_sig"))
-    val pairLosers = sigPairs(repSigs, k, bands, threshold)
+    val pairLosers = lsh.pairs(repSigs, threshold)
       .select(col("id_b").as("_gf_loser"))
     (df.join(dupLosers.unionByName(pairLosers).distinct(),
       df(idCol) === col("_gf_loser"), "left_anti"), () => sigs.unpersist())
@@ -356,37 +378,13 @@ object MinHash {
     * pipeline carries between batches ([[incrementalNear]] /
     * [[probePairs]] consume it). Follows the engine's persisted-index
     * discipline ([[graft.sim.Quantize.writeSq8Index]]): refusals before
-    * any write (empty frame, null signatures, MIXED k — an index whose
-    * rows disagree on lane count would band-hash wrong slices and
-    * silently stop matching), data first, format-tagged k/row-pinned
-    * manifest LAST as the completeness marker. */
+    * any write (see [[checkedFrame]]), data first, format-tagged
+    * k/row-pinned manifest LAST as the completeness marker. */
   def writeSignatureIndex(sigs: DataFrame, path: String): Unit = {
-    val spark = sigs.sparkSession
-    require(sigs.limit(1).collect().nonEmpty,
-      "writeSignatureIndex: refusing to persist an empty signature frame")
+    val (k, n) = checkedFrame(sigs, "writeSignatureIndex", None, path)
     sigs.select(col("_gf_id"), col("_gf_sig"))
       .write.mode("overwrite").parquet(s"$path/sigs")
-    val written = spark.read.parquet(s"$path/sigs")
-    val stats = written.agg(
-      count(lit(1)).as("n"), count(col("_gf_sig")).as("ns"),
-      countDistinct(size(col("_gf_sig"))).as("nk"),
-      first(size(col("_gf_sig")), ignoreNulls = true).as("k")).collect()(0)
-    if (stats.getLong(0) != stats.getLong(1))
-      throw new IllegalArgumentException(
-        s"writeSignatureIndex: ${stats.getLong(0) - stats.getLong(1)} null " +
-          "signatures in the frame — drop them before persisting; a null " +
-          "signature cannot be probed")
-    if (stats.getLong(2) != 1L)
-      throw new IllegalArgumentException(
-        s"writeSignatureIndex: ${stats.getLong(2)} distinct lane counts in " +
-          "one frame — an index must be built at ONE k")
-    val k = stats.getInt(3); val n = stats.getLong(0)
-    val json = s"""{"format": "graft-minhash-v1", "k": $k, "rows": $n}"""
-    val mp = new org.apache.hadoop.fs.Path(s"$path/manifest.json")
-    val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(mp, true)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    writeManifest(sigs.sparkSession, path, k, n)
   }
 
   /** Re-open a persisted signature index; refuses a missing/foreign
@@ -394,23 +392,9 @@ object MinHash {
     * count that disagrees with the manifest's k. */
   def readSignatureIndex(spark: org.apache.spark.sql.SparkSession,
                          path: String): DataFrame = {
-    val mp = new org.apache.hadoop.fs.Path(s"$path/manifest.json")
-    val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(mp)) throw new IllegalArgumentException(
-      s"no signature-index manifest at $path — nothing was persisted here, " +
-        "or the write was interrupted before completion (manifest is last)")
-    val in = fs.open(mp)
-    val raw =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    def num(key: String): Long =
-      s""""$key":\\s*(\\d+)""".r.findFirstMatchIn(raw).map(_.group(1).toLong)
-        .getOrElse(throw new IllegalArgumentException(
-          s"signature-index manifest at $path is missing '$key': $raw"))
-    if (!raw.contains("\"graft-minhash-v1\"")) throw new IllegalArgumentException(
-      s"manifest at $path is not a graft-minhash-v1 index (got: $raw) — " +
-        "refusing to probe foreign signatures")
-    val k = num("k"); val rows = num("rows")
+    val (k, rows) = readManifest(spark, path,
+      "nothing was persisted here, or the write was interrupted before " +
+        "completion (manifest is last)")
     val sigs = spark.read.parquet(s"$path/sigs")
     val n = sigs.count()
     if (n != rows) throw new IllegalArgumentException(
@@ -428,48 +412,92 @@ object MinHash {
 
   /** Append a new batch's signatures to an existing index WITHOUT
     * rewriting it — the between-batches step of incremental near-dedup.
-    * Refusals BEFORE any write: foreign/missing manifest, empty batch,
-    * lane-count mismatch with the index's k, id collisions (a document
-    * signed twice would pair with itself forever after). Data appends
-    * first; the manifest is recounted from the written files and
-    * overwritten LAST. Single-writer contract, as for every persisted
-    * index in this engine. */
+    * Refusals BEFORE any write: foreign/missing manifest, everything
+    * [[checkedFrame]] refuses (at the index's k), and ids already in the
+    * index (a document signed twice would pair with itself forever
+    * after). Data appends first; the manifest is recounted from the
+    * written files and overwritten LAST. Single-writer contract, as for
+    * every persisted index in this engine. */
   def appendToSignatureIndex(sigs: DataFrame, path: String): Unit = {
     val spark = sigs.sparkSession
-    val mp = new org.apache.hadoop.fs.Path(s"$path/manifest.json")
-    val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(mp)) throw new IllegalArgumentException(
-      s"no signature-index manifest at $path — appendToSignatureIndex needs " +
-        "an existing index; use writeSignatureIndex for the first write")
-    val in = fs.open(mp)
-    val raw =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    if (!raw.contains("\"graft-minhash-v1\"")) throw new IllegalArgumentException(
-      s"manifest at $path is not a graft-minhash-v1 index (got: $raw)")
-    val k = """"k":\s*(\d+)""".r.findFirstMatchIn(raw).map(_.group(1).toInt)
-      .getOrElse(throw new IllegalArgumentException(
-        s"signature-index manifest at $path is missing 'k': $raw"))
-    require(sigs.limit(1).collect().nonEmpty,
-      "appendToSignatureIndex: refusing to append an empty frame")
-    val badK = sigs.filter(col("_gf_sig").isNull || size(col("_gf_sig")) =!= k)
-      .limit(1).collect()
-    if (badK.nonEmpty) throw new IllegalArgumentException(
-      s"appendToSignatureIndex: batch carries a null or non-$k-lane " +
-        s"signature — the index at $path was built at k=$k")
-    val existing = spark.read.parquet(s"$path/sigs")
+    val (k, _) = readManifest(spark, path,
+      "appendToSignatureIndex needs an existing index; use " +
+        "writeSignatureIndex for the first write")
+    checkedFrame(sigs, "appendToSignatureIndex", Some(k), path)
     val clashes = sigs.select(col("_gf_id"))
-      .join(existing.select(col("_gf_id")), Seq("_gf_id"), "left_semi")
+      .join(spark.read.parquet(s"$path/sigs").select(col("_gf_id")),
+        Seq("_gf_id"), "left_semi")
       .limit(5).collect().map(_.get(0))
     if (clashes.nonEmpty) throw new IllegalArgumentException(
       s"appendToSignatureIndex: ids already present in the index at $path " +
         s"(first ${clashes.length}: ${clashes.mkString(", ")})")
     sigs.select(col("_gf_id"), col("_gf_sig"))
       .write.mode("append").parquet(s"$path/sigs")
-    val n = spark.read.parquet(s"$path/sigs").count()
-    val json = s"""{"format": "graft-minhash-v1", "k": $k, "rows": $n}"""
-    val out = fs.create(mp, true)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    writeManifest(spark, path, k, spark.read.parquet(s"$path/sigs").count())
+  }
+
+  private val IndexFormat = "graft-minhash-v1"
+
+  /** One aggregate over a frame about to be persisted, refusing what no
+    * index may hold: an empty frame, null signatures (they cannot be
+    * probed), more than one lane count or one other than the index's `k`
+    * (an index whose rows disagree on k would band-hash wrong slices and
+    * silently stop matching), and an id repeated inside the frame (a
+    * document signed twice pairs with itself forever after). Returns
+    * (k, rows). */
+  private def checkedFrame(sigs: DataFrame, op: String, want: Option[Int],
+                           path: String): (Int, Long) = {
+    val s = sigs.agg(count(lit(1)), count(col("_gf_sig")),
+      min(size(col("_gf_sig"))), max(size(col("_gf_sig"))),
+      countDistinct(col("_gf_id"))).collect()(0)
+    val n = s.getLong(0)
+    require(n > 0, s"$op: refusing to persist an empty signature frame")
+    if (n != s.getLong(1)) throw new IllegalArgumentException(
+      s"$op: ${n - s.getLong(1)} null signatures in the frame — drop them " +
+        "before persisting; a null signature cannot be probed")
+    val (lo, hi) = (s.getInt(2), s.getInt(3))
+    want.filter(k => lo != k || hi != k).foreach(k =>
+      throw new IllegalArgumentException(s"$op: batch carries a non-$k-lane " +
+        s"signature — the index at $path was built at k=$k"))
+    if (lo != hi) throw new IllegalArgumentException(
+      s"$op: lane counts from $lo to $hi in one frame — an index must be " +
+        "built at ONE k")
+    if (s.getLong(4) != n) throw new IllegalArgumentException(
+      s"$op: ${n - s.getLong(4)} repeated ids in the frame — each document " +
+        "is signed once")
+    (lo, n)
+  }
+
+  /** The manifest's (k, rows); refuses a missing (`missing` says why that
+    * matters to the caller) or foreign manifest. */
+  private def readManifest(spark: org.apache.spark.sql.SparkSession,
+                           path: String, missing: String): (Int, Long) = {
+    val mp = new org.apache.hadoop.fs.Path(s"$path/manifest.json")
+    val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
+    if (!fs.exists(mp)) throw new IllegalArgumentException(
+      s"no signature-index manifest at $path — $missing")
+    val in = fs.open(mp)
+    val raw =
+      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+      finally in.close()
+    if (!raw.contains("\"" + IndexFormat + "\"")) throw new IllegalArgumentException(
+      s"manifest at $path is not a $IndexFormat index (got: $raw) — " +
+        "refusing to probe foreign signatures")
+    def num(key: String): Long =
+      s""""$key":\\s*(\\d+)""".r.findFirstMatchIn(raw).map(_.group(1).toLong)
+        .getOrElse(throw new IllegalArgumentException(
+          s"signature-index manifest at $path is missing '$key': $raw"))
+    (num("k").toInt, num("rows"))
+  }
+
+  /** Writes the manifest — callers write it LAST, as the completeness
+    * marker. */
+  private def writeManifest(spark: org.apache.spark.sql.SparkSession,
+                            path: String, k: Int, rows: Long): Unit = {
+    val mp = new org.apache.hadoop.fs.Path(s"$path/manifest.json")
+    val out = mp.getFileSystem(spark.sessionState.newHadoopConf()).create(mp, true)
+    try out.write(s"""{"format": "$IndexFormat", "k": $k, "rows": $rows}"""
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
   }
 }

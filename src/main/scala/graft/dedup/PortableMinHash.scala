@@ -1,6 +1,6 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Cross-engine-verifiable MinHash — the portable lane of SURVEY §2 rows
@@ -48,32 +48,25 @@ object PortableMinHash {
   def laneA(i: Int): Long = ((i + 1).toLong * MulA) % P
   def laneB(i: Int): Long = ((i + 1).toLong * MulB) % P
 
-  private def laneCol(i: Int): String = s"_gf_p$i"
+  /** The portable kernel: shingle hash `h32(s) % P`, lane
+    * `(aᵢ·h + bᵢ) % P`, band key the decimal comma-join of the band's
+    * lanes. */
+  private val Md5 = MinHash.Kernel(
+    s => graft.ops.Hll.h32(s) % P,
+    (h, i) => (h * laneA(i) + laneB(i)) % P,
+    (sig, j, r) => concat_ws(",", slice(sig, j * r + 1, r).cast("array<string>")))
 
-  /** Wide per-doc signature frame `(_gf_id, _gf_p0 … _gf_p{k-1})`:
-    * explode shingles, hash each once, fold the k lane minima in ONE
-    * map-side-combined aggregation (the [[MinHash.signatures]] shape). */
+  /** Per-doc signature frame `(_gf_id, _gf_sig array<bigint>)` — the
+    * [[MinHash.signatures]] frame under this lane's kernel. */
   def signatures(df: DataFrame, textCol: String, idCol: String,
                  n: Int, k: Int): DataFrame =
-    signaturesOfShingleCol(df, MinHash.shingles(col(textCol), n), idCol, k)
+    MinHash.Lsh(Md5, k).signatures(df, MinHash.shingles(col(textCol), n), idCol)
 
   /** [[signatures]] over an already-tokenized array column. */
   def signaturesOfTokens(df: DataFrame, toksCol: String, idCol: String,
                          n: Int, k: Int): DataFrame =
-    signaturesOfShingleCol(df, MinHash.shinglesOfTokens(col(toksCol), n),
-      idCol, k)
-
-  private def signaturesOfShingleCol(df: DataFrame, shingleCol: Column,
-                                     idCol: String, k: Int): DataFrame = {
-    require(k >= 1, s"need k >= 1, got $k")
-    val hashed = df
-      .select(col(idCol).as("_gf_id"), explode(shingleCol).as("_gf_s"))
-      .select(col("_gf_id"), (graft.ops.Hll.h32(col("_gf_s")) % P).as("_gf_hp"))
-    hashed.groupBy("_gf_id")
-      .agg(min((col("_gf_hp") * laneA(0) + laneB(0)) % P).as(laneCol(0)),
-        (1 until k).map(i =>
-          min((col("_gf_hp") * laneA(i) + laneB(i)) % P).as(laneCol(i))): _*)
-  }
+    MinHash.Lsh(Md5, k).signatures(df,
+      MinHash.shinglesOfTokens(col(toksCol), n), idCol)
 
   /** Signature table melted to `(id, lane, sig)` — the dump the oracle
     * recomputes row for row (nested outputs are refused by the gate). */
@@ -81,61 +74,23 @@ object PortableMinHash {
                      n: Int, k: Int): DataFrame =
     signatures(df, textCol, idCol, n, k)
       .select(col("_gf_id").as(idCol),
-        expr(s"stack($k, ${(0 until k)
-          .map(i => s"$i, ${laneCol(i)}").mkString(", ")})")
-          .as(Seq("lane", "sig")))
-
-  /** (band, key, id-as-alias) bucket rows: band j's key is the decimal
-    * comma-join of lanes [j·r, (j+1)·r). */
-  private def bandBuckets(sigs: DataFrame, k: Int, bands: Int,
-                          idAlias: String): DataFrame = {
-    val r = k / bands
-    val keys = array((0 until bands).map(j =>
-      concat_ws(",", (j * r until (j + 1) * r)
-        .map(i => col(laneCol(i)).cast("string")): _*)): _*)
-    sigs.select(col("_gf_id").as(idAlias),
-      posexplode(keys).as(Seq("_gf_band", "_gf_bk")))
-  }
+        posexplode(col("_gf_sig")).as(Seq("lane", "sig")))
 
   /** Candidate pairs surviving the band join and the estimator:
-    * (id_a, id_b, est_jaccard), id_a < id_b, est >= threshold. */
+    * (id_a, id_b, est_jaccard), id_a < id_b, est >= threshold.
+    * CACHE CONTRACT: see [[MinHash.persisted]]. */
   def pairs(df: DataFrame, textCol: String, idCol: String,
             n: Int = 5, k: Int = 32, bands: Int = 16,
             threshold: Double = 0.5): DataFrame =
-    pairsOverSigs(signatures(df, textCol, idCol, n, k), k, bands, threshold)
+    MinHash.Lsh(Md5, k, bands).pairs(
+      MinHash.persisted(signatures(df, textCol, idCol, n, k)), threshold)
 
   /** [[pairs]] over an already-tokenized array column. */
   def pairsOfTokens(df: DataFrame, toksCol: String, idCol: String,
                     n: Int, k: Int, bands: Int,
                     threshold: Double): DataFrame =
-    pairsOverSigs(signaturesOfTokens(df, toksCol, idCol, n, k), k, bands,
-      threshold)
-
-  private def pairsOverSigs(sigFrame: DataFrame, k: Int, bands: Int,
-                            threshold: Double): DataFrame = {
-    require(k % bands == 0, s"k=$k must be a multiple of bands=$bands")
-    // The signature frame feeds FOUR consumers (two band-bucket sides +
-    // two estimator sides); exchange reuse covers the shuffle but not
-    // the post-shuffle lane folds, and nothing covers the consumers'
-    // re-derivation when the input itself is a derived frame. One doc ×
-    // (k+1) longs per row — the persist is signature-table-sized, never
-    // corpus-sized; callers' harnesses clear caches between queries.
-    val sigs = sigFrame
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cand = bandBuckets(sigs, k, bands, "id_a")
-      .join(bandBuckets(sigs, k, bands, "id_b"), Seq("_gf_band", "_gf_bk"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-    def side(tag: String) = sigs.select(col("_gf_id").as(s"id_$tag") +:
-      (0 until k).map(i => col(laneCol(i)).as(s"_${tag}$i")): _*)
-    val matches = (0 until k)
-      .map(i => when(col(s"_a$i") === col(s"_b$i"), 1).otherwise(0))
-      .reduce(_ + _)
-    cand.join(side("a"), Seq("id_a")).join(side("b"), Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        (matches.cast("double") / k).as("est_jaccard"))
-      .filter(col("est_jaccard") >= threshold)
-  }
+    MinHash.Lsh(Md5, k, bands).pairs(
+      MinHash.persisted(signaturesOfTokens(df, toksCol, idCol, n, k)), threshold)
 
   /** Exact n-gram Jaccard over portable-band candidates — row 48's
     * verifiable lane ([[NgramJaccard.pairs]] with this lane's candidate
@@ -146,19 +101,11 @@ object PortableMinHash {
     * the SQL mirror. */
   def jaccardPairs(df: DataFrame, textCol: String, idCol: String,
                    n: Int = 5, k: Int = 32, bands: Int = 16,
-                   threshold: Double = 0.5): DataFrame = {
-    val cand = pairs(df, textCol, idCol, n, k, bands,
-      math.max(0.0, threshold - 0.2)).select("id_a", "id_b")
-    val sh = df.select(col(idCol).as("_gf_sid"),
-      array_distinct(MinHash.shingles(col(textCol), n)).as("_gf_sh"))
-    cand
-      .join(sh.select(col("_gf_sid").as("id_a"), col("_gf_sh").as("_gf_sh_a")), Seq("id_a"))
-      .join(sh.select(col("_gf_sid").as("id_b"), col("_gf_sh").as("_gf_sh_b")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        graft.Num.dround(NgramJaccard.jaccard(col("_gf_sh_a"), col("_gf_sh_b")), 4)
-          .as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-  }
+                   threshold: Double = 0.5): DataFrame =
+    NgramJaccard.pairsOverCandidates(df,
+      pairs(df, textCol, idCol, n, k, bands, math.max(0.0, threshold - 0.2))
+        .select("id_a", "id_b"),
+      textCol, idCol, n, threshold)
 
   /** Greedy keep set ([[MinHash.dedup]]'s policy): drop any doc whose
     * estimate against a smaller-id doc clears the threshold. */

@@ -1,7 +1,7 @@
 package graft.dedup
 
 import graft.text.TextAnalysis
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Cross-engine-verifiable SimHash — row 47's portable lane (the
@@ -30,23 +30,11 @@ object PortableSimHash {
 
   private val Bits = 32
 
-  /** Per-id 32-bit fingerprint frame `(_gf_id, _gf_sim)` — one exploded
-    * token pass, 32 conditional sums, map-side combined. */
-  def simhashes(df: DataFrame, textCol: String, idCol: String): DataFrame = {
-    val hashed = df
-      .select(col(idCol).as("_gf_id"),
-        explode(TextAnalysis.tokens(col(textCol))).as("_gf_t"))
-      .select(col("_gf_id"), graft.ops.Hll.h32(col("_gf_t")).as("_gf_hh"))
-    val bitSum = (b: Int) =>
-      sum(when(col("_gf_hh").bitwiseAND(1L << b) =!= 0L, 1L).otherwise(-1L))
-    val sums = hashed.groupBy("_gf_id")
-      .agg(bitSum(0).as("_gf_b0"),
-        (1 until Bits).map(b => bitSum(b).as(s"_gf_b$b")): _*)
-    sums.select(col("_gf_id"),
-      (0 until Bits).map(b =>
-        when(col(s"_gf_b$b") > 0, lit(1L << b)).otherwise(0L)).reduce(_ + _)
-        .as("_gf_sim"))
-  }
+  /** Per-id 32-bit fingerprint frame `(_gf_id, _gf_sim)` — the
+    * [[SimHash.simhashes]] frame over the md5-prefix token hash. */
+  def simhashes(df: DataFrame, textCol: String, idCol: String): DataFrame =
+    SimHash.fingerprints(df, TextAnalysis.tokens(col(textCol)), idCol, Bits,
+      graft.ops.Hll.h32)
 
   /** Fingerprint table `(id, sig)` — the dump the oracle recomputes. */
   def signatureTable(df: DataFrame, textCol: String, idCol: String): DataFrame =
@@ -54,32 +42,11 @@ object PortableSimHash {
       .select(col("_gf_id").as(idCol), col("_gf_sim").as("sig"))
 
   /** Pairs within `maxDist` Hamming bits (id_a < id_b, complete for
-    * maxDist < blocks): (id_a, id_b, hamming). */
+    * maxDist < blocks): (id_a, id_b, hamming). CACHE CONTRACT: see
+    * [[SimHash.pairsOverSims]]. */
   def pairs(df: DataFrame, textCol: String, idCol: String,
-            maxDist: Int = 7, blocks: Int = 8): DataFrame = {
-    require(Bits % blocks == 0, s"blocks=$blocks must divide $Bits")
-    require(maxDist < blocks,
-      s"pigeonhole completeness needs maxDist < blocks, got $maxDist >= $blocks")
-    val width = Bits / blocks
-    // Same both-sides-of-the-self-join persist as SimHash.nearDuplicatePairs
-    // (r14): one (id, long) row per doc, never corpus-sized.
-    val sims = simhashes(df, textCol, idCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val buckets = sims.select(col("_gf_id"), col("_gf_sim"),
-      posexplode(array((0 until blocks).map(j =>
-        shiftrightunsigned(col("_gf_sim"), j * width)
-          .bitwiseAND((1L << width) - 1)): _*)).as(Seq("_gf_block", "_gf_bv")))
-    val a = buckets.select(col("_gf_block"), col("_gf_bv"),
-      col("_gf_id").as("id_a"), col("_gf_sim").as("_gf_sim_a"))
-    val b = buckets.select(col("_gf_block"), col("_gf_bv"),
-      col("_gf_id").as("id_b"), col("_gf_sim").as("_gf_sim_b"))
-    a.join(b, Seq("_gf_block", "_gf_bv"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        bit_count(col("_gf_sim_a").bitwiseXOR(col("_gf_sim_b"))).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxDist)
-  }
+            maxDist: Int = 7, blocks: Int = 8): DataFrame =
+    SimHash.pairsOverSims(simhashes(df, textCol, idCol), Bits, maxDist, blocks)
 
   // ---- DuckDB mirrors ----------------------------------------------------
 

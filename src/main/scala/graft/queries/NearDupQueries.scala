@@ -1535,7 +1535,7 @@ object NearDupQueries {
              regexp_split_to_array(lower(trim(text)), '\\s+') AS l
            FROM documents),
        grams AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos,
-             ${Winnow.sqlGramHash(s"($gram)")} AS h
+             ${graft.ops.Hll.sqlH32(s"($gram)")} AS h
            FROM toks CROSS JOIN
              unnest(generate_series(1, len(l) - ${k - 1})) AS t(i)
            WHERE len(l) >= $k AND length($gram) > 0),

@@ -40,10 +40,6 @@ object Winnow {
   /** 2³¹ − 1 — largest encodable 0-based gram position. */
   val PosMask: Long = 2147483647L
 
-  /** Portable 32-bit gram hash: first 8 hex chars of md5, as a long. */
-  private def gramHash(gram: org.apache.spark.sql.Column) =
-    conv(substring(md5(gram), 1, 8), 16, 10).cast("long")
-
   /** Selected fingerprints: one row per (idCol, fp_pos, fp_hash), where
     * fp_pos is the 0-based token position of the selected k-gram. Docs
     * shorter than k tokens emit nothing; docs with fewer than w grams
@@ -68,7 +64,7 @@ object Winnow {
       .select(col(idCol), posexplode(gramCol).as(Seq("pos", "gram")))
       .where(length(col("gram")) > 0)
       .select(col(idCol), col("pos").cast("long").as("pos"),
-        (gramHash(col("gram")) * PosBase + (lit(PosMask) - col("pos")))
+        (graft.ops.Hll.h32(col("gram")) * PosBase + (lit(PosMask) - col("pos")))
           .as("code"))
     val sel = Window.partitionBy(idCol).orderBy("pos")
       .rowsBetween(Window.currentRow, w - 1)
@@ -121,11 +117,8 @@ object Winnow {
   }
 
   /** DuckDB fragment: the (hash, pos) arithmetic code of a gram. `h` must
-    * be the md5-prefix BIGINT, `pos` the 0-based gram position. */
+    * be the md5-prefix BIGINT ([[graft.ops.Hll.sqlH32]]), `pos` the
+    * 0-based gram position. */
   def sqlCode(h: String, pos: String): String =
     s"$h * $PosBase + ($PosMask - $pos)"
-
-  /** DuckDB fragment: the portable 32-bit gram hash. */
-  def sqlGramHash(gram: String): String =
-    s"CAST(CAST(concat('0x', substring(md5($gram), 1, 8)) AS UBIGINT) AS BIGINT)"
 }

@@ -297,6 +297,10 @@ class NearDupSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       MinHash.nearDuplicatePairs(df, "text", "doc_id", k = 64, bands = 10)
     }
+    // k = 0 divides every band count, but signs every doc alike
+    intercept[IllegalArgumentException] {
+      MinHash.dedup(df, "text", "doc_id", k = 0)
+    }
   }
 
   test("component dedup keeps one doc per connected chain A~B~C") {
@@ -413,6 +417,17 @@ class NearDupSpec extends SparkSpec {
       MinHash.writeSignatureIndex(base.limit(0), s"$dir/empty")
     }
     assert(ex3.getMessage.contains("empty"))
+    // an id repeated inside the frame, on both write paths
+    val twice = MinHash.signatures(probe, "text", "doc_id", n = 3, k = 64)
+    val ex5 = intercept[IllegalArgumentException] {
+      MinHash.writeSignatureIndex(base.unionByName(base.limit(1)), s"$dir/dup")
+    }
+    assert(ex5.getMessage.contains("repeated ids"))
+    val ex6 = intercept[IllegalArgumentException] {
+      MinHash.appendToSignatureIndex(twice.unionByName(twice.limit(1)), path)
+    }
+    assert(ex6.getMessage.contains("repeated ids"))
+    assert(MinHash.readSignatureIndex(spark, path).count() == full.count())
     val fp = new java.io.PrintWriter(s"$path/manifest.json")
     try fp.write("""{"format": "other", "k": 64, "rows": 1}""") finally fp.close()
     new java.io.File(s"$path/.manifest.json.crc").delete(): Unit

@@ -1,6 +1,6 @@
 package graft
 
-import graft.dedup.PortableSimHash
+import graft.dedup.{PortableSimHash, SimHash}
 import org.apache.spark.sql.functions._
 
 class PortableSimHashSpec extends SparkSpec {
@@ -47,6 +47,13 @@ class PortableSimHashSpec extends SparkSpec {
     }
     intercept[IllegalArgumentException] {
       PortableSimHash.pairs(df, "text", "doc_id", maxDist = 2, blocks = 5)
+    }
+    // the production lane shares the pigeonhole core and its refusals
+    intercept[IllegalArgumentException] {
+      SimHash.nearDuplicatePairs(df, "text", "doc_id", maxDist = 4, blocks = 4)
+    }
+    intercept[IllegalArgumentException] {
+      SimHash.nearDuplicatePairs(df, "text", "doc_id", maxDist = 2, blocks = 5)
     }
   }
 }
