@@ -1,29 +1,155 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
-/** Benchmark main — one JSON line with per-query seconds.
+import graft.queries.Q
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** Benchmark main — one JSON line with per-query seconds:
+  * `runMain graft.Bench [query ...]` (no names = the whole registry).
   *
   * Measurement discipline (single cold runs were observed up to 14× apart
   * on identical code):
-  *  - fixed query order (registration order, not Map iteration order)
-  *  - one full untimed warm-up pass (JIT, codegen cache, parquet footers)
+  *  - fixed query order (registration order, or the order named)
+  *  - one untimed warm-up run per query (JIT, codegen cache, parquet
+  *    footers) in the session that times it
   *  - MINIMUM of `SPARK_GRAFT_BENCH_ITERS` (default 3) timed runs per
   *    query, +2 extra samples for sub-second queries: timing noise (GC,
   *    scheduler, JIT recompilation) is one-sided additive, so the min is
   *    the standard steady-state estimator and is far more stable across
   *    JVMs than a median
-  *  - System.gc() before each query so one query's garbage debt doesn't
-  *    bill the next one's samples
+  *  - System.gc() before the timed runs so one query's garbage debt
+  *    doesn't bill the next one's samples
   *  - materialization via `queryExecution.toRdd.count()`, which evaluates
   *    every output column — a plain `df.count()` lets Catalyst prune the
   *    computed columns and undertimes expression-heavy queries.
+  *
+  * A query that throws is listed under `failed` (name → error class) and
+  * the main exits 1 after writing its artifacts; a query that leaves a
+  * cached relation behind is listed under `leaked`.
+  *
+  * This object also owns the measurement helpers the other mains share:
+  * the warm-then-min timer ([[warmMin]]) and the artifact writer ([[str]],
+  * [[num]], [[obj]], [[weather]], [[write]]).
   */
 object Bench {
-  /** Current 1-minute loadavg, or -1 when unreadable. */
-  private def l1(): Double = try {
+
+  /** JSON string literal. Escapes quote, backslash and ALL control chars:
+    * a tab or CR in builder-authored SQL would otherwise make the
+    * driver's json.load fail and silently zero the round's correctness. */
+  def str(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  /** Fixed-point JSON number, `null` for NaN. Locale.ROOT: `%.3f` under a
+    * comma-decimal default locale would emit 0,123 and break the JSON. */
+  def num(v: Double, digits: Int = 3): String =
+    if (v.isNaN) "null"
+    else String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(v))
+
+  /** JSON object of already-rendered values. */
+  def obj(fields: (String, String)*): String =
+    fields.map { case (k, v) => str(k) + ":" + v }.mkString("{", ",", "}")
+
+  /** `/proc/loadavg` fields ("l1 l5 l15 running/total lastpid"), or none
+    * when unreadable. */
+  private def loadavg(): Array[String] = try {
     val src = scala.io.Source.fromFile("/proc/loadavg")
-    try src.mkString.trim.split("\\s+")(0).toDouble finally src.close()
-  } catch { case _: Exception => -1.0 }
+    try src.mkString.trim.split("\\s+") finally src.close()
+  } catch { case _: Exception => Array.empty }
+
+  private def l1(): Double = loadavg().headOption.map(_.toDouble).getOrElse(-1.0)
+
+  /** The `load` weather stamp every artifact carries, so a reader
+    * can separate code from climate without round-over-round archaeology.
+    * A clean idle run has l1 well below the run's own CPU count and
+    * procs_running in the low single digits. */
+  def weather(extra: (String, String)*): String = {
+    val p = loadavg()
+    val load =
+      if (p.length < 4) Nil
+      else {
+        val rt = p(3).split("/")
+        Seq("l1" -> p(0), "l5" -> p(1), "l15" -> p(2),
+          "procs_running" -> rt(0), "procs_total" -> rt(1))
+      }
+    obj(load ++ extra: _*)
+  }
+
+  /** Write one artifact line. */
+  def write(path: String, line: String): Unit = {
+    val w = new java.io.PrintWriter(path, "UTF-8")
+    try w.println(line) finally w.close()
+  }
+
+  /** One timed run: seconds, output rows, and the frame (its executed
+    * plan is final once counted). */
+  final case class Run(sec: Double, rows: Long, df: DataFrame)
+
+  /** The fastest timed run, every timed sample, and whether any run
+    * (warm-up included) left a cached relation behind. */
+  final case class Timing(best: Run, samples: Seq[Double], leaked: Boolean) {
+    def med: Double = {
+      val s = samples.sorted
+      if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
+    }
+  }
+
+  /** Warm once untimed, then the minimum of `iters` timed runs (none when
+    * the warm-up alone exceeds `cutoff`; +2 when `topUp` and the fastest
+    * is sub-second). The clock covers building the frame, since eager
+    * composition-time work is part of a query's cost. Every run clears
+    * the cache first: a frame with an in-plan persist would otherwise
+    * let later samples read sample 1's cache through plan-equality reuse
+    * and report warm-cache numbers as the min. */
+  def warmMin(spark: SparkSession, iters: Int, cutoff: Double = Double.PositiveInfinity,
+      topUp: Boolean = false)(frame: => DataFrame): Timing = {
+    val cache = spark.sharedState.cacheManager
+    var leaked = false
+    def run(): Run = {
+      cache.clearCache()
+      val t0 = System.nanoTime()
+      val df = frame
+      val rows = df.queryExecution.toRdd.count()
+      val r = Run((System.nanoTime() - t0) / 1e9, rows, df)
+      leaked ||= !cache.isEmpty
+      r
+    }
+    val warm = run()
+    System.gc()
+    var runs = if (warm.sec > cutoff) Seq(warm) else (1 to iters).map(_ => run())
+    if (topUp && runs.map(_.sec).min < 1.0) runs ++= (1 to 2).map(_ => run())
+    cache.clearCache()
+    Timing(runs.minBy(_.sec), runs.map(_.sec), leaked)
+  }
+
+  /** One query's bench row: min and median seconds and sample count
+    * (-1, -1, 0 when it failed), the class of the error that failed it,
+    * and whether it left a cached relation behind. */
+  final case class Row(name: String, min: Double, med: Double, n: Int,
+      error: Option[String], leaked: Boolean)
+
+  def row(spark: SparkSession, q: Q, sfDir: String, iters: Int): Row =
+    try {
+      val t = warmMin(spark, iters, topUp = true)(q.run(spark, sfDir))
+      Row(q.name, t.best.sec, t.med, t.samples.size, None, t.leaked)
+    } catch {
+      case e: Throwable =>
+        System.err.println(s"[bench] ${q.name} FAILED: $e")
+        val cache = spark.sharedState.cacheManager
+        val leaked = !cache.isEmpty
+        cache.clearCache()
+        Row(q.name, -1, -1, 0, Some(e.getClass.getName), leaked)
+    }
+
+  /** The `"failed":{name: error class},"leaked":[name, …]` fields. */
+  def outcomes(rows: Seq[Row]): String =
+    "\"failed\":" + obj(rows.flatMap(r => r.error.map(e => r.name -> str(e))): _*) +
+      ",\"leaked\":" + rows.filter(_.leaked).map(r => str(r.name)).mkString("[", ",", "]")
 
   /** Quiet-load gate (the r11 lesson: a bench taken at l1 = 9.8 needed
     * load-adjustment archaeology to compare across rounds). Wait for the
@@ -53,8 +179,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt
+    val queries = SparkEntry.select(args.toSeq)
     val (preL1, quiet) = quietGate()
     // SPARK_GRAFT_BENCH_RESTART_EVERY = N > 0 stops and rebuilds the
     // SparkSession every N timed queries — the marathon-hygiene lever:
@@ -68,102 +194,19 @@ object Bench {
     // 4.3× on the worst key; set 0 to reproduce the old marathon lane).
     val restartEvery =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_RESTART_EVERY", "16").toInt
-    def build(): SparkSession = {
-      val sp = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      // ERROR, not WARN: expected per-query WARNs (e.g. single-partition
-      // window notes on distinct-value CDF scans) would otherwise flood
-      // the bounded stdout tail the harness parses the JSON line from.
-      sp.sparkContext.setLogLevel("ERROR")
-      sp
-    }
-    var spark = build()
-
-    val regs = SparkEntry.registry
-    def materialize(q: graft.queries.Q): Unit =
-      q.run(spark, sfDir).queryExecution.toRdd.count(): Unit
-    // Index/LM builders .cache() per invocation, and every sample is a
-    // fresh invocation — without clearing, a 155-query × several-sample
-    // run accumulates hundreds of orphaned cached tables (LRU eviction
-    // keeps it CORRECT, but the executor storage pool stays pinned and
-    // later queries' shuffles spill earlier than they should). Queries
-    // share no cached state across invocations, so clearing between
-    // queries changes no result and no steady-state timing.
-    def clearCaches(): Unit = spark.sharedState.cacheManager.clearCache()
-
-    // Queries warmed in the CURRENT session. The r12 restart lane
-    // re-warmed only the query at each restart boundary, so the other
-    // restartEvery-1 queries in the window paid fresh-session cold costs
-    // (codegen/JIT, FileIndex/footer caches) inside their first timed
-    // sample — measured: text_quality_panel 7.06 s med in-lane vs 2.9 s
-    // in a properly warmed fresh JVM. Every query now warms once per
-    // session, lazily, just before its timed samples. (r15: the former
-    // additional up-front `regs.foreach(warm)` pass warmed the WHOLE
-    // registry in session 1, but every restart — every `restartEvery`
-    // queries — wipes `warmedInSession`, so all but the first window's
-    // warm-ups were discarded and re-done lazily anyway: a full untimed
-    // registry pass (~8-12 min at sf0.1) of pure waste that pushed the
-    // full-registry run past the measurement harness's wall-clock window.
-    // Removing it changes no per-query number: each query still executes
-    // once untimed in its own session before its timed samples.)
-    var warmedInSession = scala.collection.mutable.Set.empty[String]
-    def warm(q: graft.queries.Q): Unit =
-      if (!warmedInSession.contains(q.name)) {
-        try materialize(q) catch { case _: Throwable => () }
-        clearCaches()
-        warmedInSession += q.name
-      }
-
-    // Per query: (min, median, sample count). The min is the headline
-    // (one-sided-noise steady-state estimator, as above); the median
-    // rides along in the DETAIL artifact so ambient load is visible in
-    // the artifact itself — a med/min ratio near 1 says the machine was
-    // quiet, a large one says the absolute numbers carry weather
-    // (the r9 round-over-round comparison needed loadavg archaeology to
-    // establish exactly this).
-    var timedIdx = 0
-    val results = regs.map { q =>
-      if (restartEvery > 0 && timedIdx > 0 && timedIdx % restartEvery == 0) {
+    var spark = Session.build(4)
+    val rows = queries.zipWithIndex.map { case (q, i) =>
+      if (restartEvery > 0 && i > 0 && i % restartEvery == 0) {
         spark.stop()
-        spark = build()
-        warmedInSession = scala.collection.mutable.Set.empty[String]
+        spark = Session.build(4)
       }
-      timedIdx += 1
-      // first execution in this session warms untimed (no-op if the
-      // initial pass or an earlier sample in this session already did)
-      warm(q)
-      System.gc()
-      def sample(): Option[Double] = {
-        // clear BEFORE the timer: queries with an in-plan persist (the
-        // curation chains materialize their multi-consumer gate stage)
-        // would otherwise have samples 2..n read sample 1's cache via
-        // plan-equality reuse and report warm-cache numbers as min
-        clearCaches()
-        val t0 = System.nanoTime()
-        try { materialize(q); Some((System.nanoTime() - t0) / 1e9) }
-        catch { case _: Throwable => None }
-      }
-      var samples = (1 to iters).flatMap(_ => sample())
-      if (samples.nonEmpty && samples.min < 1.0)
-        samples = samples ++ (1 to 2).flatMap(_ => sample())
-      val stats =
-        if (samples.isEmpty) (-1.0, -1.0, 0)
-        else {
-          val s = samples.sorted
-          val med =
-            if (s.size % 2 == 1) s(s.size / 2)
-            else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
-          (s.head, med, s.size)
-        }
-      clearCaches()
-      q.name -> stats
+      val r = row(spark, q, sfDir, iters)
+      if (r.error.isEmpty) System.err.println(s"[bench] ${r.name} ${num(r.min)} s (min of ${r.n})")
+      r
     }
-    val total = results.map(_._2._1).filter(_ >= 0).sum
+    spark.stop()
+    val total = rows.map(_.min).filter(_ >= 0).sum
+    val done = outcomes(rows)
     // The harness that reads this output keeps only the TAIL of stdout
     // (observed: last 2000 chars) and parses the JSON line out of that
     // window — a long line whose head falls outside the window is
@@ -173,105 +216,36 @@ object Bench {
     // the slowest queries if the full map ever outgrows the budget
     // (JSON maps are order-insensitive). build.sbt sets showSuccess :=
     // false so this really is the final line of stdout.
-    // Locale.ROOT: f"%.3f" under a comma-decimal default locale would
-    // emit 0,123 and break the JSON contract.
-    def fmt(v: Double): String =
-      if (v < 0) "-1"
-      else String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    def line(entries: Seq[(String, Double)]): String = {
-      val qs = entries.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-        .mkString("{", ",", "}")
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
-    }
+    def fmt(v: Double): String = if (v < 0) "-1" else num(v)
+    def line(entries: Seq[Row]): String =
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":${
+        obj(entries.map(r => r.name -> fmt(r.min)): _*)},$done,"sf":${str(sfDir)}}"""
     // Detail entries carry the variance column: {"min":…,"med":…,"n":…}.
-    val detail = results.map { case (k, (mn, md, n)) =>
-      s"\"" + k + s"\":{\"min\":$mn,\"med\":$md,\"n\":$n}"
-    }.mkString("{", ",", "}")
-    // Machine-load fingerprint, so a reader can separate code from climate
-    // without round-over-round archaeology: /proc/loadavg is
-    // "l1 l5 l15 running/total lastpid". A clean idle run has l1 well
-    // below the bench's own CPU count and running in the low single digits.
-    val loadFp: String = try {
-      val src = scala.io.Source.fromFile("/proc/loadavg")
-      val parts = try src.mkString.trim.split("\\s+") finally src.close()
-      val rt = parts(3).split("/")
-      s""""load":{"l1":${parts(0)},"l5":${parts(1)},"l15":${parts(2)},""" +
-        s""""procs_running":${rt(0)},"procs_total":${rt(1)},"bench_cpus":$cpus,""" +
-        s""""pre_l1":$preL1,"quiet_gate":$quiet,"restart_every":$restartEvery}"""
-    } catch { case _: Exception =>
-      s""""load":{"bench_cpus":$cpus,"pre_l1":$preL1,"quiet_gate":$quiet,"restart_every":$restartEvery}""" }
+    // A med/min ratio near 1 says the machine was quiet, a large one says
+    // the absolute numbers carry weather.
+    val detail = obj(rows.map(r => r.name -> s"""{"min":${r.min},"med":${r.med},"n":${r.n}}"""): _*)
+    val load = weather("bench_cpus" -> Session.cpus(4), "pre_l1" -> preL1.toString,
+      "quiet_gate" -> quiet.toString, "restart_every" -> restartEvery.toString)
     val detailLine =
-      s"""{"metric":"total_detail","value":$total,"unit":"sec",$loadFp,"queries":$detail,"sf":"$sfDir"}"""
+      s"""{"metric":"total_detail","value":$total,"unit":"sec","load":$load,"queries":$detail,$done,"sf":${str(sfDir)}}"""
     println(detailLine)
     // Also persist the COMPLETE per-query map as a file artifact: the
     // capped stdout line below drops the fastest queries once the
-    // registry outgrows its 1900-char budget, which silently loses
-    // round-over-round diff coverage for the dropped entries.
+    // registry outgrows its 1900-char budget.
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL", "bench_detail.json")
-    try {
-      val w = new java.io.PrintWriter(detailPath, "UTF-8")
-      try w.println(detailLine) finally w.close()
-    } catch {
-      case e: Exception => System.err.println(s"[bench] detail artifact write failed: $e")
-    }
-    val mins = results.map { case (k, (mn, _, _)) => k -> mn }
-    val full = line(mins)
-    val out =
+    try write(detailPath, detailLine)
+    catch { case e: Exception => System.err.println(s"[bench] detail artifact write failed: $e") }
+    val full = line(rows)
+    println(
       if (full.length <= 1900) full
       else {
-        val slowestFirst = mins.sortBy(-_._2)
         var budget = 1900 - line(Nil).length
-        val kept = slowestFirst.takeWhile { case (k, v) =>
-          val cost = k.length + fmt(v).length + 4
-          val ok = budget - cost >= 0
-          if (ok) budget -= cost
-          ok
-        }.map(_._1).toSet
-        line(mins.filter(r => kept(r._1)))
-      }
-    println(out)
-    spark.stop()
-  }
-}
-
-/** Single-query timing for iteration: `runMain graft.BenchOne <name>...`
-  * — same session config, warm-up, and min-of-iters discipline as
-  * [[Bench]], but only the named queries. Not part of the driver
-  * contract; a dev tool for optimizing one operator without paying the
-  * full-registry run. */
-object BenchOne {
-  def main(args: Array[String]): Unit = {
-    require(args.nonEmpty, "usage: BenchOne <queryName> [more...]")
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val byName = SparkEntry.registry.map(q => q.name -> q).toMap
-    args.foreach { name =>
-      val q = byName.getOrElse(name,
-        sys.error(s"unknown query '$name' (${byName.keys.toSeq.sorted.take(5).mkString(", ")}...)"))
-      def once(): Double = {
-        // same between-sample cache clear as Bench (in-plan persists
-        // must not let later samples ride sample 1's cache)
-        spark.sharedState.cacheManager.clearCache()
-        val t0 = System.nanoTime()
-        q.run(spark, sfDir).queryExecution.toRdd.count(): Unit
-        (System.nanoTime() - t0) / 1e9
-      }
-      once() // warm-up
-      System.gc()
-      var samples = (1 to iters).map(_ => once())
-      // same sub-second top-up as Bench, so fast-query numbers compare
-      if (samples.min < 1.0) samples = samples ++ (1 to 2).map(_ => once())
-      println(f"[benchone] $name%-30s ${samples.min}%8.3f s (min of ${samples.size})")
-    }
-    spark.stop()
+        val kept = rows.sortBy(-_.min).takeWhile { r =>
+          budget -= r.name.length + fmt(r.min).length + 4
+          budget >= 0
+        }.map(_.name).toSet
+        line(rows.filter(r => kept(r.name)))
+      })
+    if (rows.exists(_.error.nonEmpty)) sys.exit(1)
   }
 }

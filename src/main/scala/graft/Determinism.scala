@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
@@ -30,6 +30,9 @@ import java.nio.file.{Files, Paths}
   * depends on the file-split layout. The gate REQUIRES it to mismatch:
   * a run where the probe agrees proves the two passes did not actually
   * differ in layout and the 38 green matches would be vacuous.
+  *
+  * Usage: `runMain graft.Determinism <sfDir> <out.json> [lane,...]`; a
+  * named subset skips the probe.
   */
 object Determinism {
 
@@ -51,32 +54,28 @@ object Determinism {
     (agg.getLong(0), agg.getDecimal(1))
   }
 
+  /** The rows-only lanes named in `names`, or all of them when `names` is
+    * empty. Refuses unknown names and oracle-pinned ones: either would
+    * drop out of the sweep and let a plain diff of two dumps pass on
+    * nothing. */
+  def lanes(names: Seq[String]): Seq[graft.queries.Q] = {
+    val (rowsOnly, pinned) = SparkEntry.select(names).partition(_.oracle.isEmpty)
+    require(names.isEmpty || pinned.isEmpty,
+      s"oracle-pinned, not rows-only lanes: ${pinned.map(_.name).mkString(", ")}")
+    rowsOnly
+  }
+
   def main(args: Array[String]): Unit = {
     val (sfDir, outPath) = (args(0), args(1))
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(',').map(_.trim).toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-    val builder2 = sys.env.get("SPARK_GRAFT_MAX_PARTITION_BYTES")
-      .map(b => builder.config("spark.sql.files.maxPartitionBytes", b))
-      .getOrElse(builder)
-    val spark = (if (master.startsWith("local-cluster")) {
-      val b = builder2.config("spark.executor.memory",
-        sys.env.getOrElse("SPARK_GRAFT_EXEC_MEM", "20g"))
-      sys.env.get("SPARK_GRAFT_APP_JAR").map(j => b.config("spark.jars", j))
-        .getOrElse(b)
-    } else builder2).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val names = if (args.length > 2) args(2).split(',').map(_.trim).toSeq else Nil
+    val rowsOnly = lanes(names)
+    // The second pass perturbs the layout: a different shuffle fan-out
+    // and smaller file splits.
+    val spark = Session.build(4,
+      sys.env.get("SPARK_GRAFT_SHUFFLE").map("spark.sql.shuffle.partitions" -> _).toSeq ++
+        sys.env.get("SPARK_GRAFT_MAX_PARTITION_BYTES")
+          .map("spark.sql.files.maxPartitionBytes" -> _): _*)
 
-    val rowsOnly = SparkEntry.registry.filter(_.oracle.isEmpty)
-      .filter(q => only.forall(_.contains(q.name)))
     val results = scala.collection.mutable.LinkedHashMap[String, String]()
     rowsOnly.foreach { q =>
       try {
@@ -88,7 +87,7 @@ object Determinism {
       }
       spark.sharedState.cacheManager.clearCache()
     }
-    if (only.isEmpty) {
+    if (names.isEmpty) {
       // layout probe: sensitive to BOTH the file-split layout
       // (monotonically_increasing_id encodes the input partition) and the
       // shuffle fan-out (spark_partition_id after a keyed aggregation

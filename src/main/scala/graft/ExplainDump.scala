@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump `.explain("formatted")` for the named queries into
   * `<outDir>/<query>_<tag>.txt` — the plan-evidence artifacts the
   * optimization rounds commit under plans/rNN/. Not part of the driver
@@ -15,23 +13,10 @@ object ExplainDump {
   def main(args: Array[String]): Unit = {
     require(args.length >= 4, "usage: ExplainDump <sfDir> <outDir> <tag> <query>...")
     val sfDir = args(0); val outDir = args(1); val tag = args(2)
-    val names = args.drop(3).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val names = args.drop(3).toSeq
+    val picked = SparkEntry.select(if (names == Seq("all")) Nil else names)
+    val spark = Session.build(4)
     new java.io.File(outDir).mkdirs()
-    val picked =
-      if (names == Set("all")) SparkEntry.registry
-      else SparkEntry.registry.filter(q => names.contains(q.name))
-    val missing = if (names == Set("all")) Set.empty[String]
-                  else names -- picked.map(_.name).toSet
-    require(missing.isEmpty, s"unknown queries: ${missing.mkString(", ")}")
     picked.foreach { q =>
       // queryExecution.explainString builds the physical plan without
       // running the query — index/write side effects inside q.run still

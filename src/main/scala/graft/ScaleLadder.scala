@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.queries.Q
 
 /** Scale-ladder evidence tools (SURVEY §5): derive a deterministic N×
   * corpus from the sf0.1 tables and measure the heavy dedup/ANN family's
@@ -123,158 +124,366 @@ object ScaleCorpus {
 
     done.createNewFile(): Unit
   }
+
+  /** The corpus directory at `factor`×: `srcDir` itself at ×1, else the
+    * derived copy under java.io.tmpdir/graft-scale (derived on first use). */
+  def at(spark: SparkSession, srcDir: String, factor: Int): String =
+    if (factor == 1) srcDir
+    else {
+      val d = new java.io.File(System.getProperty("java.io.tmpdir"), s"graft-scale/x$factor")
+        .getAbsolutePath
+      derive(spark, srcDir, d, factor)
+      d
+    }
 }
 
-/** Ladder runner: `runMain graft.ScaleLadder [query ...]`.
+/** Scale-ladder evidence main: `runMain graft.ScaleLadder [mode]`, where the
+  * first argument picks the mode:
   *
-  * For each factor in SPARK_GRAFT_LADDER_FACTORS (default 1,4,16,64) and
-  * each query, runs warm-up + min-of-SPARK_GRAFT_BENCH_ITERS (default 2)
-  * with Bench's materialization discipline, then fits the growth exponent
-  * b of t = a·f^b by least squares on (ln f, ln t) over factors ≥ 4 (the
-  * ×1 point is dominated by fixed plan/JVM overhead that would bias b
-  * DOWN; with it excluded, b is the marginal data-growth exponent — the
-  * number that predicts 100× behavior). A query whose run exceeds
-  * SPARK_GRAFT_LADDER_CUTOFF seconds (default 180) is not advanced to the
-  * next factor — reported as `truncated` rather than hanging the ladder;
-  * a query that THROWS is reported with its exception under `failed`
-  * (never as truncated — a crash is not a deliberate cutoff).
-  * Writes scaling_detail.json (override: SPARK_GRAFT_LADDER_OUT) for
-  * SCALING.md.
+  *  - `[query ...]` (default: the heavy dedup/ANN family) — the growth
+  *    ladder. For each factor in SPARK_GRAFT_LADDER_FACTORS (default
+  *    1,4,16,64) and each query, time warm-up + min of
+  *    SPARK_GRAFT_BENCH_ITERS (default 2) on the [[ScaleCorpus]] at that
+  *    factor, then fit the growth exponent ([[exponent]]). A query whose
+  *    run exceeds SPARK_GRAFT_LADDER_CUTOFF seconds (default 180) is not
+  *    advanced to the next factor — reported as `truncated` rather than
+  *    hanging the ladder; a query that THROWS is reported with its
+  *    exception under `failed` (never as truncated — a crash is not a
+  *    deliberate cutoff). Writes scaling_detail.json.
+  *  - `probe:skew [factor]` (default 16) — planted hot join key under
+  *    AQE skew-join on/off and a salted join ([[skewProbe]]). Writes
+  *    skew_detail.json.
+  *  - `probe:minhash [factor]` (default 64) — boilerplate mega-cluster
+  *    through the MinHash band join ([[minhashProbe]]). Writes
+  *    skew_minhash.json.
+  *  - `probe:pagerank [edgesBase]` (default 200000) — PageRank on
+  *    synthetic graphs laddered like the queries ([[pagerank]]). Writes
+  *    scaling_r11_pagerank.json.
+  *
+  * SPARK_GRAFT_LADDER_OUT overrides the artifact path of every mode. All
+  * modes run on one [[Session]] (default `local[16]`), time with
+  * [[Bench.warmMin]] and stamp the artifact with [[Bench.weather]].
   *
   * Distributed mode: SPARK_GRAFT_MASTER=local-cluster[2,8,24576] runs
-  * the same ladder against REAL executor JVMs — serialized task
-  * closures, network shuffle exchange, and broadcast transport instead
-  * of in-process references — the one execution-path class a local[n]
-  * run cannot price. Requires SPARK_GRAFT_APP_JAR (the `sbt package`
-  * jar) so executors load the query classes; executor memory via
-  * SPARK_GRAFT_EXEC_MEM (default 20g per worker).
+  * the same modes against REAL executor JVMs — serialized task closures,
+  * network shuffle exchange, and broadcast transport instead of
+  * in-process references — the one execution-path class a local[n] run
+  * cannot price (see [[Session]] for the jar and executor memory).
   */
 object ScaleLadder {
+  import Bench.{num, obj, str}
+
   def main(args: Array[String]): Unit = {
     val srcDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "2").toInt
+    def arg[T](default: T)(parse: String => T): T = args.lift(1).fold(default)(parse)
+    // Sandbox-proportional skew thresholds: the hot partitions here are
+    // tens of MB, production defaults trigger at 256 MB (a 100 TB hot
+    // key exceeds that by 3+ orders of magnitude). The probes show the
+    // MECHANISM at proportional size, not the absolute default.
+    val skewConfs = Seq(
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" ->
+        sys.env.getOrElse("SPARK_GRAFT_SKEW_THRESHOLD", "8m"),
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" ->
+        sys.env.getOrElse("SPARK_GRAFT_SKEW_ADVISORY", "8m"))
+    val (file, confs, measure) = args.headOption match {
+      case Some("probe:skew") =>
+        // Force the shuffled-join path: a 21-row dim would broadcast and
+        // hide the skewed exchange the probe exists to exercise.
+        ("skew_detail.json", skewConfs ++ Seq(
+          "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+          "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1"),
+          skewProbe(_: SparkSession, srcDir, arg(16)(_.toInt)))
+      case Some("probe:minhash") =>
+        ("skew_minhash.json", skewConfs, minhashProbe(_: SparkSession, srcDir, arg(64)(_.toInt)))
+      case Some("probe:pagerank") =>
+        ("scaling_r11_pagerank.json", Nil, pagerank(_: SparkSession, arg(200000L)(_.toLong)))
+      case _ =>
+        val queries = SparkEntry.select(if (args.nonEmpty) args.toSeq else Seq(
+          "dedup_minhash", "dedup_components", "dedup_spans", "dedup_jaccard",
+          "ann_ivfpq", "ann_ivfpq_rerank", "llm_curation_full", "text_tfidf"))
+        ("scaling_detail.json", Nil, ladder(_: SparkSession, srcDir, queries))
+    }
+    val spark = Session.build(16, confs: _*)
+    val json = measure(spark)
+    println(json)
+    Bench.write(sys.env.getOrElse("SPARK_GRAFT_LADDER_OUT", file), json)
+    spark.stop()
+  }
+
+  private def factors: Seq[Int] = sys.env.getOrElse("SPARK_GRAFT_LADDER_FACTORS", "1,4,16,64")
+    .split(",").map(_.trim.toInt).toSeq
+
+  private def iters: Int = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "2").toInt
+
+  /** Growth exponent b of t = a·f^b: least squares on (ln f, ln t) over
+    * factors ≥ 4 (the ×1 point is dominated by fixed plan/JVM overhead
+    * that would bias b DOWN; with it excluded, b is the marginal
+    * data-growth exponent — the number that predicts 100× behavior).
+    * NaN below two points. */
+  def exponent(points: Seq[(Int, Double)]): Double = {
+    val fit = points.filter(_._1 >= 4).map { case (f, t) => (math.log(f), math.log(t)) }
+    if (fit.size < 2) Double.NaN
+    else {
+      val mx = fit.map(_._1).sum / fit.size
+      val my = fit.map(_._2).sum / fit.size
+      fit.map { case (x, y) => (x - mx) * (y - my) }.sum /
+        fit.map { case (x, _) => (x - mx) * (x - mx) }.sum
+    }
+  }
+
+  /** Time each name at each factor, factor-major so each factor's input
+    * is prepared once (`at(f)` returns the frame builder for a name).
+    * Returns per name the JSON fields `times`, `exponent`, `truncated`
+    * (stopped advancing because slow) and `failed` (broke). */
+  private def climb(spark: SparkSession, names: Seq[String])(
+      at: Int => String => DataFrame): Seq[(String, Seq[(String, String)])] = {
     val cutoff = sys.env.getOrElse("SPARK_GRAFT_LADDER_CUTOFF", "180").toDouble
-    val factors = sys.env.getOrElse("SPARK_GRAFT_LADDER_FACTORS", "1,4,16,64")
-      .split(",").map(_.trim.toInt).toSeq
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val outFile = sys.env.getOrElse("SPARK_GRAFT_LADDER_OUT", "scaling_detail.json")
-    val defaultQueries = Seq(
-      "dedup_minhash", "dedup_components", "dedup_spans", "dedup_jaccard",
-      "ann_ivfpq", "ann_ivfpq_rerank", "llm_curation_full", "text_tfidf")
-    val names = if (args.nonEmpty) args.toSeq else defaultQueries
-
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-    val spark = (if (master.startsWith("local-cluster")) {
-      val b = builder
-        .config("spark.executor.memory",
-          sys.env.getOrElse("SPARK_GRAFT_EXEC_MEM", "20g"))
-      // Ship the application jar to the executor JVMs — the point of
-      // the distributed rung is that NOTHING rides in-process references.
-      sys.env.get("SPARK_GRAFT_APP_JAR").map(j => b.config("spark.jars", j))
-        .getOrElse(b)
-    } else builder).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    val byName = SparkEntry.registry.map(q => q.name -> q).toMap
-    val queries = names.map(n => byName.getOrElse(n, sys.error(s"unknown query '$n'")))
-
-    val base = new java.io.File(System.getProperty("java.io.tmpdir"), "graft-scale")
-    def dirFor(f: Int): String =
-      if (f == 1) srcDir
-      else {
-        val d = new java.io.File(base, s"x$f").getAbsolutePath
-        ScaleCorpus.derive(spark, srcDir, d, f)
-        d
-      }
-
-    // (query, factor) -> seconds; LinkedHashMap keeps report order stable.
     val times = scala.collection.mutable.LinkedHashMap[(String, Int), Double]()
     val alive = scala.collection.mutable.Set[String](names: _*)
-    // A crash is NOT a deliberate cutoff: record the exception per query
-    // so the artifact distinguishes "stopped advancing because slow"
-    // (truncated) from "broke" (failed) — a reader of scaling_detail.json
-    // must not mistake one for the other.
     val failed = scala.collection.mutable.LinkedHashMap[String, String]()
-
     factors.foreach { f =>
       if (alive.nonEmpty) {
-        val dir = dirFor(f)
-        println(s"[ladder] factor x$f dir=$dir queries=${alive.size}")
-        queries.filter(q => alive(q.name)).foreach { q =>
-          def once(): Double = {
-            // same between-sample cache clear as Bench: queries with an
-            // in-plan persist must pay their full cost every sample, or
-            // the ladder fits an exponent on warm-cache reads
-            spark.sharedState.cacheManager.clearCache()
-            val t0 = System.nanoTime()
-            q.run(spark, dir).queryExecution.toRdd.count(): Unit
-            (System.nanoTime() - t0) / 1e9
-          }
+        val frame = at(f)
+        names.filter(alive).foreach { n =>
           try {
-            val w = once() // warm-up
-            System.gc()
-            val t = if (w > cutoff) w else (1 to iters).map(_ => once()).min
-            times((q.name, f)) = t
-            println(f"[ladder] ${q.name}%-22s x$f%-3d ${t}%8.2f s")
+            val t = Bench.warmMin(spark, iters, cutoff)(frame(n)).best.sec
+            times((n, f)) = t
+            println(f"[ladder] $n%-22s x$f%-3d $t%8.2f s")
             if (t > cutoff) {
-              alive -= q.name
-              println(s"[ladder] ${q.name} exceeded cutoff ${cutoff}s — not advancing")
+              alive -= n
+              println(s"[ladder] $n exceeded cutoff ${cutoff}s — not advancing")
             }
           } catch {
             case e: Throwable =>
-              alive -= q.name
-              failed(q.name) =
-                s"x$f: ${e.getClass.getSimpleName}: ${e.getMessage}"
-              println(s"[ladder] ${q.name} FAILED at x$f: ${e.getClass.getSimpleName}: ${e.getMessage}")
+              alive -= n
+              failed(n) = s"x$f: ${e.getClass.getSimpleName}: ${e.getMessage}"
+              println(s"[ladder] $n FAILED at ${failed(n)}")
           }
         }
       }
     }
+    names.map { n =>
+      val pts = factors.flatMap(f => times.get((n, f)).map(f -> _))
+      n -> Seq(
+        "times" -> obj(pts.map { case (f, t) => s"x$f" -> num(t) }: _*),
+        "exponent" -> num(exponent(pts)),
+        "truncated" -> (!alive(n) && !failed.contains(n)).toString,
+        "failed" -> failed.get(n).fold("null")(str))
+    }
+  }
 
-    // Exponent fit on factors >= 4 (see scaladoc).
-    def fmt(v: Double) = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val report = names.map { n =>
-      val pts = factors.flatMap(f => times.get((n, f)).map(t => (f, t)))
-      val fit = pts.filter(_._1 >= 4).map { case (f, t) => (math.log(f), math.log(t)) }
-      val b =
-        if (fit.size < 2) Double.NaN
-        else {
-          val mx = fit.map(_._1).sum / fit.size
-          val my = fit.map(_._2).sum / fit.size
-          fit.map { case (x, y) => (x - mx) * (y - my) }.sum /
-            fit.map { case (x, _) => (x - mx) * (x - mx) }.sum
-        }
-      val ptsJson = pts.map { case (f, t) => s""""x$f":${fmt(t)}""" }.mkString("{", ",", "}")
-      val bJson = if (b.isNaN) "null" else fmt(b)
-      def esc(s: String): String = s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      }
-      val failJson = failed.get(n)
-        .map(m => "\"" + esc(m) + "\"").getOrElse("null")
-      // truncated = stopped advancing because SLOW; failed = broke
-      val trunc = !alive(n) && !failed.contains(n)
-      s""""$n":{"times":$ptsJson,"exponent":$bJson,"truncated":$trunc,"failed":$failJson}"""
-    }.mkString("{", ",", "}")
+  private def ladder(spark: SparkSession, srcDir: String, queries: Seq[Q]): String = {
+    val byName = queries.map(q => q.name -> q).toMap
+    val rows = climb(spark, queries.map(_.name)) { f =>
+      val dir = ScaleCorpus.at(spark, srcDir, f)
+      println(s"[ladder] factor x$f dir=$dir")
+      n => byName(n).run(spark, dir)
+    }
+    obj("metric" -> str("scaling"), "master" -> str(spark.sparkContext.master),
+      "cpus" -> Session.cpus(16), "iters" -> iters.toString,
+      "factors" -> str(factors.mkString(",")), "load" -> Bench.weather(),
+      "queries" -> obj(rows.map { case (n, fields) => n -> obj(fields: _*) }: _*),
+      "src" -> str(srcDir))
+  }
 
-    val loadFp: String = try {
-      val src = scala.io.Source.fromFile("/proc/loadavg")
-      val parts = try src.mkString.trim.split("\\s+") finally src.close()
-      s""""load":{"l1":${parts(0)},"l5":${parts(1)},"l15":${parts(2)}}"""
-    } catch { case _: Exception => s""""load":{}""" }
-    val line =
-      s"""{"metric":"scaling","master":"$master","cpus":$cpus,"iters":$iters,"factors":"${factors.mkString(",")}",$loadFp,"queries":$report,"src":"$srcDir"}"""
-    println(line)
-    val w = new java.io.PrintWriter(outFile, "UTF-8")
-    try w.println(line) finally w.close()
-    spark.stop()
+  /** PageRank scale rung (SCALING.md "PageRank rung"): the ladder corpus
+    * can't exercise [[graft.graph.PageRank]] — the registered queries walk
+    * the driver-owned TPC-H purchase graph, which the ladder doesn't
+    * derive — so this mode ladders the operator on DETERMINISTIC
+    * synthetic graphs: at factor f, edge e of E = edgesBase·f has
+    * src = e mod N, dst = Knuth-scatter(e) mod N, N = max(E/10, 100) (a
+    * random-ish directed graph with mild in-degree skew — the shape, not
+    * the data, is what the rung measures). 3 iterations, the registered
+    * queries' configuration.
+    *
+    * What the exponent proves: per-iteration cost is one edge×rank join +
+    * one edge-sized map-side-combined aggregation + a node-frame
+    * checkpoint — all linear structures; a super-linear exponent would
+    * mean the iteration loop re-executes prior rounds (the lineage-
+    * truncation failure this operator's checkpoint discipline exists to
+    * prevent). */
+  private def pagerank(spark: SparkSession, base: Long): String = {
+    val (knuth, prime) = (2654435761L, 999999937L)
+    val rows = climb(spark, Seq("pagerank")) { f => _ =>
+      val edges = base * f
+      val nodes = math.max(edges / 10, 100L)
+      val e = spark.range(edges).select(
+        pmod(col("id"), lit(nodes)).as("src"),
+        pmod(pmod(col("id") * knuth, lit(prime)), lit(nodes)).as("dst"))
+      graft.graph.PageRank.ranks(e, "src", "dst", iterations = 3)
+    }
+    obj(Seq("metric" -> str("pagerank_ladder"), "edges_base" -> base.toString,
+      "iterations" -> "3", "load" -> Bench.weather()) ++ rows.head._2: _*)
+  }
+
+  /** Planted-skew evidence probe (SCALING.md "Skew rung"): rewrite the ×N
+    * corpus's `source` so ONE join key holds ~90% of the fact rows (the
+    * power-law hot key of a real crawl), and drive the same sort-merge
+    * join three ways:
+    *
+    *   A. AQE skew-join ON (the default posture) — expect
+    *      OptimizeSkewedJoin to split the hot partition (plan shows
+    *      `skew=true`), so no reducer owns 90% of the corpus;
+    *   B. AQE skew-join OFF — the counterfactual straggler: the hot key
+    *      serializes through one task;
+    *   C. skew-join OFF + [[graft.ops.Skew.saltedJoin]] (factor 8) — the
+    *      explicit fallback for plans AQE can't re-split.
+    *
+    * Meant for the distributed master (local-cluster[2,8,24576]). Each
+    * mode is warm-up + min of 2. */
+  private def skewProbe(spark: SparkSession, srcDir: String, factor: Int): String = {
+    val dir = ScaleCorpus.at(spark, srcDir, factor)
+
+    // The skewed fact: ~90% of documents share one source key — the
+    // boilerplate/hot-domain shape of a real crawl. Deterministic (id
+    // mod), so every mode joins the identical frame.
+    def fact: DataFrame = spark.read.parquet(s"$dir/documents.parquet")
+      .select(col("doc_id"),
+        when(pmod(col("doc_id"), lit(10)) < 9, lit("src_hot"))
+          .otherwise(col("source")).as("source"),
+        col("text"))
+    // Dimension: one weight row per source (dimension-sized, but the
+    // probe forbids broadcasting it — see the session confs). MATERIALIZED
+    // as a local relation, deliberately: OptimizeSkewedJoin pattern-matches
+    // SMJ(Sort(Shuffle), Sort(Shuffle)) — a dim arriving through its own
+    // aggregation (e.g. a distinct() kept lazy in the plan) interposes a
+    // HashAggregate between the Sort and the shuffle stage and silently
+    // DISABLES the skew rule (measured here first-hand; that failure
+    // mode is exactly when the salted fallback earns its keep).
+    lazy val dim: DataFrame = {
+      val sources = fact.select(col("source")).distinct()
+        .collect().map(_.getString(0)).sorted.toSeq // bounded: one row per source
+      import spark.implicits._
+      sources.map(s => (s, s.length.toDouble / 10.0)).toDF("source", "w")
+    }
+
+    // GLOBAL aggregate downstream, deliberately: a groupBy on the JOIN
+    // key would inherit the join's hash partitioning, and AQE refuses to
+    // split a skewed join whose output distribution a downstream
+    // operator relies on — the split would break key co-location. A
+    // global agg partial-aggregates per partition, so the join output
+    // has no required distribution and the skew rule is free to act
+    // (exactly the shape of a scoring/filter pass over a joined corpus).
+    def run(label: String, skewJoin: Boolean, salted: Boolean): Bench.Run = {
+      spark.conf.set("spark.sql.adaptive.skewJoin.enabled", skewJoin.toString)
+      val best = Bench.warmMin(spark, 2) {
+        val joined =
+          if (salted) graft.ops.Skew.saltedJoin(fact, dim, "source",
+            factor = 8, seedCols = Seq(col("doc_id")))
+          else fact.join(dim, Seq("source"))
+        joined.agg(count(lit(1)).as("n"),
+          sum(crc32(col("text")).cast("double") * col("w")).as("weighted"))
+      }.best
+      println(f"[skew] $label%-28s ${best.sec}%8.2f s rows=${best.rows}")
+      best
+    }
+
+    val hot = fact.groupBy("source").count().orderBy(col("count").desc)
+      .limit(1).collect()(0)
+    val total = fact.count()
+    println(s"[skew] corpus x$factor: $total rows, hot key '${hot.getString(0)}' " +
+      f"holds ${hot.getLong(1)} (${100.0 * hot.getLong(1) / total}%.1f%%)")
+
+    val aqe = run("A: AQE skew-join ON", skewJoin = true, salted = false)
+    val straggler = run("B: skew-join OFF", skewJoin = false, salted = false)
+    val saltRun = run("C: OFF + saltedJoin(8)", skewJoin = false, salted = true)
+
+    // Keep only the join lines of the plans — the artifact wants the
+    // decision, not 200 lines of scan detail.
+    def joinLines(r: Bench.Run): String = r.df.queryExecution.executedPlan.toString
+      .linesIterator
+      .filter(l => l.contains("SortMergeJoin") || l.contains("ShuffledHashJoin")
+        || l.contains("AQEShuffleRead"))
+      .map(_.trim).mkString(" | ")
+    val aqeSplit = aqe.df.queryExecution.executedPlan.toString.contains("skew=true")
+    println(s"[skew] AQE split observed in executed plan: $aqeSplit")
+    obj("metric" -> str("skew_probe"), "master" -> str(spark.sparkContext.master),
+      "factor" -> factor.toString, "rows" -> total.toString,
+      "hot_share" -> num(hot.getLong(1).toDouble / total, 2),
+      "threshold" -> str(sys.env.getOrElse("SPARK_GRAFT_SKEW_THRESHOLD", "8m")),
+      "load" -> Bench.weather(),
+      "aqe_on_sec" -> num(aqe.sec, 2), "aqe_split_observed" -> aqeSplit.toString,
+      "skew_off_sec" -> num(straggler.sec, 2), "salted_sec" -> num(saltRun.sec, 2),
+      "aqe_plan" -> str(joinLines(aqe)), "off_plan" -> str(joinLines(straggler)),
+      "salted_plan" -> str(joinLines(saltRun)))
+  }
+
+  /** Skew rung for the engine's heaviest real exchange — the MinHash LSH
+    * band self-join (SCALING.md "MinHash mega-cluster rung").
+    *
+    * The planted shape: a boilerplate mega-cluster — SPARK_GRAFT_MH_HOT
+    * (default 0.01) of all documents rewritten to ONE identical text
+    * (site chrome, license headers, templated pages; every real crawl has
+    * this). Identical text → identical 64-lane signature → the same band
+    * hash in EVERY band, so the candidate self-join's hot bucket emits
+    * bands·m·(m−1)/2 pairs. This is the skew class AQE cannot repair:
+    * OptimizeSkewedJoin splits a hot PARTITION across tasks, but the
+    * quadratic OUTPUT still has to be produced, shuffled to the distinct,
+    * and estimated (m = 10⁸ at 100 TB → 10¹⁶ candidate pairs — unrunnable
+    * no matter how it is split).
+    *
+    * Two modes over the SAME derived ×factor corpus, each warm-up + one
+    * timed run:
+    *
+    *   A. collapsed — [[graft.dedup.MinHash.dedup]] as shipped: identical
+    *      signatures collapse to their min-id representative through one
+    *      skew-robust aggregation (map-side partial combine), so the
+    *      mega-cluster enters the band join as ONE row;
+    *   B. pair-derived — the pre-collapse counterfactual (losers read off
+    *      the full [[graft.dedup.MinHash.nearDuplicatePairs]] list), which
+    *      pays the quadratic bucket.
+    *
+    * The probe asserts both modes keep the SAME document set (the collapse
+    * is an optimization, not a semantics change), times both, records the
+    * hot-bucket arithmetic, and checks whether AQE flagged the band join
+    * skewed in mode B (it typically does — and it still cannot help). */
+  private def minhashProbe(spark: SparkSession, srcDir: String, factor: Int): String = {
+    val hotShare = sys.env.getOrElse("SPARK_GRAFT_MH_HOT", "0.01").toDouble
+    val dir = ScaleCorpus.at(spark, srcDir, factor)
+
+    // One fixed boilerplate text — long enough that shingling is real
+    // work, identical across ladder copies (the rewrite happens AFTER the
+    // copy-suffixing, so the cluster genuinely spans the whole corpus).
+    val boiler = (1 to 60).map(i => s"boilerplate_token_$i").mkString(" ")
+    val mod = 1000000L
+    val cut = (hotShare * mod).toLong
+    def corpus: DataFrame = spark.read.parquet(s"$dir/documents.parquet")
+      .select(col("doc_id"),
+        when(pmod(col("doc_id") * lit(2654435761L) % lit(999999937L), lit(mod)) < cut,
+          lit(boiler)).otherwise(col("text")).as("text"))
+
+    val total = corpus.count()
+    val m = corpus.filter(col("text") === boiler).count()
+    val bands = 16
+    val hotPairs = bands.toLong * m * (m - 1) / 2
+    println(s"[mh-skew] corpus x$factor: $total docs, mega-cluster m=$m " +
+      s"(${100.0 * m / total}%), hot-bucket candidates = $hotPairs")
+
+    def timed(label: String)(frame: => DataFrame): Bench.Run = {
+      val r = Bench.warmMin(spark, 1)(frame).best
+      println(f"[mh-skew] $label%-14s ${r.sec}%8.2f s kept=${r.rows}")
+      r
+    }
+    val a = timed("A collapsed") {
+      graft.dedup.MinHash.dedup(corpus, "text", "doc_id", threshold = 0.7)
+    }
+    // the exact formulation dedup used before the collapse
+    val b = timed("B pair-derived") {
+      val c = corpus
+      val losers = graft.dedup.MinHash
+        .nearDuplicatePairs(c, "text", "doc_id", threshold = 0.7)
+        .select(col("id_b").as("_gf_loser")).distinct()
+      c.join(losers, c("doc_id") === col("_gf_loser"), "left_anti")
+    }
+    require(a.rows == b.rows,
+      s"collapse changed the kept set: ${a.rows} vs ${b.rows} — the modes must agree")
+    val aqeSplit = b.df.queryExecution.executedPlan.toString.contains("skew=true")
+    println(s"[mh-skew] AQE flagged the band join skewed in mode B: $aqeSplit")
+    obj("metric" -> str("minhash_skew_probe"), "master" -> str(spark.sparkContext.master),
+      "factor" -> factor.toString, "docs" -> total.toString, "cluster_m" -> m.toString,
+      "hot_share" -> num(m.toDouble / total, 2), "hot_bucket_candidates" -> hotPairs.toString,
+      "load" -> Bench.weather(),
+      "collapsed_sec" -> num(a.sec, 2), "pair_derived_sec" -> num(b.sec, 2),
+      "kept" -> a.rows.toString, "kept_equal" -> "true", "aqe_split_observed_b" -> aqeSplit.toString)
   }
 }

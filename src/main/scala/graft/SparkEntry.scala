@@ -15,6 +15,21 @@ object SparkEntry {
       CorpusQueries.all ++ MixtureQueries.all ++ EvalQueries.all ++
       GraphQueries.all
 
+  /** The registered queries named in `names`, in the given order, or the
+    * whole registry when `names` is empty. Refuses names that are not
+    * registered, listing each: a typo must not select nothing and then
+    * compare as an identical, empty result. */
+  def select(names: Seq[String]): Seq[Q] = {
+    val regs = registry
+    if (names.isEmpty) regs
+    else {
+      val byName = regs.map(q => q.name -> q).toMap
+      val unknown = names.filterNot(byName.contains)
+      require(unknown.isEmpty, s"unknown query names: ${unknown.mkString(", ")}")
+      names.distinct.map(byName)
+    }
+  }
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("q1_agg")(spark, "/root/testdata/sf0.001")

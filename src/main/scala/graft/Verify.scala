@@ -1,64 +1,30 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Driver-run correctness dump: each registered query's result → parquet,
+  * plus oracle_sql.json, for the driver's DuckDB compare.
+  * Usage: `runMain graft.Verify <sfDir> <outDir> [q1,q2,...]`; the optional
+  * comma-separated name list narrows a local gate run (the driver always
+  * passes two args → full registry). SPARK_GRAFT_MASTER=local-cluster[...]
+  * runs the gate under real executor JVMs (see [[Session]]). */
 object Verify {
   def main(args: Array[String]): Unit = {
-    // Optional third arg: comma-separated query-name filter for targeted
-    // local gate runs (the driver always passes two args → full registry).
     val (sfDir, outDir) = (args(0), args(1))
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(',').map(_.trim).toSet) else None
-    def selected(name: String): Boolean = only.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_MASTER=local-cluster[...] runs the whole gate under
-    // real executor JVMs (serialized closures, network shuffle) — the
-    // distributed-mode CORRECTNESS drive; see ScaleLadder for the
-    // matching perf rung. Requires SPARK_GRAFT_APP_JAR + SPARK_SCALA_VERSION.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // The synthetic parquet stamps timestamps isAdjustedToUTC=false;
-      // read them as TIMESTAMP (not TIMESTAMP_NTZ) so µs arithmetic
-      // (unix_micros) and the UTC-pinned DuckDB compare see the same
-      // values as an adjusted-to-UTC file would.
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-    val spark = (if (master.startsWith("local-cluster")) {
-      val b = builder.config("spark.executor.memory",
-        sys.env.getOrElse("SPARK_GRAFT_EXEC_MEM", "20g"))
-      sys.env.get("SPARK_GRAFT_APP_JAR").map(j => b.config("spark.jars", j))
-        .getOrElse(b)
-    } else builder).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val queries = SparkEntry.select(
+      if (args.length > 2) args(2).split(',').map(_.trim).toSeq else Nil)
+    val spark = Session.build(4)
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    queries.foreach { q =>
+      try q.run(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${q.name}")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] ${q.name} failed: ${e.getMessage}")
       }
       // index/LM builders cache per invocation; queries share no cached
       // state, so dropping it between queries bounds storage memory
       spark.sharedState.cacheManager.clearCache()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql.filter(kv => selected(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = queries.flatMap(q => q.oracle.map(o => s"${Bench.str(q.name)}: ${Bench.str(o)}"))
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

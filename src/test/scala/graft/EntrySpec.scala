@@ -1,5 +1,10 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+
+import graft.queries.Q
+
 class EntrySpec extends SparkSpec {
 
   test("entry returns rows") {
@@ -45,5 +50,71 @@ class EntrySpec extends SparkSpec {
   test("oracle keys are a subset of query keys") {
     val qs = SparkEntry.queries.keySet
     assert(SparkEntry.oracleSql.keySet.subsetOf(qs))
+  }
+
+  test("select refuses names that are not registered, listing each") {
+    val regs = SparkEntry.registry
+    assert(SparkEntry.select(Nil).map(_.name) == regs.map(_.name))
+    val two = Seq(regs(3).name, regs(1).name)
+    assert(SparkEntry.select(two :+ two.head).map(_.name) == two)
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.select(Seq(regs.head.name, "dedup_minhsh", "typo_name")))
+    assert(e.getMessage.contains("dedup_minhsh, typo_name"))
+  }
+
+  test("determinism lanes refuse unknown and oracle-pinned names") {
+    val (rowsOnly, pinned) = SparkEntry.registry.partition(_.oracle.isEmpty)
+    assert(Determinism.lanes(Nil) == rowsOnly)
+    assert(Determinism.lanes(Seq(rowsOnly.head.name)) == Seq(rowsOnly.head))
+    val unknown = intercept[IllegalArgumentException](Determinism.lanes(Seq("dedup_minhsh")))
+    assert(unknown.getMessage.contains("dedup_minhsh"))
+    val oracle = intercept[IllegalArgumentException](
+      Determinism.lanes(Seq(rowsOnly.head.name, pinned.head.name)))
+    assert(oracle.getMessage.contains(pinned.head.name))
+  }
+
+  test("bench reports a failed query and a cache leak by name") {
+    val ok = Q("ok", (s, _) => s.range(3).toDF("id"), None)
+    val boom = Q("boom", (_, _) => throw new IllegalStateException("planted"), None)
+    val leaky = Q("leaky", (s, _) => s.range(4).toDF("id").persist(), None)
+    val rows = Seq(ok, boom, leaky).map(Bench.row(spark, _, sfDir, iters = 1))
+    assert(rows.map(r => r.name -> (r.error, r.leaked)) == Seq(
+      "ok" -> (None, false),
+      "boom" -> (Some("java.lang.IllegalStateException"), false),
+      "leaky" -> (None, true)))
+    assert(rows.head.min >= 0 && rows(1).min == -1 && rows(1).n == 0)
+    assert(Bench.outcomes(rows) ==
+      """"failed":{"boom":"java.lang.IllegalStateException"},"leaked":["leaky"]""")
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
+  test("artifact numbers ignore a comma-decimal default locale") {
+    val (saved, savedFormat) =
+      (java.util.Locale.getDefault, java.util.Locale.getDefault(java.util.Locale.Category.FORMAT))
+    try {
+      java.util.Locale.setDefault(java.util.Locale.forLanguageTag("de-DE"))
+      assert(f"${0.123}%.3f" == "0,123") // the locale does bite
+      assert(Bench.num(0.123) == "0.123")
+    } finally {
+      java.util.Locale.setDefault(saved)
+      java.util.Locale.setDefault(java.util.Locale.Category.FORMAT, savedFormat)
+    }
+  }
+
+  test("one session factory and five mains in src/main") {
+    val walk = Files.walk(Paths.get("src/main/scala"))
+    val files: Seq[Path] =
+      try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    val builders = files.filter(f => Files.readString(f).contains("SparkSession.builder"))
+    assert(builders.map(_.getFileName.toString) == Seq("Session.scala"))
+    val mains = files.flatMap { f =>
+      var obj = ""
+      Files.readAllLines(f).asScala.flatMap { l =>
+        if (l.startsWith("object ")) obj = l.split("[\\s{]+")(1)
+        if (l.contains("def main(")) Some(obj) else None
+      }
+    }
+    assert(mains.sorted == Seq("Bench", "Determinism", "ExplainDump", "ScaleLadder", "Verify"))
   }
 }
