@@ -90,10 +90,9 @@ object ScaleCorpus {
         col("label"))
     }.reduce(_ unionByName _), "embeddings")
 
-    // events.ts is parquet TIMESTAMP(NANOS); read as long (Tables.events
-    // handles either form on the way back in).
-    try spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    catch { case _: Throwable => () }
+    // events.ts is parquet TIMESTAMP(NANOS), read as a long (a
+    // Session.build default; Tables.events handles either form on the way
+    // back in).
     val ev = spark.read.parquet(s"$srcDir/events.parquet")
     assertBand(ev, "event_id", 100 * IdBand, "events")
     assertBand(ev, "user_id", IdBand, "events")

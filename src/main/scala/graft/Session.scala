@@ -17,8 +17,10 @@ import org.apache.spark.sql.SparkSession
   * `inferTimestampNTZ=false`: the test parquet stamps timestamps
   * isAdjustedToUTC=false, and reading them as TIMESTAMP (not
   * TIMESTAMP_NTZ) makes µs arithmetic and the UTC-pinned DuckDB compare
-  * see the values an adjusted-to-UTC file would give. `confs` come last
-  * and override these defaults.
+  * see the values an adjusted-to-UTC file would give. It also reads
+  * parquet TIMESTAMP(NANOS) as a long (`events.ts`, see
+  * [[Tables.events]]); this is the one place that conf is set. `confs`
+  * come last and override these defaults.
   *
   * Logs at ERROR: expected per-query WARNs (e.g. single-partition window
   * notes on distinct-value CDF scans) would otherwise flood the bounded
@@ -41,6 +43,7 @@ object Session {
       "spark.sql.shuffle.partitions" -> n,
       "spark.sql.session.timeZone" -> "UTC",
       "spark.sql.parquet.inferTimestampNTZ.enabled" -> "false",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
       "spark.ui.enabled" -> "false")
     val spark = (defaults ++ cluster ++ confs)
       .foldLeft(SparkSession.builder().master(master)) { case (b, (k, v)) => b.config(k, v) }

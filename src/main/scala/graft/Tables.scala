@@ -41,8 +41,8 @@ object Tables {
     // `embeddings` joins them in r15: its per-row work (dim-wide cosine /
     // L2 / quantize kernels, posexplode melts) is likewise orders above
     // its byte size, and the train lanes that blocked this (Ivf/IvfPq/Pq
-    // Lloyd means, Pca's moment merge + shift pick) now accumulate exact
-    // quantized longs (graft.Num.qsum/qmean), so the trained artifacts
+    // Lloyd means, Pca's moment merge + shift pick) now sum exactly
+    // (graft.Num.qsum/qmean), so the trained artifacts
     // are bit-identical under any scan layout.
     val alwaysParallel =
       name == "documents" || name == "events" || name == "embeddings"
@@ -70,14 +70,13 @@ object Tables {
   def part(spark: SparkSession, dir: String): DataFrame       = load(spark, dir, "part")
   def nation(spark: SparkSession, dir: String): DataFrame     = load(spark, dir, "nation")
   def region(spark: SparkSession, dir: String): DataFrame     = load(spark, dir, "region")
-  /** `events.ts` is parquet TIMESTAMP(NANOS) which Spark's vectorized reader
-    * rejects; read it as a long (legacy conf) and truncate ns → µs with
+  /** `events.ts` is parquet TIMESTAMP(NANOS), which Spark's reader rejects
+    * unless the session reads it as a long (a [[Session.build]] default;
+    * without it the read fails loudly). The long is truncated ns → µs with
     * INTEGER division. (`col / 1000L` would be double division: ~1.7e18 ns
     * rounds to the nearest 256 ns in an IEEE double, putting ~6% of rows
     * off by 1µs vs the oracle's native ns read.) */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    try spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    catch { case _: Throwable => () }
     val df = load(spark, dir, "events")
     if (df.schema("ts").dataType == LongType)
       df.withColumn("ts", timestamp_micros(expr("ts div 1000")))

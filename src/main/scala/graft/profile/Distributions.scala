@@ -195,25 +195,7 @@ object Distributions {
         struct(lit(a).as("col_x"), lit(b).as("col_y"),
           graft.Num.dround(corr(col(a).cast(DoubleType), col(b).cast(DoubleType)), 4).as("corr"))
       } else {
-        val exp: Map[String, Int] = {
-          val need = targets.filterNot(magExp.contains)
-          if (need.isEmpty) magExp
-          else {
-            val aggs = need.map(nm => max(abs(col(nm).cast(DoubleType))).as(nm))
-            val r = df.agg(aggs.head, aggs.tail.toIndexedSeq: _*).collect()(0)
-            magExp ++ need.map { nm =>
-              val m = Option(r.getAs[Any](nm)).map(_.asInstanceOf[Double]).getOrElse(0.0)
-              nm -> (if (m <= 0 || m.isNaN || m.isInfinite) 0
-                     else math.max(0, math.ceil(math.log10(m) - 1e-9).toInt))
-            }
-          }
-        }
-        // Quantize a product of magnitude ≤ 10^e at 10^(e-14), accumulate
-        // exactly in DECIMAL(38,0), recompose the double total.
-        def decSum(prod: Column, e: Int): Column = {
-          val m = lit(s"1e${14 - e}".toDouble)
-          sum(floor(prod * m + lit(0.5)).cast(DecimalType(38, 0))).cast(DoubleType) / m
-        }
+        val exp = Profiler.magExps(df, targets, magExp)
         def x(c: String): Column = col(c).cast(DoubleType)
         pairs.map { case (a, b) =>
           val (ea, eb) = (exp(a), exp(b))
@@ -222,10 +204,10 @@ object Distributions {
           val bothPresent = x(a).isNotNull && x(b).isNotNull
           def pres(c: Column): Column = when(bothPresent, c)
           val n = count(pres(lit(1))).cast(DoubleType)
-          val sa = decSum(pres(x(a)), ea); val sb = decSum(pres(x(b)), eb)
-          val saa = decSum(pres(x(a) * x(a)), 2 * ea)
-          val sbb = decSum(pres(x(b) * x(b)), 2 * eb)
-          val sab = decSum(pres(x(a) * x(b)), ea + eb)
+          val sa = Profiler.exactSum(pres(x(a)), ea); val sb = Profiler.exactSum(pres(x(b)), eb)
+          val saa = Profiler.exactSum(pres(x(a) * x(a)), 2 * ea)
+          val sbb = Profiler.exactSum(pres(x(b) * x(b)), 2 * eb)
+          val sab = Profiler.exactSum(pres(x(a) * x(b)), ea + eb)
           val num = n * sab - sa * sb
           val den = sqrt(greatest(n * saa - sa * sa, lit(0.0))) *
             sqrt(greatest(n * sbb - sb * sb, lit(0.0)))

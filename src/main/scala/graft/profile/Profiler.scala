@@ -60,12 +60,12 @@ object Profiler {
     * path (exact percentile holds all values of a partition in memory).
     *
     * `exactMoments=true` (default) computes mean/std/skew/kurtosis from
-    * EXACT-DECIMAL power sums (Σx, Σx², Σx³, Σx⁴ accumulated as DECIMAL of
-    * per-row deterministically-quantized powers) instead of plain double
+    * EXACT power sums (Σx, Σx², Σx³, Σx⁴ of per-row deterministically-
+    * quantized powers, summed by graft.Num.qsum) instead of plain double
     * `avg`/`skewness`: double reductions are order-dependent in the last
     * ulps, and the reduction order varies with `defaultParallelism`, so a
     * double-moment gate can flip red on a different core count when a value
-    * lands on a rounding boundary. The decimal sums are order-independent,
+    * lands on a rounding boundary. The exact sums are order-independent,
     * making the emitted 4dp stats a pure function of the data, not of the
     * partitioning.
     *
@@ -92,19 +92,7 @@ object Profiler {
     val targets =
       if (cols.nonEmpty) cols
       else numericCols(df).filterNot(groupCols.contains)
-    val derivedExp: Map[String, Int] = {
-      val need = if (exactMoments) targets.filterNot(magExp.contains) else Nil
-      if (need.isEmpty) Map.empty
-      else {
-        val aggs = need.map(nm => max(abs(col(nm).cast(DoubleType))).as(nm))
-        val r = df.agg(aggs.head, aggs.tail.toIndexedSeq: _*).collect()(0)
-        need.map { nm =>
-          val m = Option(r.getAs[Any](nm)).map(_.asInstanceOf[Double]).getOrElse(0.0)
-          nm -> (if (m <= 0 || m.isNaN || m.isInfinite) 0
-                 else math.max(0, math.ceil(math.log10(m) - 1e-9).toInt))
-        }.toMap
-      }
-    }
+    val exps = if (exactMoments) magExps(df, targets, magExp) else Map.empty[String, Int]
     val entries = targets.map { name =>
       val c = col(name).cast(DoubleType)
       val n = count(c).cast(DoubleType)
@@ -117,16 +105,10 @@ object Profiler {
       def q(i: Int): Column = element_at(qs, i)
       val (meanC, stdC, skewC, kurtC) =
         if (exactMoments) {
-          // Quantize x^k (deterministic IEEE ops, identical both engines),
-          // accumulate exactly in DECIMAL(38,0), recompose the double sum.
-          val e = magExp.getOrElse(name, derivedExp.getOrElse(name, 0))
-          def powSum(k: Int): Column = {
-            // String-parsed literal == SQL-parsed literal (math.pow is not
-            // guaranteed correctly rounded for negative exponents).
-            val m = lit(s"1e${14 - k * e}".toDouble)
-            val xk = Seq.fill(k)(c).reduce(_ * _)
-            sum(floor(xk * m + lit(0.5)).cast(DecimalType(38, 0))).cast(DoubleType) / m
-          }
+          // Exact sum of x^k (deterministic IEEE ops, identical both
+          // engines) on the 10^(k·E−14) grid.
+          val e = exps(name)
+          def powSum(k: Int): Column = exactSum(Seq.fill(k)(c).reduce(_ * _), k * e)
           // A magExp hint the data violates must fail, not silently emit
           // mis-scaled moments (the guard never fires on valid data, so
           // an external oracle needs no mirror of it).
@@ -193,8 +175,35 @@ object Profiler {
       .orderBy((groupCols :+ "column_name").map(col): _*)
   }
 
+  /** The decimal magnitude E (|x| ≤ 10^E, 0 for a column with no nonzero
+    * finite value) of each column, which sets the grid of its exact power
+    * sums: `hints` as given, the other columns from one column-pruned
+    * max(abs) pass. */
+  private[graft] def magExps(df: DataFrame, cols: Seq[String],
+                             hints: Map[String, Int]): Map[String, Int] = {
+    val need = cols.filterNot(hints.contains)
+    if (need.isEmpty) hints
+    else {
+      val aggs = need.map(nm => max(abs(col(nm).cast(DoubleType))).as(nm))
+      val r = df.agg(aggs.head, aggs.tail.toIndexedSeq: _*).collect()(0)
+      hints ++ need.map { nm =>
+        val m = Option(r.getAs[Any](nm)).map(_.asInstanceOf[Double]).getOrElse(0.0)
+        nm -> (if (m <= 0 || m.isNaN || m.isInfinite) 0
+               else math.max(0, math.ceil(math.log10(m) - 1e-9).toInt))
+      }
+    }
+  }
+
+  /** The exact sum ([[graft.Num.qsum]]) of a column of magnitude ≤ 10^e
+    * on the grid 10^(e−14): every quantized value is an integer < 2^53.
+    * The grid is a string-parsed literal, equal to the SQL-parsed one
+    * (math.pow is not guaranteed correctly rounded for negative
+    * exponents). */
+  private[graft] def exactSum(x: Column, e: Int): Column =
+    graft.Num.qsum(x, lit(s"1e${14 - e}".toDouble))
+
   /** Per-group descriptive statistics — pandas `groupby().describe()`.
-    * One grouped aggregation pass: same exact-decimal moment discipline as
+    * One grouped aggregation pass: same exact moment discipline as
     * [[describe]] (the magnitude exponent is derived GLOBALLY, so it bounds
     * every group), only (group, column)-level aggregate rows shuffle. */
   def describeBy(df: DataFrame, groupCols: Seq[String], cols: Seq[String] = Nil,
@@ -264,24 +273,21 @@ object Profiler {
       .filter(col("value").isNotNull)
     val ln2 = log(lit(2.0))
     val freqs = pairs.groupBy("column_name", "value").agg(count(lit(1)).as("cnt"))
-    // Σ c·ln(c) as an exact decimal sum of per-value quantized terms (1e-4
-    // grid): a plain double sum is reduction-order-dependent, and the
-    // quantized definition is mirrored verbatim in the SQL oracle. cnt=1
-    // terms are exactly 0, so unique-valued columns contribute none; the
-    // grid keeps quantization error ≤ 5e-5·#values (invisible at the
-    // emitted 4dp for any n ≳ #values) while the gap between a term's
-    // cross-engine ln ulp (~1e-10 at c·ln(c) ~ 1e6) and the grid keeps
-    // boundary flips out of reach. The decimal→double cast of the total
-    // stays exact below a ~1e9-row·column profile; beyond that the stat
-    // drifts last-ulp only.
-    val clnc = floor(col("cnt") * log(col("cnt").cast(DoubleType)) * lit(1e4) + lit(0.5))
-      .cast(DecimalType(38, 0))
+    // Σ c·ln(c) as an exact sum of per-value terms on the 1e-4 grid
+    // (graft.Num.qsum): a plain double sum is reduction-order-dependent,
+    // and the quantized definition is mirrored verbatim in the SQL
+    // oracle. cnt=1 terms are exactly 0, so unique-valued columns
+    // contribute none; the grid keeps quantization error ≤ 5e-5·#values
+    // (invisible at the emitted 4dp for any n ≳ #values) while the gap
+    // between a term's cross-engine ln ulp (~1e-10 at c·ln(c) ~ 1e6) and
+    // the grid keeps boundary flips out of reach.
     freqs.groupBy("column_name")
       .agg(
         sum("cnt").cast(LongType).as("n"),
         count(lit(1)).cast(LongType).as("distinct_vals"),
         max("cnt").cast(LongType).as("top_cnt"),
-        (sum(clnc).cast(DoubleType) / lit(1e4)).as("sum_clnc"))
+        graft.Num.qsum(col("cnt") * log(col("cnt").cast(DoubleType)), lit(1e4))
+          .as("sum_clnc"))
       .select(
         col("column_name"), col("n"), col("distinct_vals"),
         // H = log2(n) - (1/n)·Σ c·ln(c)/ln(2): one pass, no per-value p=c/n
@@ -310,8 +316,8 @@ object Profiler {
     * groupBy is distinct-pair-sized. Chi-squared uses the zero-cell-free
     * identity Σ obs²·n/(ca·cb) − n (absent joint cells contribute only
     * through the −n term), so the sparse joint frame is sufficient and no
-    * expected-count cross join materializes. MI terms quantize to a 1e-4
-    * grid and sum as exact decimals (the entropyProfile discipline) for
+    * expected-count cross join materializes. MI terms sum exactly on a
+    * 1e-4 grid (graft.Num.qsum, the entropyProfile discipline) for
     * cross-engine reduction-order independence; chi-squared terms are
     * pure rational arithmetic on counts, same quantized-sum treatment.
     * Null on either side drops the row (pairwise-complete). */
@@ -336,9 +342,6 @@ object Profiler {
       val chiTerm = col("cnt").cast(DoubleType) * col("cnt").cast(DoubleType) *
         col("_gf_n").cast(DoubleType) /
         (col("ca").cast(DoubleType) * col("cb").cast(DoubleType))
-      def qsum(c: Column): Column =
-        sum(floor(c * lit(1e4) + lit(0.5)).cast(DecimalType(38, 0)))
-          .cast(DoubleType) / lit(1e4)
       joint.join(ma, "va").join(mb, "vb")
         .crossJoin(broadcast(nRow))
         .crossJoin(broadcast(ka)).crossJoin(broadcast(kb))
@@ -346,8 +349,8 @@ object Profiler {
           max(col("_gf_n")).cast(LongType).as("n"),
           max(col("_gf_ka")).cast(LongType).as("ka"),
           max(col("_gf_kb")).cast(LongType).as("kb"),
-          qsum(miTerm).as("s"),
-          qsum(chiTerm).as("schi"))
+          graft.Num.qsum(miTerm, lit(1e4)).as("s"),
+          graft.Num.qsum(chiTerm, lit(1e4)).as("schi"))
         .select(
           lit(a).as("col_x"), lit(b).as("col_y"), col("n"),
           // greatest-clamps: term quantization can push the sums a hair

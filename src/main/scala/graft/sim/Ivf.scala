@@ -182,11 +182,11 @@ object Ivf {
       .limit(kc).select("_gf_v").collect()
       .map(_.getSeq[Float](0).toArray).toSeq
 
-    // Lloyd means accumulate via the exact quantized-long sum
-    // (graft.Num.qmean, 1e-12 grid): a raw avg(double)'s partition-merge
-    // order leaks into the trained centroids, and the embeddings scan is
-    // multi-split now (r15) — the trained index must be bit-identical
-    // under any layout or core count, like the FastText gate.
+    // Lloyd means are exact (graft.Num.qmean, 1e-12 grid): a raw
+    // avg(double)'s partition-merge order leaks into the trained
+    // centroids, and the embeddings scan is multi-split now (r15) — the
+    // trained index must be bit-identical under any layout or core count,
+    // like the FastText gate.
     if (kc > 1) for (_ <- 1 to iters) {
       val assigned = assignCoarse(base, coarseDf(coarseSeq))
       val means = assigned
@@ -258,7 +258,7 @@ object Ivf {
     for (_ <- 1 to iters) {
       val assigned = assignFine(baseC, cells) // (_gf_id, _gf_v, _gf_cid)
       // distributed Lloyd update: K×dim means stay in a DataFrame
-      // (exact quantized-long mean — layout-independent, see above)
+      // (exact graft.Num.qmean — layout-independent, see above)
       val means = assigned
         .select(col("_gf_cid"), posexplode(col("_gf_v")).as(Seq("_gf_pos", "_gf_x")))
         .groupBy("_gf_cid", "_gf_pos")

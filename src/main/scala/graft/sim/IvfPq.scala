@@ -190,7 +190,7 @@ object IvfPq {
     val offsets = normed
       .select(col("_gf_cid"), posexplode(col("_gf_nv")).as(Seq("_gf_pos", "_gf_x")))
       .groupBy("_gf_cid", "_gf_pos")
-      // exact quantized-long mean (graft.Num.qmean): a raw avg(double)'s
+      // exact mean (graft.Num.qmean): a raw avg(double)'s
       // partition-merge order would leak into the offsets now that the
       // embeddings scan is multi-split (r15)
       .agg(graft.Num.qmean(col("_gf_x"), lit(1e12)).as("_gf_mx"))

@@ -21,11 +21,9 @@ import org.apache.spark.sql.types._
   * driver — the same bounded-driver-step shape as BPE's merge loop and
   * k-means' centroid update.
   *
-  * Determinism (r15): the moment pass accumulates EXACT integers —
-  * every per-row contribution quantizes to the 1e-12 grid
-  * (q = floor(x·1e12 + 0.5), a long) and the q's sum as hi/lo long
-  * pairs (the graft.Num.qsum split: long addition is exact and
-  * commutative) — and the shift vector is the corpus row with the
+  * Determinism (r15): the moment pass sums every per-row contribution
+  * exactly on the 1e-12 grid (graft.Num.qsum's accumulator) — and the
+  * shift vector is the corpus row with the
   * smallest xxhash64, not an order-dependent limit(1). So the fitted
   * model is bit-identical under any partition layout, core count, or
   * shuffle merge order — required now that the embeddings scan is
@@ -53,16 +51,11 @@ object Pca {
     * eigenpairs; the shifted form is the textbook fix and is algebraically
     * identical (covariance is translation-invariant).
     *
-    * The buffer is EXACT-INTEGER (r15): [0]=n, then one (hi, lo) long
-    * pair per moment slot. Each per-row term quantizes to the 1e-12 grid
-    * (q = floor(x·1e12 + 0.5) as long) and accumulates via the split
-    * q = (q >> 31)·2³¹ + (q & 0x7FFFFFFF): `lo` collects the non-negative
-    * low halves (renormalized into `hi` before it can overflow), `hi` the
-    * signed high halves — all long adds, exact and commutative, so merge
-    * order cannot move the result (the raw-double buffer this replaces
-    * made the covariance's last ulp depend on partition merge order).
-    * finish() recomposes each ΣQ to the nearest double and divides by
-    * the grid — the graft.Num.qsum recompose. */
+    * The buffer is EXACT-INTEGER (r15): [0]=n, then one graft.Num.qsum
+    * limb pair per moment slot on the 1e-12 grid (`Num.qadd`, `qmerge`,
+    * `qtotal`), so merge order cannot move the result (the raw-double
+    * buffer this replaces made the covariance's last ulp depend on
+    * partition merge order). */
   private final class MomentAgg(d: Int, shift: Array[Double],
       encL: org.apache.spark.sql.Encoder[Array[Long]],
       encD: org.apache.spark.sql.Encoder[Array[Double]])
@@ -70,17 +63,8 @@ object Pca {
     private val triLen = d * (d + 1) / 2
     private val nSlots = d + triLen
     private val Grid = 1e12
-    private val Mask = 0x7FFFFFFFL
-    private val LoCap = 1L << 62
     def zero: Array[Long] = new Array[Long](1 + 2 * nSlots)
-    @inline private def add(b: Array[Long], slot: Int, x: Double): Unit = {
-      val q = math.floor(x * Grid + 0.5).toLong
-      val p = 1 + 2 * slot
-      b(p) += (q >> 31)
-      val lo = b(p + 1) + (q & Mask)
-      if (lo >= LoCap) { b(p) += (lo >> 31); b(p + 1) = lo & Mask }
-      else b(p + 1) = lo
-    }
+    private def add(b: Array[Long], slot: Int, x: Double): Unit = graft.Num.qadd(b, 1 + 2 * slot, x, Grid)
     def reduce(b: Array[Long], v: Seq[Float]): Array[Long] = {
       require(v.length == d,
         s"Pca: vector of dim ${v.length} in a dim-$d corpus")
@@ -99,29 +83,11 @@ object Pca {
     def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
       a(0) += b(0)
       var s = 0
-      while (s < nSlots) {
-        val p = 1 + 2 * s
-        a(p) += b(p)
-        val lo = a(p + 1) + b(p + 1) // both < 2⁶², no long overflow
-        if (lo >= LoCap) { a(p) += (lo >> 31); a(p + 1) = lo & Mask }
-        else a(p + 1) = lo
-        s += 1
-      }
+      while (s < nSlots) { graft.Num.qmerge(a, b, 1 + 2 * s); s += 1 }
       a
     }
-    def finish(r: Array[Long]): Array[Double] = {
-      val out = new Array[Double](1 + nSlots)
-      out(0) = r(0).toDouble
-      var s = 0
-      while (s < nSlots) {
-        val p = 1 + 2 * s
-        val hi = r(p) + (r(p + 1) >> 31)
-        val lo = r(p + 1) & Mask
-        out(1 + s) = (hi.toDouble * 2147483648.0 + lo.toDouble) / Grid
-        s += 1
-      }
-      out
-    }
+    def finish(r: Array[Long]): Array[Double] =
+      Array.tabulate(1 + nSlots)(s => if (s == 0) r(0).toDouble else graft.Num.qtotal(r, 2 * s - 1, Grid))
     def bufferEncoder: org.apache.spark.sql.Encoder[Array[Long]] = encL
     def outputEncoder: org.apache.spark.sql.Encoder[Array[Double]] = encD
   }

@@ -176,7 +176,7 @@ object Pq {
         .select(col("_gf_m"), col("_gf_c"),
           posexplode(col("_gf_sv")).as(Seq("_gf_pos", "_gf_x")))
         .groupBy("_gf_m", "_gf_c", "_gf_pos")
-        // exact quantized-long mean — codebooks must not depend on the
+        // exact graft.Num.qmean — codebooks must not depend on the
         // sample's partition layout (multi-split embeddings scan, r15)
         .agg(graft.Num.qmean(col("_gf_x"), lit(1e12)).as("_gf_mean"))
         .collect() // m×ks×ds doubles = ks×dim — dimension-sized

@@ -414,26 +414,14 @@ object FastText {
           if (minibatchFraction >= 1.0) inc
           else graft.ops.Sampling.hashSample(inc, "_gf_sk",
             minibatchFraction, seed = ep.toLong)
-        // Per-doc margin + residual (p − y); one keyed aggregation,
-        // cached for the epoch (read by both per-epoch actions: loss
-        // aggregate + gradient join) and released before the next weight
-        // frame. Accumulation is exact: per-incidence contributions
-        // quantize to an integer grid via floor(x·1e12 + 0.5) cast LONG
-        // and the longs sum exactly. r14 summed them as DECIMAL(38,0)
-        // (Profiler.describe's powSum pattern); r15 switches to
-        // graft.Num.qsum's dual-long split sum — bit-identical recompose
-        // (same nearest-double of the same exact integer total, pinned by
-        // FastTextSpec), but the aggregation buffer is two plain longs on
-        // the codegen compact path instead of a precision-38 decimal that
-        // boxes a BigDecimal per row (that boxing was the bulk of r14's
-        // +4 s exact-arithmetic tax on text_ft_train_score). The exact
-        // integer total makes the margin — and the whole training
-        // trajectory — independent of partition layout and shuffle merge
-        // order: the documents scan is multi-split and the driver benches
-        // at two core counts; raw double sums would have made the trained
-        // gate a different model per layout (the engine's bit-stable-
-        // under-distribution claim, applied to its own trainer).
-        def qsum(x: Column, scale: Column): Column = graft.Num.qsum(x, scale)
+        // Accumulation is exact: per-incidence contributions sum on an
+        // integer grid (graft.Num.qsum). The exact total makes the margin —
+        // and the whole training trajectory — independent of partition
+        // layout and shuffle merge order: the documents scan is
+        // multi-split and the bench runs at two core counts; raw
+        // double sums would have made the trained gate a different model
+        // per layout (the engine's bit-stable-under-distribution claim,
+        // applied to its own trainer).
         val q12 = lit(1e12)
         // Per-doc margin + residual (p − y): one keyed aggregation,
         // cached for the epoch (read twice INSIDE one fused action) and
@@ -446,7 +434,7 @@ object FastText {
           .groupBy(col("_gf_id"))
           .agg(first(col("_gf_y")).as("_gf_y"),
             first(col("_gf_inv")).as("_gf_inv"),
-            qsum(coalesce(col("_gf_wv"), lit(0.0)) * col("_gf_inv"), q12)
+            graft.Num.qsum(coalesce(col("_gf_wv"), lit(0.0)) * col("_gf_inv"), q12)
               .as("_gf_m"))
           .select(col("_gf_id"), col("_gf_y"), col("_gf_inv"),
             (lit(1.0) / (lit(1.0) + exp(-(lit(bias) + col("_gf_m")))))
@@ -465,11 +453,11 @@ object FastText {
         // from 0 (a perfectly-separated fixture otherwise yields -inf).
         // Normalization is by THIS epoch's doc count.
         val statsRow = margins.agg(
-          qsum(-(col("_gf_y") * log(greatest(col("_gf_p"), lit(1e-12)))
+          graft.Num.qsum(-(col("_gf_y") * log(greatest(col("_gf_p"), lit(1e-12)))
               + (lit(1.0) - col("_gf_y"))
                 * log(greatest(lit(1.0) - col("_gf_p"), lit(1e-12)))),
             lit(1e9)).as("_gf_loss"),
-          qsum(col("_gf_r"), q12).as("_gf_rsum"),
+          graft.Num.qsum(col("_gf_r"), q12).as("_gf_rsum"),
           count(lit(1)).as("_gf_n"))
         // Per-bucket gradient: Σ_incidences r/n_f, B-bounded collect
         // (the join against per-doc residuals re-selects the epoch's
@@ -477,7 +465,7 @@ object FastText {
         val gradRows = epochInc
           .join(margins.select(col("_gf_id"), col("_gf_r")), Seq("_gf_id"))
           .groupBy(col("_gf_b"))
-          .agg(qsum(col("_gf_r") * col("_gf_inv"), q12).as("_gf_g"))
+          .agg(graft.Num.qsum(col("_gf_r") * col("_gf_inv"), q12).as("_gf_g"))
         val stats = statsRow.collect()(0)
         val nEpoch = stats.getLong(2).toDouble
         if (nEpoch == 0) {

@@ -85,6 +85,8 @@ class EntrySpec extends SparkSpec {
     assert(rows.head.min >= 0 && rows(1).min == -1 && rows(1).n == 0)
     assert(Bench.outcomes(rows) ==
       """"failed":{"boom":"java.lang.IllegalStateException"},"leaked":["leaky"]""")
+    assert(Bench.outcomes(rows, leakedNames = false) ==
+      """"failed":{"boom":"java.lang.IllegalStateException"},"leaked":1""")
     assert(spark.sharedState.cacheManager.isEmpty)
   }
 
@@ -106,8 +108,10 @@ class EntrySpec extends SparkSpec {
     val files: Seq[Path] =
       try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
       finally walk.close()
-    val builders = files.filter(f => Files.readString(f).contains("SparkSession.builder"))
-    assert(builders.map(_.getFileName.toString) == Seq("Session.scala"))
+    def holding(s: String) =
+      files.filter(f => Files.readString(f).contains(s)).map(_.getFileName.toString)
+    assert(holding("SparkSession.builder") == Seq("Session.scala"))
+    assert(holding("nanosAsLong") == Seq("Session.scala"))
     val mains = files.flatMap { f =>
       var obj = ""
       Files.readAllLines(f).asScala.flatMap { l =>

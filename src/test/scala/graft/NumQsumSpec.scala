@@ -3,14 +3,18 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
-/** Pins [[Num.qsum]]'s dual-long split sum against the DECIMAL(38,0)
-  * reference form it replaced (FastText r14): the two must be
-  * BIT-IDENTICAL — same quantized integer total, same nearest-double
-  * recompose — and layout-independent, because the trained-model lanes
-  * (FastText, Ivf/IvfPq/Pq Lloyd means, Pca moments) rely on exactly
-  * that equivalence for the shuffle-determinism gate. */
+/** Pins [[Num.qsum]] against the DECIMAL(38,0) reference form it
+  * replaced: the two must be BIT-IDENTICAL — same quantized integer total,
+  * same nearest-double recompose — and layout-independent, because the
+  * profiling statistics and the trained-model lanes (FastText,
+  * Ivf/IvfPq/Pq Lloyd means, Pca moments) rely on exactly that
+  * equivalence for the oracle and shuffle-determinism gates. Past its
+  * exact range it must refuse by name, never wrap. */
 class NumQsumSpec extends SparkSpec {
   import org.apache.spark.sql.Column
+  import org.apache.spark.sql.catalyst.InternalRow
+  import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
+  import org.apache.spark.sql.types.LongType
 
   /** The r14 reference: quantize to grid, sum as DECIMAL(38,0). */
   private def decQsum(x: Column, scale: Column): Column =
@@ -30,21 +34,59 @@ class NumQsumSpec extends SparkSpec {
   }
 
   test("qsum is bit-identical to the DECIMAL(38,0) reference form") {
-    val df = fixture(4)
-    val both = df.groupBy("g").agg(
-      Num.qsum(col("x"), lit(1e12)).as("fast"),
-      decQsum(col("x"), lit(1e12)).as("ref"),
-      Num.qsum(col("x"), lit(1e9)).as("fast9"),
-      decQsum(col("x"), lit(1e9)).as("ref9")).collect()
+    // The trainers' 1e12 and 1e9 grids, the entropy/association 1e4 grid,
+    // and describe's 10^(14−k·E) grid on x^k (fixture |x| ≤ 10^4: E = 4).
+    val cases = Seq(col("x") -> 1e12, col("x") -> 1e9, col("x") -> 1e4) ++
+      (1 to 4).map(k => Seq.fill(k)(col("x")).reduce(_ * _) -> s"1e${14 - 4 * k}".toDouble)
+    val aggs = cases.flatMap { case (x, g) => Seq(Num.qsum(x, lit(g)), decQsum(x, lit(g))) }
+    val both = fixture(4).groupBy("g").agg(aggs.head, aggs.tail: _*).collect()
     assert(both.nonEmpty)
-    both.foreach { r =>
-      assert(java.lang.Double.doubleToLongBits(r.getDouble(1)) ==
-        java.lang.Double.doubleToLongBits(r.getDouble(2)),
-        s"grid 1e12 diverged for group ${r.get(0)}: ${r.getDouble(1)} vs ${r.getDouble(2)}")
-      assert(java.lang.Double.doubleToLongBits(r.getDouble(3)) ==
-        java.lang.Double.doubleToLongBits(r.getDouble(4)),
-        s"grid 1e9 diverged for group ${r.get(0)}")
+    for (r <- both; ((_, g), i) <- cases.zipWithIndex) {
+      val (fast, ref) = (r.getDouble(1 + 2 * i), r.getDouble(2 + 2 * i))
+      assert(java.lang.Double.doubleToLongBits(fast) == java.lang.Double.doubleToLongBits(ref),
+        s"case $i (grid $g) diverged for group ${r.get(0)}: $fast vs $ref")
     }
+  }
+
+  test("merged partials past 2^32 rows per group keep the exact total") {
+    // Synthetic partial buffers of one group: 2^31 + 1 rows of the largest
+    // low limb, twice, and 2^31 + 1 rows of a large negative value —
+    // 3·2^31 + 3 rows, where a plain long sum of the low limbs wraps.
+    val rows = BigInt(2).pow(31) + 1
+    val parts = Seq(BigInt(Int.MaxValue), BigInt(Int.MaxValue), -(BigInt(2).pow(52) + 1)).map(_ * rows)
+    val total = parts.sum
+    def limbs(v: BigInt) = Array((v >> 31).toLong, (v & Int.MaxValue).toLong)
+    // The aggregate's own merge and recompose, compiled as Spark runs them.
+    val agg = Num.QSum(BoundReference(0, LongType, nullable = true))
+    val merge = UnsafeProjection.create(agg.mergeExpressions,
+      agg.aggBufferAttributes ++ agg.inputAggBufferAttributes)
+    val eval = UnsafeProjection.create(Seq(agg.evaluateExpression), agg.aggBufferAttributes)
+    val merged = parts.map(limbs).foldLeft(InternalRow(null, 0L)) { (acc, p) =>
+      merge(InternalRow(if (acc.isNullAt(0)) null else acc.getLong(0), acc.getLong(1), p(0), p(1))).copy()
+    }
+    assert(merged.getLong(0) == (total >> 31).toLong && merged.getLong(1) == (total & Int.MaxValue).toLong)
+    assert(eval(merged).getDouble(0) == total.toDouble)
+    // The typed-aggregator form (Pca's moments) agrees.
+    val buf = new Array[Long](2)
+    parts.map(limbs).foreach(Num.qmerge(buf, _, 0))
+    assert(Num.qtotal(buf, 0, 1.0) == total.toDouble)
+  }
+
+  test("a total past 2^84 refuses by name, with ANSI off too") {
+    val ansi = "spark.sql.ansi.enabled"
+    val saved = spark.conf.get(ansi)
+    // n rows of q = 2^62: ΣQ = n·2^62 reaches the bound 2^84 at n = 2^22.
+    def total(n: Long): Double = spark.range(0, n, 1, 4)
+      .agg(Num.qsum(lit(math.pow(2, 62)), lit(1.0))).head().getDouble(0)
+    try {
+      spark.conf.set(ansi, "false")
+      assert(total((1L << 22) - 1) == math.pow(2, 84) - math.pow(2, 62))
+      val e = intercept[Exception](total(1L << 22))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => Option(t.getMessage).exists(_.contains(Num.Overflow))), e.toString)
+      val buf = Array(1L << 53, 0L)
+      assert(intercept[ArithmeticException](Num.qtotal(buf, 0, 1.0)).getMessage == Num.Overflow)
+    } finally spark.conf.set(ansi, saved)
   }
 
   test("qsum and qmean are layout-independent") {

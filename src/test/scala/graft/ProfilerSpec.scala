@@ -30,6 +30,11 @@ class ProfilerSpec extends SparkSpec {
     assert(r.getAs[Double]("q3") == 4.0)
     // pandas-style (bias-corrected) sample skew: g1=1.49753 -> G1=2.23243
     assert(math.abs(r.getAs[Double]("skew") - 2.2324) < 0.001)
+    // A magExp hint the data exceeds (|v| ≤ 10^0 claimed, 100 seen) is
+    // refused by name: x^4 on its grid (1e8·1e14) overflows a long.
+    val e = intercept[Exception](Profiler.describe(df, Seq("v"), magExp = Map("v" -> 0)).collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => Option(t.getMessage).exists(_.contains("fix its magExp hint"))), e.toString)
   }
 
   test("describeBy groups stats per key and matches per-group describe") {
