@@ -1,6 +1,6 @@
 package graft.dict
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -10,9 +10,12 @@ import org.apache.spark.sql.types._
   *
   * Semantic type combines static signals (column name, Spark dtype) with
   * the reference's data-dependent categorical heuristic
-  * `distinct <= min(20, max(5, non_null/2))`, all folded into ONE
-  * aggregation pass. Examples are (min, max) — deterministic, O(1) state —
-  * instead of pandas "first N seen" which has no distributed meaning.
+  * `distinct <= min(20, max(5, non_null/2))`. Counts and examples of all
+  * columns fold into ONE aggregation pass; exact distincts take one more,
+  * keyed pass over (column, value) pairs
+  * ([[graft.profile.Profiler.exactDistincts]]). Examples are (min, max) —
+  * deterministic, O(1) state — instead of pandas "first N seen" which has
+  * no distributed meaning.
   */
 object DataDictionary {
 
@@ -32,29 +35,24 @@ object DataDictionary {
   /** One row per column: semantic type, dtype, distinct/null counts,
     * min/max example values. `exact=false` uses HLL distincts (100 TB
     * path). */
-  def build(df: DataFrame, exact: Boolean = true): DataFrame = {
-    val entries = df.schema.fields.map { f =>
+  def build(df: DataFrame, exact: Boolean = true): DataFrame =
+    graft.profile.Profiler.perColumn(df, exact) { f =>
       val c = col(f.name)
-      val nonNull = count(c)
-      val distinct: Column = if (exact) count_distinct(c) else approx_count_distinct(c)
-      val semantic: Column = staticType(f) match {
-        case Some(t) => lit(t)
-        case None =>
-          when(distinct.cast(DoubleType) <=
-              least(lit(20.0), greatest(lit(5.0), floor(nonNull / lit(2.0)))),
-            lit("categorical")).otherwise(lit("text"))
-      }
-      struct(
+      Seq(
         lit(f.name).as("column_name"),
-        semantic.as("semantic_type"),
+        lit(staticType(f).orNull).cast(StringType).as("_gf_static"),
         lit(f.dataType.simpleString).as("dtype"),
-        distinct.cast(LongType).as("distinct_count"),
-        (count(lit(1)) - nonNull).cast(LongType).as("null_count"),
+        count(c).as("_gf_non_null"),
+        (count(lit(1)) - count(c)).cast(LongType).as("null_count"),
         min(c).cast(StringType).as("example_min"),
         max(c).cast(StringType).as("example_max"))
-    }
-    df.agg(array(entries.toIndexedSeq: _*).as("m"))
-      .select(explode(col("m")).as("e")).select("e.*")
+    }.select(
+      col("column_name"),
+      coalesce(col("_gf_static"),
+        when(col("distinct_count").cast(DoubleType) <=
+            least(lit(20.0), greatest(lit(5.0), floor(col("_gf_non_null") / lit(2.0)))),
+          lit("categorical")).otherwise(lit("text"))).as("semantic_type"),
+      col("dtype"), col("distinct_count"), col("null_count"),
+      col("example_min"), col("example_max"))
       .orderBy("column_name")
-  }
 }

@@ -40,12 +40,14 @@ final case class Detection(
   *
   * Scale design: bounds for every configured column aggregate to one row
   * and broadcast back across the data — the fact table itself never
-  * shuffles. Exact quantiles (IQR, replacement medians) ride the bounded
+  * shuffles. Exact quantiles (IQR, replacement medians) ride the
   * value-histogram path ([[graft.ops.Quantiles.contColumns]], r12) whose
-  * state is domain-sized at any row count; `exact=false` switches to the
-  * `percentile_approx` sketch; only MAD's deviation median still buffers
-  * (its operands are interpolation results, outside the fixed-precision
-  * histogram contract).
+  * state is one row per distinct value, not per row; a continuous column
+  * has about as many distinct values as rows, though, and the ungrouped
+  * cumulative window runs that histogram in one task. `exact=false`
+  * switches to the `percentile_approx` sketch; only MAD's deviation
+  * median still buffers (its operands are interpolation results, outside
+  * the fixed-precision histogram contract).
   */
 object Outliers {
 
@@ -63,7 +65,8 @@ object Outliers {
     * interpolation replayed over distinct-value counts) instead of the
     * builtin's per-column buffer of EVERY row: identical results on the
     * fixed-precision (≤ 4-decimal) value contract, and the only state is
-    * domain-sized, so the lane survives any row count. MAD's deviation
+    * one row per distinct value — as many as rows for a continuous
+    * column, in one window task (see contColumns). MAD's deviation
     * median stays on `percentile()` — deviations are interpolation
     * RESULTS, not fixed-precision data, so the histogram contract does
     * not hold for them; `exact = false` keeps the sketch everywhere. */

@@ -97,6 +97,12 @@ import scala.jdk.CollectionConverters._
   *     fraction: 0.8                    # optional seed: 0 <= long < 1000000
   * }}}
   *
+  * Execution is [[Pipeline.run]]'s: the chain composes lazily, and the
+  * stages that read their input more than once (`outliers`, `impute`,
+  * `near_dedup`, `lm_filter`, `ft_filter`, `decontaminate`,
+  * `span_dedup`) cache it for the caller's first action; call the
+  * result's `release()` once its frames are consumed.
+  *
   * Validation is strict: unknown modules, unknown keys inside a stage,
   * unknown strategy/rule names, and missing required keys all throw
   * [[ConfigError]] with the offending path — a config typo must fail the

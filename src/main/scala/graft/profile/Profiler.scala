@@ -13,7 +13,9 @@ import org.apache.spark.sql.types._
   * are computed as a single `agg(array(struct(...)))` so a 100 TB table is
   * scanned once, reduced map-side, and only a few KB of aggregate state
   * crosses the shuffle. The long (one-row-per-column) shape is recovered by
-  * exploding the array afterwards, on a 1-row DataFrame.
+  * exploding the array afterwards, on a 1-row DataFrame. Exact distinct
+  * counts are the exception: they take one keyed pass of their own
+  * ([[exactDistincts]]).
   */
 object Profiler {
 
@@ -24,28 +26,65 @@ object Profiler {
 
   /** Schema overview: dtype, non-null/null counts, missing %, distinct count
     * per column (data_diag.py:47-83). `exact=false` (default) uses HLL
-    * `approx_count_distinct` — the 100 TB path: exact multi-column distinct
-    * forces an Expand (row multiplication by #columns) that is pointless for
-    * profiling. `exact=true` matches a SQL oracle bit-for-bit.
+    * `approx_count_distinct` — the 100 TB path. `exact=true` matches a SQL
+    * oracle bit-for-bit; its counts come from the keyed pass of
+    * [[exactDistincts]], not from Spark's multi-`count_distinct` Expand.
     */
   def schemaProfile(df: DataFrame, exact: Boolean = false): DataFrame = {
     val total = count(lit(1))
-    val entries = df.schema.fields.map { f =>
+    perColumn(df, exact) { f =>
       val c = col(f.name)
-      val distinct: Column =
-        if (exact) count_distinct(c) else approx_count_distinct(c)
-      struct(
+      Seq(
         lit(f.name).as("column_name"),
         lit(f.dataType.simpleString).as("dtype"),
         count(c).cast(LongType).as("non_null"),
         (total - count(c)).cast(LongType).as("null_count"),
-        graft.Num.dround((total - count(c)).cast(DoubleType) / total * 100, 2).as("missing_pct"),
-        distinct.cast(LongType).as("distinct_count"))
-    }
-    df.agg(array(entries.toIndexedSeq: _*).as("m"))
-      .select(explode(col("m")).as("e"))
-      .select("e.*")
+        graft.Num.dround((total - count(c)).cast(DoubleType) / total * 100, 2).as("missing_pct"))
+    }.select("column_name", "dtype", "non_null", "null_count", "missing_pct", "distinct_count")
       .orderBy("column_name")
+  }
+
+  /** One row per column of `df`: the fields `entry` makes from the
+    * column, all columns in ONE aggregation pass, plus its
+    * `distinct_count` — HLL `approx_count_distinct` in the same pass, or
+    * with `exact` the [[exactDistincts]] count joined on by column index
+    * (0 for a column with no non-null value, as `count_distinct`). */
+  private[graft] def perColumn(df: DataFrame, exact: Boolean)(
+      entry: StructField => Seq[Column]): DataFrame = {
+    val entries = df.schema.fields.toIndexedSeq.zipWithIndex.map { case (f, i) =>
+      val distinct =
+        if (exact) Nil
+        else Seq(approx_count_distinct(col(f.name)).cast(LongType).as("distinct_count"))
+      struct((lit(i).as("_gf_idx") +: entry(f)) ++ distinct: _*)
+    }
+    val agged = df.agg(array(entries: _*).as("m"))
+      .select(explode(col("m")).as("e")).select("e.*")
+    if (!exact) agged
+    else agged.join(broadcast(exactDistincts(df)), Seq("_gf_idx"), "left")
+      .withColumn("distinct_count", coalesce(col("distinct_count"), lit(0L)))
+  }
+
+  /** Exact distinct count of every column of `df` in ONE keyed pass: each
+    * row explodes to (column index, value) pairs, the value in the slot of
+    * its column's DataType (one slot per distinct DataType, so values keep
+    * their type and equality), nulls dropped; then one `distinct()` and
+    * one count per index. Spark's plan for several `count_distinct`s
+    * instead expands every row once per column and aggregates the copies
+    * in the scan's tasks — on a single-partition frame, in one task.
+    * Output: (`_gf_idx`, `distinct_count`); a column with no non-null
+    * value has no row. */
+  private[graft] def exactDistincts(df: DataFrame): DataFrame = {
+    val types = df.schema.fields.map(_.dataType).distinct.toIndexedSeq
+    val slots = types.indices.map(j => s"_gf_v$j")
+    val pairs = df.schema.fields.toIndexedSeq.zipWithIndex.map { case (f, i) =>
+      struct(lit(i).as("_gf_idx") +: types.zip(slots).map { case (t, s) =>
+        (if (t == f.dataType) col(f.name) else lit(null).cast(t)).as(s)
+      }: _*)
+    }
+    df.select(explode(array(pairs: _*)).as("p")).select("p.*")
+      .filter(slots.map(col(_).isNotNull).reduce(_ || _))
+      .distinct()
+      .groupBy("_gf_idx").agg(count(lit(1)).cast(LongType).as("distinct_count"))
   }
 
   /** Descriptive statistics for numeric columns (data_diag.py:104-110):

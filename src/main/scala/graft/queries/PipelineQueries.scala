@@ -31,10 +31,15 @@ object PipelineQueries {
       "00010000" + ("00000000" * 3) + "00010000" + ("00000000" * 3) + "40000000" +
       ("00" * 24) + "00000002"
 
-  private def chainResult(r: Pipeline.Result) =
-    r.df.select(col("o_orderkey"), col("o_orderstatus"),
+  /** The chain's frame, materialized so the run's caches can be released
+    * before the query returns. */
+  private def chainResult(r: Pipeline.Result) = {
+    val out = r.df.localCheckpoint(eager = true)
+    r.release()
+    out.select(col("o_orderkey"), col("o_orderstatus"),
       graft.Num.dround(col("o_totalprice"), 2).as("o_totalprice"))
       .orderBy("o_orderkey")
+  }
 
   /** The curation chain as a YAML artifact: the LLM-pipeline stages behind
     * the same config-driven entry point the reference modules use. */

@@ -5,6 +5,7 @@ import graft.impute.{Constant, Median, Mode}
 import graft.outliers.{Clip, Iqr, ZScore}
 import graft.pipeline._
 import graft.quality.{InRange, NotNull}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class ConfigPipelineSpec extends SparkSpec {
@@ -635,6 +636,79 @@ class ConfigPipelineSpec extends SparkSpec {
       assert(kept.toSeq == stepwise.select("doc_id").as[Long].collect().sorted.toSeq)
       // every gate fired: exact dup, near dup, off-domain, contaminated
       assert(kept.toSeq == Seq(1L, 4L, 7L), s"kept ${kept.mkString(",")}")
+    }
+  }
+
+  test("the QA chain caches its outliers and impute inputs and evaluates each input row twice") {
+    val yaml = """
+      |run_id: qa
+      |stages:
+      |  - module: normalize
+      |    standardize_text: [l_returnflag]
+      |    value_mappings:
+      |      l_returnflag: {a: A, n: N, r: R}
+      |  - module: validate
+      |    rules:
+      |      - {rule: not_null, column: l_quantity}
+      |      - {rule: in_set, column: l_returnflag, allowed: [A, N, R]}
+      |  - module: dedup
+      |    subset: []
+      |    keep: first
+      |    tiebreak: [l_orderkey]
+      |  - module: outliers
+      |    detect:
+      |      l_extendedprice: {method: iqr, multiplier: 3.0}
+      |      l_quantity: {method: zscore, threshold: 3.0}
+      |    handle: {l_extendedprice: clip, l_quantity: clip}
+      |  - module: impute
+      |    strategies: {l_quantity: median, l_discount: mean}
+      |""".stripMargin
+    val n = 200
+    val dir = java.nio.file.Files.createTempDirectory("graft-qa").toString
+    (1 to n).map { i =>
+      val k = if (i % 50 == 0) i - 1 else i // a few exact duplicate rows
+      (k.toLong, k % 7,
+        if (k % 31 == 0) None else Some((k % 40 + 1).toDouble),
+        if (k % 67 == 0) 90000.0 else 1000.0 + (k % 97) * 12.5,
+        if (k % 23 == 0) None else Some((k % 10) * 0.01),
+        Seq(" a", "N", "r ", "R", "x")(k % 5))
+    }.toDF("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice",
+        "l_discount", "l_returnflag")
+      .write.parquet(s"$dir/in")
+    spark.catalog.clearCache()
+    val evals = spark.sparkContext.longAccumulator("input row evaluations")
+    val seen = udf { () => evals.add(1L); true }.asNondeterministic()
+    val res = ConfigPipeline.run(spark.read.parquet(s"$dir/in").filter(seen()), yaml)
+    Artifacts.write(spark, res, dir, "qa")
+    res.release()
+    assert(evals.value == 2L * n, s"${evals.value} evaluations of $n input rows")
+    assert(spark.sharedState.cacheManager.isEmpty, "a stage's cache outlived Result.release")
+    // the same chain one stage at a time, each output and report cut loose
+    val stages = ConfigPipeline.parse(yaml).stages
+    val stepReports = Map.newBuilder[String, DataFrame]
+    val stepwise = stages.zipWithIndex.foldLeft(spark.read.parquet(s"$dir/in")) {
+      case (acc, (stage, i)) =>
+        val r = Pipeline.run(acc, Seq(stage))
+        val next = r.df.localCheckpoint()
+        r.reports.foreach { case (k, df) =>
+          stepReports += s"$i:${k.dropWhile(_ != ':').drop(1)}" -> df.localCheckpoint()
+        }
+        r.release()
+        next
+    }
+    // the z-score bounds are double reductions: compare at 1e-9
+    def rows(df: DataFrame): Seq[String] = df.collect().toSeq.map(_.toSeq.map {
+      case d: Double => BigDecimal(d).setScale(9, BigDecimal.RoundingMode.HALF_UP).toString
+      case v => String.valueOf(v)
+    }.mkString("|")).sorted
+    val cleaned = Artifacts.readCleaned(spark, dir, "qa")
+    assert(cleaned.count() < n, "the planted duplicates were dropped")
+    assert(rows(cleaned) == rows(stepwise))
+    val expected = stepReports.result()
+    assert(res.reports.keySet == expected.keySet &&
+      expected.keySet == Set("0:normalize", "1:validate", "3:outliers", "4:impute"))
+    expected.foreach { case (name, df) =>
+      assert(rows(Artifacts.readReport(spark, dir, "qa", name)) == rows(df), name)
     }
   }
 }

@@ -1,8 +1,10 @@
 package graft
 
+import graft.dict.DataDictionary
 import graft.profile.Profiler
-import org.apache.spark.sql.Row
-import org.apache.spark.sql.functions.when
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.{col, count_distinct, when}
+import org.apache.spark.sql.types._
 
 class ProfilerSpec extends SparkSpec {
   import spark.implicits._
@@ -142,6 +144,36 @@ class ProfilerSpec extends SparkSpec {
     val df = (1 to 30).map(i => (s"id$i", "const")).toDF("wide", "narrow")
     val rows = Profiler.highCardinality(df, 10, exact = true).collect()
     assert(rows.map(_.getString(0)).toSeq == Seq("wide"))
+  }
+
+  test("exact distincts equal count_distinct per column, in one keyed pass") {
+    val schema = StructType(Seq(
+      StructField("i", IntegerType), StructField("none", IntegerType),
+      StructField("d", DoubleType), StructField("t", TimestampType),
+      StructField("p2", DecimalType(10, 2)), StructField("p4", DecimalType(12, 4)),
+      StructField("a", ArrayType(IntegerType)), StructField("s", StringType)))
+    val ts = (x: String) => java.sql.Timestamp.valueOf(x)
+    val dec = (x: String) => new java.math.BigDecimal(x)
+    val rows = Seq(
+      Row(1, null, Double.NaN, ts("2024-01-01 00:00:00"), dec("1.50"), dec("1.5000"), Seq(1, 2), "x"),
+      Row(1, null, Double.NaN, ts("2024-01-01 00:00:00"), dec("1.50"), dec("1.5001"), Seq(2, 1), "x"),
+      Row(2, null, -0.0, ts("2024-01-02 00:00:00"), dec("2.00"), dec("2.0000"), Seq(1, 2), null),
+      Row(null, null, 0.0, null, null, dec("2.0000"), null, "y"),
+      Row(3, null, 1.5, ts("2024-01-01 00:00:00"), dec("-1.50"), null, Seq(), "z"),
+      Row(null, null, null, ts("2024-01-03 12:00:00"), dec("1.50"), dec("1.5000"), Seq(1, 2), "x"))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
+    val want = df.columns.map(c =>
+      c -> df.agg(count_distinct(col(c))).collect()(0).getLong(0)).toMap
+    // NaN twice, -0.0 = 0.0, the all-null column 0 (not null)
+    assert(want("d") == 3 && want("none") == 0 && want("a") == 3, want)
+    val byIdx = Profiler.exactDistincts(df).collect()
+      .map(r => df.columns(r.getInt(0)) -> r.getLong(1)).toMap
+    assert(byIdx == want - "none", "a column with no non-null value has no row")
+    def counts(p: DataFrame) = p.select("column_name", "distinct_count").collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(counts(DataDictionary.build(df, exact = true)) == want)
+    assert(counts(Profiler.schemaProfile(df, exact = true)) == want)
+    assert(counts(Profiler.highCardinality(df, 0, exact = true)) == Map("s" -> 3L))
   }
 
   test("approx (100 TB) path tracks the exact path closely") {
