@@ -28,36 +28,6 @@ import org.apache.spark.sql.functions._
   */
 object Components {
 
-  /** Truncate lineage between rounds: a RELIABLE checkpoint when the
-    * session has a checkpoint dir (survives executor loss — required on a
-    * real cluster), else an eager localCheckpoint (fine on local[n],
-    * where executor loss means the app is gone anyway). */
-  private def truncate(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(true)
-    else df.localCheckpoint(true)
-
-  /** Best-effort removal of an intermediate frame's RELIABLE checkpoint
-    * files once nothing downstream can reference them (the successor
-    * round is already materialized into its own checkpoint). Without
-    * this, every round leaks a full copy of the edge set to the
-    * checkpoint dir (`spark.cleaner...cleanCheckpoints` defaults off).
-    *
-    * The checkpointed RDD must be taken from the `LogicalRDD` leaf that
-    * `df.checkpoint(true)` produced — `queryExecution.toRdd` returns a
-    * fresh projection RDD *derived* from it, whose `getCheckpointFile`
-    * is always None (so deleting via toRdd would silently never fire). */
-  private def dropCheckpoint(df: DataFrame): Unit =
-    try {
-      val files = df.queryExecution.analyzed.collect {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.getCheckpointFile
-      }.flatten
-      files.foreach { p =>
-        val path = new org.apache.hadoop.fs.Path(p)
-        path.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-          .delete(path, true): Unit
-      }
-    } catch { case scala.util.control.NonFatal(_) => () }
-
   /** One large-star phase over canonically-oriented edges (src > dst):
     * every strictly-larger neighbour of u is rewired to
     * m = min(u ∪ neighbours(u)). Output stays oriented src > dst (the
@@ -114,7 +84,7 @@ object Components {
     // checkpoint is deliberately kept alive for the whole function (the
     // returned labels frame reads `nodes` from it lazily) — the same
     // leaked-until-caller-done contract the final edge checkpoint has.
-    val p0 = truncate(pairs.select(col("id_a"), col("id_b")))
+    val p0 = graft.Cached.truncate(pairs.select(col("id_a"), col("id_b")))
     // Every id appearing in any pair (self-pairs count as singletons).
     // Lazy on purpose: scanned exactly once, inside the final label join —
     // a standalone materialize would be a whole extra job for one scan.
@@ -139,20 +109,17 @@ object Components {
     // LAZY, so the star-certificate aggregate is the round's ONLY job —
     // it materializes the cached round output as a side effect (lineage
     // is truncated by the LogicalRDD wrapper either way). The reliable
-    // path keeps the eager checkpoint: there the write must durably
-    // complete before anything downstream trusts it, and cluster rounds
+    // checkpoint stays eager ([[graft.Cached.truncate]]); cluster rounds
     // are shuffle-bound, not job-count-bound.
-    val reliable = pairs.sparkSession.sparkContext.getCheckpointDir.isDefined
     var converged = false
     var iter = 0
     while (!converged && iter < maxIter) {
-      val contracted = smallStar(largeStar(edges))
-      val next = if (reliable) contracted.checkpoint(true)
-                 else contracted.localCheckpoint(false)
+      val next = graft.Cached.truncate(smallStar(largeStar(edges)), eager = false)
       converged = isStar(next)
       // Round 1's input is a lazy view over p0 (whose checkpoint must
-      // outlive this function) — only round outputs are dropped here.
-      if (iter > 0) dropCheckpoint(edges)
+      // outlive this function) — only round outputs are dropped here,
+      // files and blocks alike, once the next round is materialized.
+      if (iter > 0) graft.Cached.drop(edges)
       edges = next
       iter += 1
     }

@@ -158,24 +158,13 @@ object MinHash {
     }
   }
 
-  /** The family's one persist point: a signature frame feeding several
+  /** The family's one cache point: a signature frame feeding several
     * consumers (band-bucket sides, estimator joins) runs its shingle →
     * hash → k-lane aggregation once (r14). One doc × (k+1) longs per row
-    * — signature-table-sized, never corpus-sized.
-    *
-    * CACHE CONTRACT: the returned plans own no action, so they cannot
-    * unpersist the frame, and it outlives the call. These public entry
-    * points leave one behind: [[nearDuplicatePairs]], [[dedup]],
-    * [[crossNearDuplicatePairs]] and [[decontaminateNear]] (one per side),
-    * [[NgramJaccard.pairs]], and [[PortableMinHash.pairs]],
-    * [[PortableMinHash.pairsOfTokens]], [[PortableMinHash.kept]] and
-    * [[PortableMinHash.jaccardPairs]]. Long-lived sessions that call them
-    * repeatedly must clear or unpersist between calls (the Verify/Bench
-    * harnesses call `cacheManager.clearCache()` between queries);
-    * [[graft.pipeline.Pipeline]] uses [[dedupReleasable]], which hands the
-    * unpersist back. [[SimHash.pairsOverSims]] is the SimHash family's twin. */
-  private[dedup] def persisted(sigs: DataFrame): DataFrame =
-    sigs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    * — signature-table-sized, never corpus-sized. The returned plans
+    * leave it cached ([[graft.Cached]]); [[dedupReleasable]] hands the
+    * release back. */
+  private[dedup] def held(sigs: DataFrame): DataFrame = graft.Cached.hold(sigs).df
 
   /** Candidate near-duplicate pairs (idA < idB, est_jaccard >= threshold).
     * Returns (id_a, id_b, est_jaccard).
@@ -186,12 +175,11 @@ object MinHash {
     * the bucket match and dedup, so each surviving pair pays exactly one
     * estimator. Shipping signatures with the band rows instead would
     * multiply the shuffle by bands × sigBytes/20 (~400× at defaults).
-    *
-    * CACHE CONTRACT: see [[persisted]]. */
+    * Leaves its signature frame cached ([[held]]). */
   def nearDuplicatePairs(df: DataFrame, textCol: String, idCol: String,
                          n: Int = 3, k: Int = 64, bands: Int = 16,
                          threshold: Double = 0.7): DataFrame =
-    Lsh(Xx, k, bands).pairs(persisted(signatures(df, textCol, idCol, n, k)),
+    Lsh(Xx, k, bands).pairs(held(signatures(df, textCol, idCol, n, k)),
       threshold)
 
   /** [[nearDuplicatePairs]] body over an already-computed signature frame
@@ -206,15 +194,16 @@ object MinHash {
     * (a paraphrased benchmark item still matches) and cross-source overlap
     * audits. Same id-only band join as [[nearDuplicatePairs]]; when
     * `right` is benchmark-sized, Catalyst broadcasts its signature side.
-    * Returns (id_l, id_r, est_jaccard). CACHE CONTRACT: see [[persisted]]. */
+    * Returns (id_l, id_r, est_jaccard). Leaves both signature frames
+    * cached ([[held]]). */
   def crossNearDuplicatePairs(left: DataFrame, right: DataFrame,
                               textCol: String, idCol: String,
                               n: Int = 3, k: Int = 64, bands: Int = 16,
                               threshold: Double = 0.7): DataFrame = {
     val lsh = Lsh(Xx, k, bands)
     // each side feeds its band buckets AND its estimator join (r14)
-    val l = persisted(signatures(left, textCol, idCol, n, k))
-    val r = persisted(signatures(right, textCol, idCol, n, k))
+    val l = held(signatures(left, textCol, idCol, n, k))
+    val r = held(signatures(right, textCol, idCol, n, k))
     val cand = lsh.buckets(l, "id_l").join(lsh.buckets(r, "id_r"), Seq("_gf_band", "_gf_bh"))
       .select("id_l", "id_r")
       .distinct()
@@ -345,22 +334,22 @@ object MinHash {
     *    is a representative by definition.
     * MinHashSpec pins collapsed ≡ pair-derived on a planted mega-cluster;
     * [[graft.MinHashSkewProbe]] measures the quadratic counterfactual.
-    *
-    * CACHE CONTRACT: see [[persisted]]. */
+    * Leaves its signature frame cached ([[held]]). */
   def dedup(df: DataFrame, textCol: String, idCol: String,
             n: Int = 3, k: Int = 64, bands: Int = 16,
             threshold: Double = 0.7): DataFrame =
-    dedupReleasable(df, textCol, idCol, n, k, bands, threshold)._1
+    dedupReleasable(df, textCol, idCol, n, k, bands, threshold).df
 
-  /** [[dedup]] plus the release of its persisted signature frame; call
-    * the release only after the kept frame has been consumed. */
+  /** [[dedup]]'s kept frame, held with the release of its signature
+    * frame; release after the kept frame has been consumed. */
   private[graft] def dedupReleasable(df: DataFrame, textCol: String,
       idCol: String, n: Int = 3, k: Int = 64, bands: Int = 16,
-      threshold: Double = 0.7): (DataFrame, () => Unit) = {
+      threshold: Double = 0.7): graft.Cached.Held = {
     val lsh = Lsh(Xx, k, bands)
-    // Multi-consumer persist (r14): sigs feeds the rep collapse, the
+    // Multi-consumer cache (r14): sigs feeds the rep collapse, the
     // dup-loser join, AND (as repSigs) all four pair-core consumers.
-    val sigs = persisted(signatures(df, textCol, idCol, n, k))
+    val sigsHeld = graft.Cached.hold(signatures(df, textCol, idCol, n, k))
+    val sigs = sigsHeld.df
     val reps = sigs.groupBy(col("_gf_sig"))
       .agg(min(col("_gf_id")).as("_gf_rep"))
     // m×1 per signature group: skew-safe (the hot key meets ONE build row)
@@ -370,8 +359,8 @@ object MinHash {
     val repSigs = reps.select(col("_gf_rep").as("_gf_id"), col("_gf_sig"))
     val pairLosers = lsh.pairs(repSigs, threshold)
       .select(col("id_b").as("_gf_loser"))
-    (df.join(dupLosers.unionByName(pairLosers).distinct(),
-      df(idCol) === col("_gf_loser"), "left_anti"), () => sigs.unpersist())
+    graft.Cached.Held(df.join(dupLosers.unionByName(pairLosers).distinct(),
+      df(idCol) === col("_gf_loser"), "left_anti"), sigsHeld.release)
   }
 
   /** Persist a signature index — the state an INCREMENTAL near-dedup

@@ -78,19 +78,19 @@ object PortableMinHash {
 
   /** Candidate pairs surviving the band join and the estimator:
     * (id_a, id_b, est_jaccard), id_a < id_b, est >= threshold.
-    * CACHE CONTRACT: see [[MinHash.persisted]]. */
+    * Leaves its signature frame cached ([[MinHash.held]]). */
   def pairs(df: DataFrame, textCol: String, idCol: String,
             n: Int = 5, k: Int = 32, bands: Int = 16,
             threshold: Double = 0.5): DataFrame =
     MinHash.Lsh(Md5, k, bands).pairs(
-      MinHash.persisted(signatures(df, textCol, idCol, n, k)), threshold)
+      MinHash.held(signatures(df, textCol, idCol, n, k)), threshold)
 
   /** [[pairs]] over an already-tokenized array column. */
   def pairsOfTokens(df: DataFrame, toksCol: String, idCol: String,
                     n: Int, k: Int, bands: Int,
                     threshold: Double): DataFrame =
     MinHash.Lsh(Md5, k, bands).pairs(
-      MinHash.persisted(signaturesOfTokens(df, toksCol, idCol, n, k)), threshold)
+      MinHash.held(signaturesOfTokens(df, toksCol, idCol, n, k)), threshold)
 
   /** Exact n-gram Jaccard over portable-band candidates — row 48's
     * verifiable lane ([[NgramJaccard.pairs]] with this lane's candidate

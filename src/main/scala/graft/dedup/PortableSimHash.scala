@@ -42,8 +42,8 @@ object PortableSimHash {
       .select(col("_gf_id").as(idCol), col("_gf_sim").as("sig"))
 
   /** Pairs within `maxDist` Hamming bits (id_a < id_b, complete for
-    * maxDist < blocks): (id_a, id_b, hamming). CACHE CONTRACT: see
-    * [[SimHash.pairsOverSims]]. */
+    * maxDist < blocks): (id_a, id_b, hamming). Leaves its fingerprint
+    * frame cached ([[SimHash.pairsOverSims]]). */
   def pairs(df: DataFrame, textCol: String, idCol: String,
             maxDist: Int = 7, blocks: Int = 8): DataFrame =
     SimHash.pairsOverSims(simhashes(df, textCol, idCol), Bits, maxDist, blocks)

@@ -77,7 +77,7 @@ object SimHash {
 
   /** Candidate pairs within `maxDist` Hamming bits (idA < idB).
     * Complete for maxDist < blocks (pigeonhole), which is enforced.
-    * CACHE CONTRACT: see [[pairsOverSims]]. */
+    * Leaves its fingerprint frame cached ([[pairsOverSims]]). */
   def nearDuplicatePairs(df: DataFrame, textCol: String, idCol: String,
                          maxDist: Int = 3, blocks: Int = 4): DataFrame =
     pairsOverSims(simhashes(df, textCol, idCol), 64, maxDist, blocks)
@@ -93,27 +93,17 @@ object SimHash {
     * that do not split `bits` evenly and `maxDist >= blocks`, where the
     * pigeonhole rule no longer guarantees a shared block.
     *
-    * The family's one persist point: the fingerprint frame feeds BOTH
-    * sides of the self-join, and without a persist the tokenize → hash →
-    * bit-fold subtree executes twice (r14). One (id, long) row per doc —
-    * never corpus-sized.
-    *
-    * CACHE CONTRACT: the returned plan owns no action, so it cannot
-    * unpersist the frame, and it outlives the call. These public entry
-    * points leave one behind: [[nearDuplicatePairs]],
-    * [[nearDuplicatePairsOfTokens]] and [[PortableSimHash.pairs]].
-    * Long-lived sessions that call them repeatedly must clear or unpersist
-    * between calls (the Verify/Bench harnesses call
-    * `cacheManager.clearCache()` between queries). [[MinHash.persisted]]
-    * is the MinHash family's twin. */
+    * The family's one cache point: the fingerprint frame feeds BOTH
+    * sides of the self-join, and uncached the tokenize → hash → bit-fold
+    * subtree executes twice (r14). One (id, long) row per doc — never
+    * corpus-sized. The returned plan leaves it cached ([[graft.Cached]]). */
   private[dedup] def pairsOverSims(simFrame: DataFrame, bits: Int,
                                    maxDist: Int, blocks: Int): DataFrame = {
     require(blocks >= 1 && bits % blocks == 0,
       s"blocks=$blocks must divide $bits")
     require(maxDist < blocks,
       s"pigeonhole completeness needs maxDist < blocks, got $maxDist >= $blocks")
-    val sims = simFrame
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sims = graft.Cached.hold(simFrame).df
     val buckets = sims.select(col("_gf_id"), col("_gf_sim"),
       posexplode(array((0 until blocks).map(j =>
         bitBlock(col("_gf_sim"), j, bits / blocks)): _*)).as(Seq("_gf_block", "_gf_bv")))

@@ -33,10 +33,9 @@ object DataDictionary {
   }
 
   /** One row per column: semantic type, dtype, distinct/null counts,
-    * min/max example values. `exact=false` uses HLL distincts (100 TB
-    * path). */
-  def build(df: DataFrame, exact: Boolean = true): DataFrame =
-    graft.profile.Profiler.perColumn(df, exact) { f =>
+    * min/max example values. */
+  def build(df: DataFrame): DataFrame =
+    graft.profile.Profiler.perColumn(df, exact = true) { f =>
       val c = col(f.name)
       Seq(
         lit(f.name).as("column_name"),

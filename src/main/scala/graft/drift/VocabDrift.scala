@@ -46,12 +46,12 @@ object VocabDrift {
 
     val co = counts(oldDf, "c_old")
     val cn = counts(newDf, "c_new")
-    val joined = co.join(cn, Seq("term"), "full_outer")
+    // one shuffle feeds the scalar totals AND the top-K; the returned
+    // plan leaves it cached ([[graft.Cached]])
+    val joined = graft.Cached.hold(co.join(cn, Seq("term"), "full_outer")
       .select(col("term"),
         coalesce(col("c_old"), lit(0L)).as("c_old"),
-        coalesce(col("c_new"), lit(0L)).as("c_new"))
-      // one shuffle feeds the scalar totals AND the top-K
-      .persist()
+        coalesce(col("c_new"), lit(0L)).as("c_new"))).df
 
     // Exact scalar state: totals per side + the union-vocab size.
     val totals = joined.agg(

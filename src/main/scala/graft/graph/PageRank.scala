@@ -44,38 +44,16 @@ import org.apache.spark.sql.types.DecimalType
   * adjacency's partitioning, and the contribution aggregation combines
   * map-side (decimal sums are associative) so the per-iteration exchange
   * carries ≤ distinct-dst rows per partition, not edge rows. Lineage is
-  * truncated per round (the Components checkpoint discipline) — iterative
-  * plans otherwise grow exponentially and re-execute every prior round.
+  * truncated per round ([[graft.Cached.truncate]]) — iterative plans
+  * otherwise grow exponentially and re-execute every prior round — and
+  * each prior round is dropped once its successor is materialized, so a
+  * k-iteration walk does not hold k node-frames.
   *
   * Reference scope note: the reference toolkit has no graph module; this
   * is part of the training-data-pipeline surface (source-quality priors),
   * built on the public algorithm.
   */
 object PageRank {
-
-  private def truncate(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(true)
-    else df.localCheckpoint(true)
-
-  /** Release a PRIOR round's materialization once its successor is
-    * eagerly checkpointed (nothing references it anymore): reliable
-    * checkpoint files delete, localCheckpoint caches unpersist — a
-    * DataFrame.unpersist() alone is a no-op for both, so without this a
-    * k-iteration walk holds k node-frames (the Components.dropCheckpoint
-    * lesson). Best-effort: a failure costs memory, not correctness. */
-  private def dropRound(df: DataFrame): Unit =
-    try {
-      df.queryExecution.analyzed.collect {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-      }.foreach { r =>
-        r.getCheckpointFile.foreach { p =>
-          val path = new org.apache.hadoop.fs.Path(p)
-          path.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-            .delete(path, true): Unit
-        }
-        r.unpersist(blocking = false): Unit
-      }
-    } catch { case scala.util.control.NonFatal(_) => () }
 
   /** Ranks after `iterations` rounds: one row per node, columns
     * (`node` long, `rank` double, `scale`-dp). */
@@ -118,51 +96,50 @@ object PageRank {
       .distinct()
 
     // Adjacency with out-degree, partitioned ONCE on the join key and
-    // persisted: the per-iteration join re-shuffles only the rank side.
+    // cached: the per-iteration join re-shuffles only the rank side.
     val deg = e.groupBy("src").agg(count(lit(1)).as("out_deg"))
-    val adj = e.join(deg, "src")
-      .repartition(col("src"))
-      .persist()
+    val adj = graft.Cached.hold(e.join(deg, "src").repartition(col("src")))
 
     val nodesPlain = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
       .distinct()
     // _seed marks teleport targets; the uniform walk is "all seeds".
-    val nodes = (seedNodes match {
+    val nodesHeld = graft.Cached.hold(seedNodes match {
       case Some(sn) => nodesPlain
         .join(sn.withColumn("_seed", lit(true)), Seq("node"), "left")
         .na.fill(value = false, cols = Seq("_seed"))
       case None => nodesPlain.withColumn("_seed", lit(true))
-    }).persist()
+    })
+    val nodes = nodesHeld.df
 
-    var r = nodes.select(col("node"),
-      when(col("_seed"), lit(1.0)).otherwise(lit(0.0)).as("rank"))
-    var prev: Option[DataFrame] = None
-    (1 to iterations).foreach { _ =>
-      val contrib = adj
-        .join(r.withColumnRenamed("node", "src"), "src")
-        .select(col("dst"),
-          graft.Num.dround(col("rank") / col("out_deg"), scale)
-            .cast(DecimalType(30, scale)).as("c"))
-      val incoming = contrib.groupBy("dst").agg(sum("c").as("s"))
-      val iterated =
-        nodes.join(incoming, nodes("node") === incoming("dst"), "left")
-          .select(col("node"),
-            graft.Num.dround(
-              when(col("_seed"), lit(base)).otherwise(lit(0.0))
-                + lit(damping) * coalesce(col("s").cast("double"), lit(0.0)),
-              scale).as("rank"))
-      // checkpoint=false keeps the lazy iteration plan visible (plan
-      // pins, tiny graphs); real runs MUST truncate or the plan re-runs
-      // every prior round.
-      val next = if (checkpoint) truncate(iterated) else iterated
-      if (checkpoint) prev.foreach(dropRound)
-      prev = Some(next)
-      r = next
-    }
-    adj.unpersist()
-    nodes.unpersist()
-    r
+    try {
+      var r = nodes.select(col("node"),
+        when(col("_seed"), lit(1.0)).otherwise(lit(0.0)).as("rank"))
+      var prev: Option[DataFrame] = None
+      (1 to iterations).foreach { _ =>
+        val contrib = adj.df
+          .join(r.withColumnRenamed("node", "src"), "src")
+          .select(col("dst"),
+            graft.Num.dround(col("rank") / col("out_deg"), scale)
+              .cast(DecimalType(30, scale)).as("c"))
+        val incoming = contrib.groupBy("dst").agg(sum("c").as("s"))
+        val iterated =
+          nodes.join(incoming, nodes("node") === incoming("dst"), "left")
+            .select(col("node"),
+              graft.Num.dround(
+                when(col("_seed"), lit(base)).otherwise(lit(0.0))
+                  + lit(damping) * coalesce(col("s").cast("double"), lit(0.0)),
+                scale).as("rank"))
+        // checkpoint=false keeps the lazy iteration plan visible (plan
+        // pins, tiny graphs); real runs MUST truncate or the plan re-runs
+        // every prior round.
+        val next = if (checkpoint) graft.Cached.truncate(iterated) else iterated
+        if (checkpoint) prev.foreach(graft.Cached.drop)
+        prev = Some(next)
+        r = next
+      }
+      r
+    } finally Seq(nodesHeld, adj).foreach(_.release())
   }
 
   /** DuckDB mirror of the per-edge contribution fed to the exact sum. */

@@ -27,24 +27,21 @@ object Imputer {
 
   private def statName(c: String) = s"_gf_${c}_fill"
 
-  private def statAgg(df: DataFrame, c: String, s: ImputeStrategy,
-                      exact: Boolean): Option[Column] = s match {
+  private def statAgg(c: String, s: ImputeStrategy): Option[Column] = s match {
     case Mean =>
       val d = col(c).cast(DecimalType(30, 6))
       Some((sum(d).cast(DoubleType) / count(col(c))).as(statName(c)))
     case Median =>
-      val d = col(c).cast(DoubleType)
-      Some((if (exact) percentile(d, lit(0.5))
-            else percentile_approx(d, lit(0.5), lit(100000))).as(statName(c)))
+      Some(percentile(col(c).cast(DoubleType), lit(0.5)).as(statName(c)))
     case _ => None
   }
 
   /** 1-row frame holding every fill value (mode columns join in via their
     * own top-1 reductions). */
-  private def statsFrame(df: DataFrame, strategies: Map[String, ImputeStrategy],
-                         exact: Boolean): Option[DataFrame] = {
+  private def statsFrame(df: DataFrame,
+                         strategies: Map[String, ImputeStrategy]): Option[DataFrame] = {
     val aggs = strategies.toSeq.sortBy(_._1)
-      .flatMap { case (c, s) => statAgg(df, c, s, exact) }
+      .flatMap { case (c, s) => statAgg(c, s) }
     val base = if (aggs.nonEmpty) Some(df.agg(aggs.head, aggs.tail: _*)) else None
     val modes = strategies.toSeq.sortBy(_._1).collect { case (c, Mode) =>
       // Final .agg(first) guarantees exactly ONE row even when the column
@@ -62,10 +59,9 @@ object Imputer {
   /** Fill nulls per configured strategy; non-configured columns untouched.
     * Numeric columns filled with mean/median widen to double (Spark's
     * least-common-type rule — pandas upcasts the same way). */
-  def impute(df: DataFrame, strategies: Map[String, ImputeStrategy],
-             exact: Boolean = true): DataFrame = {
+  def impute(df: DataFrame, strategies: Map[String, ImputeStrategy]): DataFrame = {
     val present = strategies.filter { case (c, _) => df.columns.contains(c) }
-    statsFrame(df, present, exact) match {
+    statsFrame(df, present) match {
       case None =>
         // constants only
         present.foldLeft(df) {
@@ -97,15 +93,14 @@ object Imputer {
     * shuffle; Mode's per-group top-1 is a map-side `min_by` argmax
     * ((count desc, value asc) tie-break), never a window. */
   def imputeBy(df: DataFrame, groupCol: String,
-               strategies: Map[String, ImputeStrategy],
-               exact: Boolean = true): DataFrame = {
+               strategies: Map[String, ImputeStrategy]): DataFrame = {
     require(df.columns.contains(groupCol),
       s"imputeBy group column '$groupCol' not in ${df.columns.mkString(", ")}")
     val present = strategies.filter {
       case (c, _) => df.columns.contains(c) && c != groupCol
     }
     val aggs = present.toSeq.sortBy(_._1)
-      .flatMap { case (c, s) => statAgg(df, c, s, exact) }
+      .flatMap { case (c, s) => statAgg(c, s) }
     var out = df
     if (aggs.nonEmpty) {
       val stats = df.groupBy(col(groupCol)).agg(aggs.head, aggs.tail: _*)
@@ -131,14 +126,14 @@ object Imputer {
   /** Changelog — (column_name, strategy, fill_value, nulls_filled), the
     * reference's change_log_rows (impute_data.py:78-90). One extra
     * null-count pass; fill values ride the same stats frame. */
-  def changelog(df: DataFrame, strategies: Map[String, ImputeStrategy],
-                exact: Boolean = true): DataFrame = {
+  def changelog(df: DataFrame,
+                strategies: Map[String, ImputeStrategy]): DataFrame = {
     val present = strategies.filter { case (c, _) => df.columns.contains(c) }.toSeq.sortBy(_._1)
     val nullAggs = present.map { case (c, _) =>
       (count(lit(1)) - count(col(c))).cast(LongType).as(s"_gf_${c}_nulls")
     }
     val nulls = df.agg(nullAggs.head, nullAggs.tail: _*)
-    val withStats = statsFrame(df, present.toMap, exact)
+    val withStats = statsFrame(df, present.toMap)
       .map(nulls.crossJoin(_)).getOrElse(nulls)
     val entries = present.map { case (c, s) =>
       val strategyName = s match {

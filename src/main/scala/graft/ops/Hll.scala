@@ -181,10 +181,12 @@ object Hll {
     * cross-shard / cross-source contamination estimator at 100 TB: no
     * join of the corpora, just m-register arithmetic per pair. Ordered
     * pairs (a < b); `est_jaccard` clamps the (noisy, possibly negative)
-    * intersection at 0 before the ratio. */
+    * intersection at 0 before the ratio. The register frame feeds every
+    * estimate and both union sides; the returned plan leaves it cached
+    * ([[graft.Cached]]). */
   def overlap(df: DataFrame, keyCol: String, pairCol: String,
               p: Int = 8): DataFrame = {
-    val regs = registers(df, keyCol, Seq(pairCol), p).persist()
+    val regs = graft.Cached.hold(registers(df, keyCol, Seq(pairCol), p)).df
     val ests = estimateFromRegisters(regs, Seq(pairCol), p)
       .select(col(pairCol), col("est_distinct"))
     val pairs = ests.select(col(pairCol).as("id_a"))

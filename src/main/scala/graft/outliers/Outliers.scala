@@ -44,10 +44,9 @@ final case class Detection(
   * value-histogram path ([[graft.ops.Quantiles.contColumns]], r12) whose
   * state is one row per distinct value, not per row; a continuous column
   * has about as many distinct values as rows, though, and the ungrouped
-  * cumulative window runs that histogram in one task. `exact=false`
-  * switches to the `percentile_approx` sketch; only MAD's deviation
-  * median still buffers (its operands are interpolation results, outside
-  * the fixed-precision histogram contract).
+  * cumulative window runs that histogram in one task. Only MAD's
+  * deviation median still buffers (its operands are interpolation
+  * results, outside the fixed-precision histogram contract).
   */
 object Outliers {
 
@@ -69,15 +68,12 @@ object Outliers {
     * column, in one window task (see contColumns). MAD's deviation
     * median stays on `percentile()` — deviations are interpolation
     * RESULTS, not fixed-precision data, so the histogram contract does
-    * not hold for them; `exact = false` keeps the sketch everywhere. */
-  private def boundsFrame(df: DataFrame, specs: Map[String, DetectMethod],
-                          exact: Boolean): DataFrame = {
-    def pct(c: Column, ps: Column): Column =
-      if (exact) percentile(c, ps) else percentile_approx(c, ps, lit(100000))
+    * not hold for them. */
+  private def boundsFrame(df: DataFrame,
+                          specs: Map[String, DetectMethod]): DataFrame = {
     val sorted = specs.toSeq.sortBy(_._1)
     val iqrFrames: Seq[DataFrame] =
-      if (!exact) Seq.empty
-      else sorted.collect { case (c0, Iqr(k)) =>
+      sorted.collect { case (c0, Iqr(k)) =>
         graft.ops.Quantiles.contColumns(
             df.select(col(c0).cast(DoubleType).as(c0)), c0, Seq.empty,
             Seq(0.25 -> "_gf_q1", 0.75 -> "_gf_q3"))
@@ -90,19 +86,12 @@ object Outliers {
     val aggs = sorted.flatMap { case (c0, m) =>
       val c = col(c0).cast(DoubleType)
       m match {
-        case Iqr(_) if exact => Seq.empty // histogram lane above
-        case Iqr(k) =>
-          // one percentile aggregate with both percentages — two separate
-          // percentile() calls each buffer + sort the column independently
-          val qs = pct(c, array(lit(0.25), lit(0.75)))
-          val q1 = element_at(qs, 1); val q3 = element_at(qs, 2)
-          Seq((q1 - lit(k) * (q3 - q1)).as(lowerName(c0)),
-              (q3 + lit(k) * (q3 - q1)).as(upperName(c0)))
+        case Iqr(_) => Seq.empty // histogram lane above
         case ZScore(t) =>
           Seq((avg(c) - lit(t) * stddev_samp(c)).as(lowerName(c0)),
               (avg(c) + lit(t) * stddev_samp(c)).as(upperName(c0)))
         case Mad(_) =>
-          Seq(pct(c, lit(0.5)).as(s"_gf_${c0}_med"))
+          Seq(percentile(c, lit(0.5)).as(s"_gf_${c0}_med"))
       }
     }
     val pieces =
@@ -116,7 +105,7 @@ object Outliers {
         madSpecs.map { case (c0, _) => col(s"_gf_${c0}_med") }: _*)
       val madAggs = madSpecs.map { case (c0, _) =>
         val c = col(c0).cast(DoubleType)
-        pct(abs(c - col(s"_gf_${c0}_med")), lit(0.5)).as(s"_gf_${c0}_madv")
+        percentile(abs(c - col(s"_gf_${c0}_med")), lit(0.5)).as(s"_gf_${c0}_madv")
       }
       val pass2 = df.crossJoin(broadcast(meds))
         .agg(madAggs.head, madAggs.tail: _*)
@@ -134,9 +123,8 @@ object Outliers {
 
   /** Flag outliers per configured column (detect_outliers.py:32-90).
     * Nulls are never outliers (reference dropna semantics). */
-  def detect(df: DataFrame, specs: Map[String, DetectMethod],
-             exact: Boolean = true): Detection = {
-    val bounds = boundsFrame(df, specs, exact)
+  def detect(df: DataFrame, specs: Map[String, DetectMethod]): Detection = {
+    val bounds = boundsFrame(df, specs)
     var flagged = df.crossJoin(broadcast(bounds))
     val flagCols = specs.toSeq.sortBy(_._1).map { case (c0, m) =>
       val f = flagName(c0, m)
@@ -176,8 +164,8 @@ object Outliers {
     * extra pass and broadcast back (the reference computes the same scalars
     * driver-side). Returns the cleaned frame with flag/bound columns
     * dropped. */
-  def handle(det: Detection, strategies: Map[String, HandleStrategy],
-             exact: Boolean = true): DataFrame = {
+  def handle(det: Detection,
+             strategies: Map[String, HandleStrategy]): DataFrame = {
     val base = det.flagged
     if (strategies.valuesIterator.contains(DropRows)) {
       return base.filter(!col("any_outlier"))
@@ -188,14 +176,10 @@ object Outliers {
     val statAggs = strategies.toSeq.sortBy(_._1).flatMap {
       case (c0, ReplaceMean) =>
         Some(avg(col(c0).cast(DoubleType)).as(s"_gf_${c0}_mean"))
-      case (c0, ReplaceMedian) if !exact =>
-        Some(percentile_approx(col(c0).cast(DoubleType), lit(0.5),
-          lit(100000)).as(s"_gf_${c0}_med"))
       case _ => None
     }
     val medFrames =
-      if (!exact) Seq.empty
-      else strategies.toSeq.sortBy(_._1).collect { case (c0, ReplaceMedian) =>
+      strategies.toSeq.sortBy(_._1).collect { case (c0, ReplaceMedian) =>
         graft.ops.Quantiles.contColumns(
           base.select(col(c0).cast(DoubleType).as(c0)), c0, Seq.empty,
           Seq(0.5 -> s"_gf_${c0}_med"))
@@ -244,8 +228,7 @@ object Outliers {
     * Output: (group, column_name, method, n, outlier_count,
     * lower_bound, upper_bound). */
   def logBy(df: DataFrame, groupCol: String,
-            specs: Map[String, DetectMethod],
-            exact: Boolean = true): DataFrame = {
+            specs: Map[String, DetectMethod]): DataFrame = {
     require(specs.nonEmpty, "logBy needs at least one column spec")
     specs.collect { case (c, m: Mad) => c }.headOption.foreach { c =>
       throw new IllegalArgumentException(
@@ -253,16 +236,13 @@ object Outliers {
           "median-of-deviations needs a second grouped shuffle) — use Iqr " +
           "or ZScore, or global Mad via detect()")
     }
-    def pct(c: Column, ps: Column): Column =
-      if (exact) percentile(c, ps) else percentile_approx(c, ps, lit(100000))
     val sorted = specs.toSeq.sortBy(_._1)
     // exact per-group IQR quantiles ride the bounded histogram (see
     // boundsFrame); groups whose column is all-null drop out of a
     // histogram frame, so the left joins below restore them with null
     // bounds — exactly percentile()'s null result for such a group
     val iqrFrames: Seq[DataFrame] =
-      if (!exact) Seq.empty
-      else sorted.collect { case (c0, Iqr(k)) =>
+      sorted.collect { case (c0, Iqr(k)) =>
         graft.ops.Quantiles.contColumns(
             df.select(col(groupCol), col(c0).cast(DoubleType).as(c0)),
             c0, Seq(groupCol), Seq(0.25 -> "_gf_q1", 0.75 -> "_gf_q3"))
@@ -275,12 +255,7 @@ object Outliers {
     val aggs = sorted.flatMap { case (c0, m) =>
       val c = col(c0).cast(DoubleType)
       m match {
-        case Iqr(_) if exact => Seq.empty // histogram lane above
-        case Iqr(k) =>
-          val qs = pct(c, array(lit(0.25), lit(0.75)))
-          val q1 = element_at(qs, 1); val q3 = element_at(qs, 2)
-          Seq((q1 - lit(k) * (q3 - q1)).as(lowerName(c0)),
-              (q3 + lit(k) * (q3 - q1)).as(upperName(c0)))
+        case Iqr(_) => Seq.empty // histogram lane above
         case ZScore(t) =>
           Seq((avg(c) - lit(t) * stddev_samp(c)).as(lowerName(c0)),
               (avg(c) + lit(t) * stddev_samp(c)).as(upperName(c0)))

@@ -10,7 +10,6 @@ import graft.text.{CorpusOps, GopherRules, TextAnalysis}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.plans.logical.LeafNode
 import org.apache.spark.sql.functions.{col, lit}
-import org.apache.spark.storage.StorageLevel
 
 /** One pipeline stage — the typed counterpart of a reference module
   * invocation in `run_toolkit_pipeline.py` (each m0X module consumes the
@@ -99,9 +98,9 @@ final case class QuotaStage(groupCol: String, keyCol: String,
   * its bounds aggregates, the handled frame and its log, `impute`
   * through its fill statistics, the filled frame and its changelog.
   * Left as one plan, each such stage multiplies the recomputation of
-  * everything upstream of it, so `run` persists their input
-  * (MEMORY_AND_DISK, still lazy: the cache fills during the caller's
-  * first action) and the whole chain runs once. For the QA chain
+  * everything upstream of it, so `run` holds their input
+  * ([[graft.Cached.hold]]: still lazy, the cache fills during the
+  * caller's first action) and the whole chain runs once. For the QA chain
   * normalize → validate → dedup → outliers → impute, writing the bundle
   * ([[Artifacts.write]]) then evaluates each input row 2 times instead
   * of 7, and a warm write of 20k generated lineitem rows on 4 local
@@ -110,7 +109,7 @@ final case class QuotaStage(groupCol: String, keyCol: String,
   * the gopher/mojibake audits, `embedding_centroids`) stay uncached:
   * there a cache costs more than the re-read. A leaf input (a file scan,
   * a checkpoint) is not cached either; an input the caller already
-  * cached is reused, and stays the caller's to release.
+  * cached stays the caller's ([[graft.Cached]]).
   *
   * Build sides are eager the way any broadcast build is: `decontaminate`
   * builds its Bloom filter (two benchmark-sized jobs plus the bench
@@ -119,30 +118,26 @@ final case class QuotaStage(groupCol: String, keyCol: String,
   */
 object Pipeline {
 
-  /** `release()` unpersists what `run` cached: the stage inputs named
-    * above (`outliers` and `impute` among them), `near_dedup`'s
-    * signature frame and the build-side state of `lm_filter`/`ft_filter`.
-    * Call it AFTER `df` and every report you need are materialized — the
-    * frames stay correct afterwards (they recompute on access), but the
-    * caching benefit is gone. A caller that never calls it keeps those
-    * caches until the session's `catalog.clearCache()`. Idempotent; a
-    * no-op for pipelines with nothing cached. */
+  /** `release()` runs the handles of what `run` cached (the
+    * [[graft.Cached]] contract): the stage inputs named above,
+    * `near_dedup`'s signature frame and the build-side state of
+    * `lm_filter`/`ft_filter`. Call it after `df` and every report you
+    * need are materialized. */
   final case class Result(df: DataFrame, reports: Map[String, DataFrame],
                           release: () => Unit = () => ())
 
   def run(df: DataFrame, stages: Seq[Stage]): Result = {
     val reports = Map.newBuilder[String, DataFrame]
     val releasables = Seq.newBuilder[() => Unit]
-    /** The input of a stage that reads it more than once, persisted
-      * once. A leaf input (a file scan, a checkpoint) has no upstream
-      * work to save, and a cached one is already read once. */
+    /** The input of a stage that reads it more than once, held once. A
+      * leaf input (a file scan, a checkpoint) has no upstream work to
+      * save. */
     def cachedInput(input: DataFrame): DataFrame =
-      if (input.queryExecution.logical.isInstanceOf[LeafNode] ||
-          input.storageLevel != StorageLevel.NONE) input
+      if (input.queryExecution.logical.isInstanceOf[LeafNode]) input
       else {
-        val cached = input.persist(StorageLevel.MEMORY_AND_DISK)
-        releasables += (() => cached.unpersist())
-        cached
+        val held = graft.Cached.hold(input)
+        releasables += held.release
+        held.df
       }
     val out = stages.zipWithIndex.foldLeft(df) { case (in, (stage, i)) =>
       val acc = stage match {
@@ -192,10 +187,10 @@ object Pipeline {
           // the report above (is_clean false, never null)
           acc.filter(TextAnalysis.isCleanText(col(textCol)))
         case NearDedupStage(textCol, idCol, threshold) =>
-          val (kept, releaseSigs) = graft.dedup.MinHash.dedupReleasable(
+          val kept = graft.dedup.MinHash.dedupReleasable(
             acc, textCol, idCol, threshold = threshold)
-          releasables += releaseSigs
-          kept
+          releasables += kept.release
+          kept.df
         case SpanDedupStage(textCol, idCol, n) =>
           val cleaned = CorpusOps.dedupeSpans(
             acc.select(col(idCol), col(textCol)), idCol, textCol, n)

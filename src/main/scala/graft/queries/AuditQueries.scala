@@ -859,7 +859,7 @@ object AuditQueries {
         FROM c""")),
 
     Q("data_dictionary",
-      (s, dir) => DataDictionary.build(Tables.customer(s, dir), exact = true),
+      (s, dir) => DataDictionary.build(Tables.customer(s, dir)),
       Some {
         val cols = Seq(
           ("c_acctbal", "double", "'numeric'"),

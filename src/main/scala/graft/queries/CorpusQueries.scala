@@ -841,11 +841,11 @@ object CorpusQueries {
             hashKeys = true)
           .filter(col("avg_logprob") >= LmGateMinLogprob).select("doc_id")
         val lmKept = gophed.join(lmKeep, Seq("doc_id"), "left_semi")
-        // Same multi-consumer persist as the portable twin (the
+        // Same multi-consumer cache as the portable twin (the
         // decontamination explode and the clean-side anti-join both
         // re-derive this prefix otherwise).
-        val exact = graft.dedup.LlmDedup.exact(lmKept, "text", "doc_id")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val exact = graft.Cached.hold(
+          graft.dedup.LlmDedup.exact(lmKept, "text", "doc_id")).df
         val contaminated = CorpusOps.decontaminate(exact, bench, "doc_id", "text", n = 8)
         val clean = exact.join(contaminated.select("doc_id"), Seq("doc_id"), "left_anti")
         val capped = Quota.capPerGroup(clean, "source", "doc_id", n = 20)
@@ -930,20 +930,20 @@ object CorpusQueries {
         val lmKept = gophed.join(lmKeep, Seq("doc_id"), "left_semi")
         // The gate+LM+dedup prefix feeds THREE consumers downstream (the
         // signature build, the near-dup anti-join, and the clean-side
-        // continuation); without a persist each consumer re-executes the
+        // continuation); uncached, each consumer re-executes the
         // whole redact→gates→LM-score chain — measured 22.9 s → 8.3 s
         // at sf0.1 from this one materialization. Verify/Bench clear the
         // cache between queries, so nothing leaks across the registry.
-        val exact = graft.dedup.LlmDedup.exact(lmKept, "text", "doc_id")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val exact = graft.Cached.hold(
+          graft.dedup.LlmDedup.exact(lmKept, "text", "doc_id")).df
         val nearKept = graft.dedup.PortableMinHash.kept(exact,
           "text", "doc_id", n = 5, k = 32, bands = 16, threshold = 0.5)
         // `near` feeds TWO consumers (the decontamination gram explode
         // and the clean-side anti-join continuation); without its own
-        // persist each re-runs the md5 signature build + band join above
-        // it (r15, measured on top of the r14 `exact` persist).
-        val near = exact.join(nearKept, Seq("doc_id"), "left_semi")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        // cache each re-runs the md5 signature build + band join above
+        // it (r15, measured on top of the r14 `exact` cache).
+        val near = graft.Cached.hold(
+          exact.join(nearKept, Seq("doc_id"), "left_semi")).df
         val contaminated = CorpusOps.decontaminate(near, bench,
           "doc_id", "text", n = 8)
         val clean = near.join(contaminated.select("doc_id"),

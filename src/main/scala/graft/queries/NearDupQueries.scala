@@ -200,20 +200,18 @@ object NearDupQueries {
         // split(lower(trim(text))) runs once instead of once per
         // pipeline. Values are unchanged — the *OfTokens variants build
         // the identical shingle/gram/hash expressions over the
-        // pre-materialized token array (corpus-sized persist,
-        // MEMORY_AND_DISK; harnesses clear caches between queries).
-        val tok = corpus.select(col("doc_id"),
-            graft.text.TextAnalysis.tokens(col("text")).as("_gf_toks"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        // pre-materialized token array (corpus-sized cache; harnesses
+        // clear caches between queries).
+        val tok = graft.Cached.hold(corpus.select(col("doc_id"),
+            graft.text.TextAnalysis.tokens(col("text")).as("_gf_toks"))).df
         // ONE signature pass for both MinHash-family detectors (r14): the
         // minhash and jaccard rows share the same (n=5, k=64) signature
         // table — candidates for both come from one persisted frame
         // instead of two independent shingle→hash→lane passes. Values are
         // unchanged: sigPairs at 0.5 IS the minhash detector, and
         // jaccard's candidate generator was always sigPairs at 0.3.
-        val sharedSigs = MinHash.signaturesOfTokens(tok, "_gf_toks",
-            "doc_id", n = 5, k = 64)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val sharedSigs = graft.Cached.hold(MinHash.signaturesOfTokens(tok,
+            "_gf_toks", "doc_id", n = 5, k = 64)).df
         val methods = Seq(
           "minhash" -> MinHash.sigPairs(sharedSigs, k = 64, bands = 16,
             threshold = 0.5),
@@ -847,7 +845,7 @@ object NearDupQueries {
         val combined = graft.sim.IvfPq.build(ivf, pq)
         val tmp = scratchIndexDir(s, "ivfpq-q", dir)
         graft.sim.IvfPq.writeIndex(combined, tmp)
-        ivf.release(); pq.release(); combined.coCodes.unpersist(false)
+        combined.release()
         val reopened = graft.sim.IvfPq.readIndex(s, tmp)
         graft.sim.IvfPq.topK(reopened, e.filter(col("vec_id") < 5),
             "vec_id", "embedding", k = 10, nprobe = 2)

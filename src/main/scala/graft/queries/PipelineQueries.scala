@@ -34,7 +34,7 @@ object PipelineQueries {
   /** The chain's frame, materialized so the run's caches can be released
     * before the query returns. */
   private def chainResult(r: Pipeline.Result) = {
-    val out = r.df.localCheckpoint(eager = true)
+    val out = graft.Cached.truncate(r.df)
     r.release()
     out.select(col("o_orderkey"), col("o_orderstatus"),
       graft.Num.dround(col("o_totalprice"), 2).as("o_totalprice"))

@@ -263,11 +263,10 @@ object SamplingQueries {
           .select("doc_id", "text")
         // Consumed twice (pair generation + the anti-join base): at real
         // scale you checkpoint this intermediate to storage; here the
-        // in-plan persist is the same move (r14 — safe now that BOTH
+        // in-plan cache is the same move (r14 — safe now that BOTH
         // harnesses clear the cache between queries AND between samples,
         // so nothing leaks into later measurements).
-        val exact = LlmDedup.exact(gated, "text", "doc_id")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val exact = graft.Cached.hold(LlmDedup.exact(gated, "text", "doc_id")).df
         val pairs = MinHash.nearDuplicatePairs(exact, "text", "doc_id",
           n = 5, k = 64, bands = 16, threshold = 0.6)
         val deduped = Components.dedupByComponent(exact, "doc_id", pairs)

@@ -61,27 +61,22 @@ object Ivf {
                            iters: Int, seed: Long)
 
   /** `coarse`: Kc rows (_gf_ccid, _gf_ccv). `cells`: ≈K rows
-    * (_gf_ccid, _gf_cid, _gf_cv), cached. `indexed`: corpus rows
+    * (_gf_ccid, _gf_cid, _gf_cv). `indexed`: corpus rows
     * (_gf_cid, _gf_id, _gf_v). `meta`: train-time parameters — always
     * present for [[train]]ed and [[readIndex]]-ed indices; None only for
-    * hand-assembled frames (then dim validation is skipped). */
+    * hand-assembled frames (then dim validation is skipped). [[train]]
+    * caches `coarse` and `cells` (every probe re-reads them); `held` are
+    * their handles, which [[release]] runs ([[graft.Cached]]). */
   final case class IvfIndex(coarse: DataFrame, cells: DataFrame,
                             indexed: DataFrame,
-                            meta: Option[IvfMeta] = None) {
+                            meta: Option[IvfMeta] = None,
+                            held: Seq[graft.Cached.Held] = Nil) {
     /** Number of fine cells actually trained (≈ the requested k). */
     def numCells: Long = cells.count()
 
-    /** Release the cached centroid frames. [[train]] caches `coarse` and
-      * `cells` for the lifetime of the session (every probe re-reads
-      * them); a long-lived driver that trains repeatedly must call this
-      * once the index (or anything derived from its lazy `indexed` plan)
-      * is no longer needed, or cached blocks accumulate per train() call.
-      * Blocking=false: outstanding jobs finish their reads. */
-    def release(): Unit = {
-      coarse.unpersist(false)
-      cells.unpersist(false)
-      ()
-    }
+    /** Release the trained centroid caches once the index (and anything
+      * derived from its lazy `indexed` plan) is no longer needed. */
+    def release(): Unit = held.foreach(_.release())
   }
 
   private def cosDist(v: Column, c: Column): Column =
@@ -138,7 +133,6 @@ object Ivf {
           "cast the embedding column first")
     }
     val spark = corpus.sparkSession
-    import spark.implicits._
     // Size the TRAINING-LOOP partitioning by corpus volume, not scan
     // width (the FastText epoch-partitioning lesson, r15): every Lloyd
     // round replays this frame, and each replay pays per-task scheduling
@@ -149,22 +143,33 @@ object Ivf {
     // healthy partitions at 100 TB; HASH partitioning by _gf_id both
     // skips round-robin's sort-before-repartition guard and lets the
     // per-round assignment groupBy(_gf_id) reuse the partitioning. The
-    // persist is released before returning; one count job materializes
+    // cache is released before returning; one count job materializes
     // it (the kc > 1 quota path needed that count anyway).
-    val base0 = corpus.select(col(idCol).as("_gf_id"), col(vecCol).as("_gf_v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nRows = base0.count()
-    val loopParts = math.max(1L, math.min(nRows / 65536L + 1L,
-      spark.sparkContext.defaultParallelism.toLong * 16L)).toInt
-    val base =
-      if (loopParts >= base0.rdd.getNumPartitions) base0
+    val base0 = graft.Cached.hold(
+      corpus.select(col(idCol).as("_gf_id"), col(vecCol).as("_gf_v")))
+    val (base, nRows) = graft.Cached.guard(base0) {
+      val nRows = base0.df.count()
+      val loopParts = math.max(1L, math.min(nRows / 65536L + 1L,
+        spark.sparkContext.defaultParallelism.toLong * 16L)).toInt
+      if (loopParts >= base0.df.rdd.getNumPartitions) (base0, nRows)
       else {
-        val re = base0.repartition(loopParts, col("_gf_id"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        re.count(): Unit // materialize before releasing the wide cache
-        base0.unpersist(false)
-        re
+        val re = graft.Cached.hold(base0.df.repartition(loopParts, col("_gf_id")))
+        // materialize before releasing the wide cache
+        graft.Cached.guard(re)(re.df.count()): Unit
+        base0.release()
+        (re, nRows)
       }
+    }
+    try trainOver(base.df, nRows, k, iters, seed)
+    finally base.release()
+  }
+
+  /** [[trainSized]]'s Lloyd rounds over the cached, loop-partitioned
+    * `(_gf_id, _gf_v)` frame of `nRows` rows. */
+  private def trainOver(base: DataFrame, nRows: Long, k: Int, iters: Int,
+                        seed: Long): IvfIndex = {
+    val spark = base.sparkSession
+    import spark.implicits._
 
     // ---- coarse level: Kc = ceil(sqrt(k)) when k is large ----
     // For small k a single level is both cheaper (no extra corpus pass)
@@ -203,26 +208,33 @@ object Ivf {
         means.get(ci).map(_.toArray).getOrElse(old)
       }
     }
-    val coarse = coarseDf(coarseSeq).cache()
+    val coarse = graft.Cached.hold(coarseDf(coarseSeq))
     // Training touches the coarse assignment for the quota count, the seed
     // materialization, every fine Lloyd round, and the final assignment —
-    // persist it for the duration (MEMORY_AND_DISK: corpus-sized, so it
-    // spills instead of OOMing; at extreme scale checkpoint to storage
-    // instead) and release it before returning. The kc == 1 path is a
-    // constant column over the already-persisted `base` — no second
-    // corpus-sized cache needed.
-    val baseC = if (kc == 1) base.withColumn("_gf_ccid", lit(0))
-                else assignCoarse(base, coarse) // (_gf_id, _gf_v, _gf_ccid)
-                  .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // cache it for the duration (MEMORY_AND_DISK: corpus-sized, so it
+    // spills instead of OOMing) and release it before returning. The
+    // kc == 1 path is a constant column over the already-cached `base` —
+    // no second corpus-sized cache needed.
+    val baseC =
+      if (kc == 1) graft.Cached.Held(base.withColumn("_gf_ccid", lit(0)), () => ())
+      else graft.Cached.hold(assignCoarse(base, coarse.df)) // (_gf_id, _gf_v, _gf_ccid)
+    try graft.Cached.guard(coarse)(trainFine(baseC.df, coarse, nRows, kc, k, iters, seed,
+      coarseSeq.headOption.map(_.length).getOrElse(0)))
+    finally baseC.release()
+  }
 
-    // ---- fine level: per-cell sub-centroids, never collected ----
+  /** The fine level: per-cell sub-centroids over the coarse-assigned
+    * `baseC`, never collected. */
+  private def trainFine(baseC: DataFrame, coarse: graft.Cached.Held,
+                        nRows: Long, kc: Int, k: Int, iters: Int, seed: Long,
+                        dim: Int): IvfIndex = {
     val rankW = Window.partitionBy("_gf_ccid")
       .orderBy(xxhash64(col("_gf_id"), lit(seed)), col("_gf_id"))
     val seedCandidates =
       if (kc == 1) {
         // distributed top-k by hash (TakeOrdered — no single-partition
         // window over the corpus); the per-cell window then ranks only
-        // these k rows. Reads the persisted baseC (same rows, constant
+        // these k rows. Reads the cached baseC (same rows, constant
         // _gf_ccid = 0 already attached) instead of re-scanning.
         baseC.orderBy(xxhash64(col("_gf_id"), lit(seed)), col("_gf_id"))
           .limit(k).withColumn("_gf_q", lit(k))
@@ -244,19 +256,18 @@ object Ivf {
           .select("_gf_ccid", "_gf_q")
         baseC.join(broadcast(quota), Seq("_gf_ccid"))
       }
-    var cells = seedCandidates
+    var cells = graft.Cached.hold(seedCandidates
       .withColumn("_gf_rk", row_number().over(rankW))
       .filter(col("_gf_rk") <= col("_gf_q"))
       .select(col("_gf_ccid"),
         (col("_gf_ccid").cast("long") * k + (col("_gf_rk") - 1)).as("_gf_cid"),
-        col("_gf_v").as("_gf_cv"))
-      .cache()
+        col("_gf_v").as("_gf_cv")))
     // the materializing count doubles as the cell tally for the manifest
     // (Lloyd's left join preserves the row set, so it never changes)
-    var nCells = cells.count()
+    var nCells = graft.Cached.guard(cells)(cells.df.count())
 
     for (_ <- 1 to iters) {
-      val assigned = assignFine(baseC, cells) // (_gf_id, _gf_v, _gf_cid)
+      val assigned = assignFine(baseC, cells.df) // (_gf_id, _gf_v, _gf_cid)
       // distributed Lloyd update: K×dim means stay in a DataFrame
       // (exact graft.Num.qmean — layout-independent, see above)
       val means = assigned
@@ -267,24 +278,20 @@ object Ivf {
         .agg(transform(array_sort(collect_list(struct(col("_gf_pos"), col("_gf_m")))),
           s => s.getField("_gf_m").cast("float")).as("_gf_nv"))
       // empty fine cells keep their previous centroid
-      val next = cells.join(means, Seq("_gf_cid"), "left")
+      val next = graft.Cached.hold(cells.df.join(means, Seq("_gf_cid"), "left")
         .select(col("_gf_ccid"), col("_gf_cid"),
-          coalesce(col("_gf_nv"), col("_gf_cv")).as("_gf_cv"))
-        .cache()
-      nCells = next.count()
-      cells.unpersist()
+          coalesce(col("_gf_nv"), col("_gf_cv")).as("_gf_cv")))
+      try nCells = graft.Cached.guard(next)(next.df.count())
+      finally cells.release()
       cells = next
     }
 
-    val indexed = assignFine(baseC, cells)
+    // training is done with base/baseC once this returns; consumers of
+    // the (lazy) indexed plan recompute the assignment once per action
+    val indexed = assignFine(baseC, cells.df)
       .select(col("_gf_cid"), col("_gf_id"), col("_gf_v"))
-    // training is done with base/baseC; consumers of the (lazy) indexed
-    // plan recompute the assignment once per action, as before
-    if (kc > 1) baseC.unpersist(false)
-    base.unpersist(false)
-    val dim = coarseSeq.headOption.map(_.length).getOrElse(0)
-    IvfIndex(coarse, cells, indexed,
-      Some(IvfMeta(dim, kc, nCells, "cosine", iters, seed)))
+    IvfIndex(coarse.df, cells.df, indexed,
+      Some(IvfMeta(dim, kc, nCells, "cosine", iters, seed)), Seq(cells, coarse))
   }
 
   /** Persist a trained index: `coarse` and `cells` as plain parquet,
@@ -325,8 +332,8 @@ object Ivf {
     * comes back via directory inference (possibly narrowed to int), so it
     * is cast back to long and the column order restored. Frames are NOT
     * cached here — `coarse`/`cells` are Kc- and K-row parquet reads;
-    * cache them via `index.coarse.cache()` if a driver probes in a tight
-    * loop, and release with [[IvfIndex.release]]. */
+    * hold them ([[graft.Cached.hold]]) if a driver probes in a tight
+    * loop. */
   def readIndex(spark: org.apache.spark.sql.SparkSession, path: String): IvfIndex = {
     val meta = readManifest(spark, path)
     val coarse = spark.read.parquet(s"$path/coarse")
@@ -394,15 +401,15 @@ object Ivf {
           "would duplicate rows in every probe; dedup the batch or use " +
           "fresh ids")
     }
-    val assigned = assignFine(assignCoarse(base, coarse), cells)
-      .select(col("_gf_cid"), col("_gf_id"), col("_gf_v"))
-    val n = assigned.cache().count()
-    val staging = stageAppend(spark, path,
-      out => assigned.repartition(col("_gf_cid"))
-        .write.mode("overwrite").partitionBy("_gf_cid").parquet(out))
-    promoteStaged(spark, staging, s"$path/indexed", partitioned = true)
-    assigned.unpersist(false)
-    n
+    graft.Cached.using(assignFine(assignCoarse(base, coarse), cells)
+        .select(col("_gf_cid"), col("_gf_id"), col("_gf_v"))) { assigned =>
+      val n = assigned.count()
+      val staging = stageAppend(spark, path,
+        out => assigned.repartition(col("_gf_cid"))
+          .write.mode("overwrite").partitionBy("_gf_cid").parquet(out))
+      promoteStaged(spark, staging, s"$path/indexed", partitioned = true)
+      n
+    }
   }
 
   /** Write an append batch under `<path>/.append-staging-<uuid>` — the dot

@@ -42,16 +42,16 @@ import org.apache.spark.sql.functions._
 object IvfPq {
 
   /** `coCodes`: corpus rows (_gf_cid, _gf_id, _gf_code) — the inverted
-    * lists with byte codes in place of vectors. */
+    * lists with byte codes in place of vectors. The composite owns the
+    * caches of both children: [[release]] runs its own handles (`held`),
+    * then theirs ([[graft.Cached]]). */
   final case class IvfPqIndex(ivf: Ivf.IvfIndex, pq: Pq.PqIndex,
-                              coCodes: DataFrame) {
-    /** Unpersist the composite's cache and both children's (idempotent;
-      * probing afterwards recomputes instead of reading the cache). */
+                              coCodes: DataFrame,
+                              held: Seq[graft.Cached.Held] = Nil) {
     def release(): Unit = {
-      coCodes.unpersist(false)
+      held.foreach(_.release())
       ivf.release()
       pq.release()
-      ()
     }
   }
 
@@ -62,28 +62,26 @@ object IvfPq {
     * and the inner join would silently drop it — so build COUNTS both
     * sides and raises on mismatch (one extra pair of count jobs at build
     * time, on the same cached frames the join reads anyway). */
-  def build(ivf: Ivf.IvfIndex, pq: Pq.PqIndex): IvfPqIndex = {
+  def build(ivf: Ivf.IvfIndex, pq: Pq.PqIndex): IvfPqIndex =
     // `ivf.indexed` is a lazy assignment subplan (join + two aggregates
     // over the corpus); it feeds BOTH the join and the integrity count —
-    // persist it for the build's duration so the assignment runs once
-    // (r15; released below once coCodes is materialized).
-    val cells = ivf.indexed.select(col("_gf_cid"), col("_gf_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val coCodes = cells.join(pq.codes, Seq("_gf_id"))
-      .select(col("_gf_cid"), col("_gf_id"), col("_gf_code"))
-      .cache()
-    // both directions: a SUBSET index joins cleanly against the larger
-    // one, so comparing the join count to only one side would miss it
-    val joined = coCodes.count()
-    val nPq = pq.codes.count()
-    val nIvf = cells.count()
-    cells.unpersist(false)
-    if (joined != nPq || joined != nIvf) throw new IllegalArgumentException(
-      s"IvfPq.build: IVF and PQ indexes disagree — $nIvf cell-assigned " +
-        s"vectors, $nPq coded vectors, $joined joined rows; the indexes " +
-        "were not built from the same corpus (or ids collide)")
-    IvfPqIndex(ivf, pq, coCodes)
-  }
+    // cache it for the build's duration so the assignment runs once (r15)
+    graft.Cached.using(ivf.indexed.select(col("_gf_cid"), col("_gf_id"))) { cells =>
+      val coCodes = graft.Cached.hold(cells.join(pq.codes, Seq("_gf_id"))
+        .select(col("_gf_cid"), col("_gf_id"), col("_gf_code")))
+      graft.Cached.guard(coCodes) {
+        // both directions: a SUBSET index joins cleanly against the larger
+        // one, so comparing the join count to only one side would miss it
+        val joined = coCodes.df.count()
+        val nPq = pq.codes.count()
+        val nIvf = cells.count()
+        if (joined != nPq || joined != nIvf) throw new IllegalArgumentException(
+          s"IvfPq.build: IVF and PQ indexes disagree — $nIvf cell-assigned " +
+            s"vectors, $nPq coded vectors, $joined joined rows; the indexes " +
+            "were not built from the same corpus (or ids collide)")
+        IvfPqIndex(ivf, pq, coCodes.df, Seq(coCodes))
+      }
+    }
 
   /** Persist the compressed inverted file — the artifact row 92's layout
     * note promises: `codes` is the corpus-sized (cid, id, m-byte code)
@@ -142,19 +140,15 @@ object IvfPq {
   /** Residual IVFADC index: `coCodes` quantizes residuals, `offsets` is
     * the K-row (_gf_cid, _gf_off) per-cell centering table both the
     * encode and every probe subtract — cached, broadcast-sized (cells ×
-    * dim doubles, same budget as the fine-centroid table itself). */
+    * dim doubles, same budget as the fine-centroid table itself). Owns
+    * its children's caches as [[IvfPqIndex]] does. */
   final case class IvfPqResidualIndex(ivf: Ivf.IvfIndex, pq: Pq.PqIndex,
-                                      coCodes: DataFrame, offsets: DataFrame) {
-    /** Unpersist this index's own cached frames AND the child indexes'
-      * (the composite owns the lot — a caller holding only this handle
-      * has no other way to reach them). Probing after release stays
-      * correct but recomputes per probe. */
+                                      coCodes: DataFrame, offsets: DataFrame,
+                                      held: Seq[graft.Cached.Held] = Nil) {
     def release(): Unit = {
-      coCodes.unpersist(false)
-      offsets.unpersist(false)
+      held.foreach(_.release())
       ivf.release()
       pq.release()
-      ()
     }
   }
 
@@ -183,39 +177,38 @@ object IvfPq {
     // consumer below (offset aggregate, PQ train sample, encode, coCodes
     // join, integrity count) re-ran the whole corpus assignment — five
     // executions measured ~6.7 s of ann_recall's build phase at sf0.1.
-    // Persist the normalized frame once for the build (released below).
-    val normed = ivf.indexed.select(col("_gf_cid"), col("_gf_id"),
-        GraftFunctions.vecNormalize(col("_gf_v")).as("_gf_nv"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val offsets = normed
-      .select(col("_gf_cid"), posexplode(col("_gf_nv")).as(Seq("_gf_pos", "_gf_x")))
-      .groupBy("_gf_cid", "_gf_pos")
-      // exact mean (graft.Num.qmean): a raw avg(double)'s
-      // partition-merge order would leak into the offsets now that the
-      // embeddings scan is multi-split (r15)
-      .agg(graft.Num.qmean(col("_gf_x"), lit(1e12)).as("_gf_mx"))
-      .groupBy("_gf_cid")
-      .agg(transform(
-        array_sort(collect_list(struct(col("_gf_pos"), col("_gf_mx")))),
-        s => s.getField("_gf_mx")).as("_gf_off"))
-      .cache()
-    val residuals = normed
-      .join(broadcast(offsets), Seq("_gf_cid"))
-      .select(col("_gf_cid"), col("_gf_id"),
-        zip_with(col("_gf_nv"), col("_gf_off"), (a, b) => a - b).as("_gf_rv"))
-    val pq = Pq.train(residuals, "_gf_id", "_gf_rv", m, ks, iters, seed,
-      trainSample, normalize = false)
-    val coCodes = residuals.select(col("_gf_cid"), col("_gf_id"))
-      .join(pq.codes, Seq("_gf_id"))
-      .select(col("_gf_cid"), col("_gf_id"), col("_gf_code"))
-      .cache()
-    val joined = coCodes.count()
-    val nIvf = normed.count() // same rows as ivf.indexed, off the cache
-    normed.unpersist(false)
-    if (joined != nIvf) throw new IllegalArgumentException(
-      s"IvfPq.buildResidual: $nIvf indexed vectors but $joined coded rows " +
-        "— ids collide or the encode dropped rows")
-    IvfPqResidualIndex(ivf, pq, coCodes, offsets)
+    // Cache the normalized frame once for the build.
+    graft.Cached.using(ivf.indexed.select(col("_gf_cid"), col("_gf_id"),
+        GraftFunctions.vecNormalize(col("_gf_v")).as("_gf_nv"))) { normed =>
+      val offsets = graft.Cached.hold(normed
+        .select(col("_gf_cid"), posexplode(col("_gf_nv")).as(Seq("_gf_pos", "_gf_x")))
+        .groupBy("_gf_cid", "_gf_pos")
+        // exact mean (graft.Num.qmean): a raw avg(double)'s
+        // partition-merge order would leak into the offsets now that the
+        // embeddings scan is multi-split (r15)
+        .agg(graft.Num.qmean(col("_gf_x"), lit(1e12)).as("_gf_mx"))
+        .groupBy("_gf_cid")
+        .agg(transform(
+          array_sort(collect_list(struct(col("_gf_pos"), col("_gf_mx")))),
+          s => s.getField("_gf_mx")).as("_gf_off")))
+      val residuals = normed
+        .join(broadcast(offsets.df), Seq("_gf_cid"))
+        .select(col("_gf_cid"), col("_gf_id"),
+          zip_with(col("_gf_nv"), col("_gf_off"), (a, b) => a - b).as("_gf_rv"))
+      val pq = graft.Cached.guard(offsets)(Pq.train(residuals, "_gf_id", "_gf_rv",
+        m, ks, iters, seed, trainSample, normalize = false))
+      val coCodes = graft.Cached.hold(residuals.select(col("_gf_cid"), col("_gf_id"))
+        .join(pq.codes, Seq("_gf_id"))
+        .select(col("_gf_cid"), col("_gf_id"), col("_gf_code")))
+      graft.Cached.guard(Seq(coCodes, offsets) ++ pq.held: _*) {
+        val joined = coCodes.df.count()
+        val nIvf = normed.count() // same rows as ivf.indexed, off the cache
+        if (joined != nIvf) throw new IllegalArgumentException(
+          s"IvfPq.buildResidual: $nIvf indexed vectors but $joined coded rows " +
+            "— ids collide or the encode dropped rows")
+        IvfPqResidualIndex(ivf, pq, coCodes.df, offsets.df, Seq(coCodes, offsets))
+      }
+    }
   }
 
   /** Top-k by residual ADC over the probed cells. Same probe machinery
@@ -298,16 +291,18 @@ object IvfPq {
       s"residual IVFADC index at $path is inconsistent: IVF half says " +
         s"dim=$ivfDim but PQ half says dim=${pq.meta.dim} — the halves " +
         "were not built together; retrain or restore the matching files")
-    val offsets = spark.read.parquet(s"$path/offsets").cache()
-    offsets.select(size(col("_gf_off"))).limit(1).collect().headOption.foreach { r =>
-      if (r.getInt(0) != pq.meta.dim) throw new IllegalArgumentException(
-        s"residual IVFADC index at $path is inconsistent: offsets have " +
-          s"dim=${r.getInt(0)} but the manifest says ${pq.meta.dim}")
+    val offsets = graft.Cached.hold(spark.read.parquet(s"$path/offsets"))
+    graft.Cached.guard(offsets) {
+      offsets.df.select(size(col("_gf_off"))).limit(1).collect().headOption.foreach { r =>
+        if (r.getInt(0) != pq.meta.dim) throw new IllegalArgumentException(
+          s"residual IVFADC index at $path is inconsistent: offsets have " +
+            s"dim=${r.getInt(0)} but the manifest says ${pq.meta.dim}")
+      }
     }
     val coCodes = spark.read.parquet(s"$path/codes")
       .select(col("_gf_cid").cast("long").as("_gf_cid"),
         col("_gf_id"), col("_gf_code"))
-    IvfPqResidualIndex(ivf, pq, coCodes, offsets)
+    IvfPqResidualIndex(ivf, pq, coCodes, offsets.df, Seq(offsets))
   }
 
   /** Incremental ingest for the persisted compressed inverted file: one
@@ -360,30 +355,30 @@ object IvfPq {
           "appending them would duplicate rows in every probe; dedup the " +
           "batch or use fresh ids")
     }
-    val assigned = Ivf.assignFine(Ivf.assignCoarse(base, coarse), cells)
-      .select(col("_gf_cid"), col("_gf_id"), col("_gf_v")).cache()
     val coded = Pq.encode(batch, idCol, vecCol, codebooks,
       parent.m, parent.dim / parent.m)
-    val coCoded = assigned.select(col("_gf_cid"), col("_gf_id"))
-      .join(coded, Seq("_gf_id"))
-      .select(col("_gf_cid"), col("_gf_id"), col("_gf_code")).cache()
-    val n = coCoded.count()
-    val nAssigned = assigned.count()
-    if (n != nAssigned) throw new IllegalArgumentException(
-      s"IvfPq.appendToIndex: $nAssigned cell-assigned batch rows but $n " +
-        "coded rows — the batch has duplicate or null ids; nothing was " +
-        "written")
-    val s1 = Ivf.stageAppend(spark, s"$path/ivf",
-      out => assigned.repartition(col("_gf_cid"))
-        .write.mode("overwrite").partitionBy("_gf_cid").parquet(out))
-    Ivf.promoteStaged(spark, s1, s"$path/ivf/indexed", partitioned = true)
-    val s2 = Ivf.stageAppend(spark, path,
-      out => coCoded.repartition(col("_gf_cid"))
-        .write.mode("overwrite").partitionBy("_gf_cid").parquet(out))
-    Ivf.promoteStaged(spark, s2, s"$path/codes", partitioned = true)
-    assigned.unpersist(false)
-    coCoded.unpersist(false)
-    n
+    graft.Cached.using(Ivf.assignFine(Ivf.assignCoarse(base, coarse), cells)
+        .select(col("_gf_cid"), col("_gf_id"), col("_gf_v"))) { assigned =>
+      graft.Cached.using(assigned.select(col("_gf_cid"), col("_gf_id"))
+          .join(coded, Seq("_gf_id"))
+          .select(col("_gf_cid"), col("_gf_id"), col("_gf_code"))) { coCoded =>
+        val n = coCoded.count()
+        val nAssigned = assigned.count()
+        if (n != nAssigned) throw new IllegalArgumentException(
+          s"IvfPq.appendToIndex: $nAssigned cell-assigned batch rows but $n " +
+            "coded rows — the batch has duplicate or null ids; nothing was " +
+            "written")
+        val s1 = Ivf.stageAppend(spark, s"$path/ivf",
+          out => assigned.repartition(col("_gf_cid"))
+            .write.mode("overwrite").partitionBy("_gf_cid").parquet(out))
+        Ivf.promoteStaged(spark, s1, s"$path/ivf/indexed", partitioned = true)
+        val s2 = Ivf.stageAppend(spark, path,
+          out => coCoded.repartition(col("_gf_cid"))
+            .write.mode("overwrite").partitionBy("_gf_cid").parquet(out))
+        Ivf.promoteStaged(spark, s2, s"$path/codes", partitioned = true)
+        n
+      }
+    }
   }
 
   private final case class ParentMeta(dim: Int, m: Int, ks: Int)

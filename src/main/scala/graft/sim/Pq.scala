@@ -54,21 +54,15 @@ object Pq {
 
   /** `codebooks`: m×ks rows (_gf_m, _gf_c, _gf_cbv: array<double>) —
     * broadcast-sized. `codes`: corpus rows (_gf_id, _gf_code: binary of
-    * m bytes). [[train]] marks both cached — codes are the compressed
+    * m bytes). [[train]] caches both — codes are the compressed
     * corpus (id + m bytes per row: the artifact built to be RAM-resident;
     * at 10⁹ vectors × m=16 that is ~24 GB across a cluster), so repeated
-    * probes scan memory instead of re-running the encode pass. A
-    * long-lived driver that trains repeatedly must [[release]] — the same
-    * contract as [[Ivf.IvfIndex.release]]. */
+    * probes scan memory instead of re-running the encode pass. `held`
+    * are their handles, which [[release]] runs ([[graft.Cached]]). */
   final case class PqIndex(codebooks: DataFrame, codes: DataFrame,
-                           meta: PqMeta) {
-    /** Unpersist the cached codebook + code frames (blocking=false:
-      * outstanding jobs finish their reads). */
-    def release(): Unit = {
-      codebooks.unpersist(false)
-      codes.unpersist(false)
-      ()
-    }
+                           meta: PqMeta,
+                           held: Seq[graft.Cached.Held] = Nil) {
+    def release(): Unit = held.foreach(_.release())
   }
 
   /** L2-normalize to array<double> — the native
@@ -144,58 +138,61 @@ object Pq {
       prepped(col(vecCol), normalize).as("_gf_nv"))
     // deterministic hash-top sample (TakeOrdered — one corpus pass, no
     // corpus-wide window); cached for the duration of the Lloyd loop
-    val trainBase = base
-      .orderBy(xxhash64(col("_gf_id"), lit(seed)), col("_gf_id"))
-      .limit(sampleN).cache()
-    val sub = trainBase
-      .select(col("_gf_id"), subspaces(col("_gf_nv"), m, ds).as("_gf_s"))
-      .select(col("_gf_id"), col("_gf_s._gf_m").as("_gf_m"),
-        col("_gf_s._gf_sv").as("_gf_sv"))
+    val trained = graft.Cached.using(base
+        .orderBy(xxhash64(col("_gf_id"), lit(seed)), col("_gf_id"))
+        .limit(sampleN)) { trainBase =>
+      val sub = trainBase
+        .select(col("_gf_id"), subspaces(col("_gf_nv"), m, ds).as("_gf_s"))
+        .select(col("_gf_id"), col("_gf_s._gf_m").as("_gf_m"),
+          col("_gf_s._gf_sv").as("_gf_sv"))
 
-    // Seed: the ks smallest-hash sample rows, each contributing its slice
-    // to every subspace's codebook — the standard "sample ks points,
-    // split them" PQ initialization.
-    val seedW = Window.orderBy(xxhash64(col("_gf_id"), lit(seed)), col("_gf_id"))
-    val seeds = trainBase
-      .orderBy(xxhash64(col("_gf_id"), lit(seed)), col("_gf_id")).limit(ks)
-      .withColumn("_gf_c", row_number().over(seedW) - 1) // ks rows: tiny window
-      .select(col("_gf_c"), subspaces(col("_gf_nv"), m, ds).as("_gf_s"))
-      .select(col("_gf_s._gf_m").as("_gf_m"), col("_gf_c"),
-        col("_gf_s._gf_sv").as("_gf_cbv"))
+      // Seed: the ks smallest-hash sample rows, each contributing its slice
+      // to every subspace's codebook — the standard "sample ks points,
+      // split them" PQ initialization.
+      val seedW = Window.orderBy(xxhash64(col("_gf_id"), lit(seed)), col("_gf_id"))
+      val seeds = trainBase
+        .orderBy(xxhash64(col("_gf_id"), lit(seed)), col("_gf_id")).limit(ks)
+        .withColumn("_gf_c", row_number().over(seedW) - 1) // ks rows: tiny window
+        .select(col("_gf_c"), subspaces(col("_gf_nv"), m, ds).as("_gf_s"))
+        .select(col("_gf_s._gf_m").as("_gf_m"), col("_gf_c"),
+          col("_gf_s._gf_sv").as("_gf_cbv"))
 
-    // Codebooks live on the driver between rounds: ks×dim doubles total —
-    // dimension-sized by construction (the same budget as Ivf's coarse
-    // centroids), and collecting keeps each round's lineage flat.
-    var cb: Array[(Int, Int, Seq[Double])] = seeds.collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2)))
-    def cbDf(): DataFrame = cb.toSeq.toDF("_gf_m", "_gf_c", "_gf_cbv")
+      // Codebooks live on the driver between rounds: ks×dim doubles total —
+      // dimension-sized by construction (the same budget as Ivf's coarse
+      // centroids), and collecting keeps each round's lineage flat.
+      var cb: Array[(Int, Int, Seq[Double])] = seeds.collect()
+        .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2)))
+      def cbDf(): DataFrame = cb.toSeq.toDF("_gf_m", "_gf_c", "_gf_cbv")
 
-    for (_ <- 1 to iters) {
-      val assigned = assign(sub, cbDf())
-      val means = assigned
-        .select(col("_gf_m"), col("_gf_c"),
-          posexplode(col("_gf_sv")).as(Seq("_gf_pos", "_gf_x")))
-        .groupBy("_gf_m", "_gf_c", "_gf_pos")
-        // exact graft.Num.qmean — codebooks must not depend on the
-        // sample's partition layout (multi-split embeddings scan, r15)
-        .agg(graft.Num.qmean(col("_gf_x"), lit(1e12)).as("_gf_mean"))
-        .collect() // m×ks×ds doubles = ks×dim — dimension-sized
-        .groupBy(r => (r.getInt(0), r.getInt(1)))
-        .map { case (mc, rows) =>
-          mc -> rows.sortBy(_.getInt(2)).map(_.getDouble(3)).toSeq
+      for (_ <- 1 to iters) {
+        val assigned = assign(sub, cbDf())
+        val means = assigned
+          .select(col("_gf_m"), col("_gf_c"),
+            posexplode(col("_gf_sv")).as(Seq("_gf_pos", "_gf_x")))
+          .groupBy("_gf_m", "_gf_c", "_gf_pos")
+          // exact graft.Num.qmean — codebooks must not depend on the
+          // sample's partition layout (multi-split embeddings scan, r15)
+          .agg(graft.Num.qmean(col("_gf_x"), lit(1e12)).as("_gf_mean"))
+          .collect() // m×ks×ds doubles = ks×dim — dimension-sized
+          .groupBy(r => (r.getInt(0), r.getInt(1)))
+          .map { case (mc, rows) =>
+            mc -> rows.sortBy(_.getInt(2)).map(_.getDouble(3)).toSeq
+          }
+        // empty cells keep their previous centroid
+        cb = cb.map { case (mm, c, old) =>
+          (mm, c, means.getOrElse((mm, c), old))
         }
-      // empty cells keep their previous centroid
-      cb = cb.map { case (mm, c, old) =>
-        (mm, c, means.getOrElse((mm, c), old))
       }
+      cb
     }
-    trainBase.unpersist(false)
 
-    val codebooks = cbDf().cache()
-    val codes = encode(corpus, idCol, vecCol, codebooks, m, ds, normalize).cache()
-    PqIndex(codebooks, codes,
+    val codebooks = graft.Cached.hold(trained.toSeq.toDF("_gf_m", "_gf_c", "_gf_cbv"))
+    val codes = graft.Cached.hold(
+      encode(corpus, idCol, vecCol, codebooks.df, m, ds, normalize))
+    PqIndex(codebooks.df, codes.df,
       PqMeta(dim, m, ks, iters, seed,
-        if (normalize) "cosine-l2adc" else "l2adc-residual"))
+        if (normalize) "cosine-l2adc" else "l2adc-residual"),
+      Seq(codes, codebooks))
   }
 
   /** Encode a (possibly new — incremental ingest) corpus against existing
@@ -353,14 +350,14 @@ object Pq {
           "them would double-count rows in every ADC scan; dedup the " +
           "batch or use fresh ids")
     }
-    val coded = encode(batch, idCol, vecCol, codebooks,
-      meta.m, meta.dim / meta.m).cache()
-    val n = coded.count()
-    val staging = Ivf.stageAppend(spark, path,
-      out => coded.write.mode("overwrite").parquet(out))
-    Ivf.promoteStaged(spark, staging, s"$path/codes", partitioned = false)
-    coded.unpersist(false)
-    n
+    graft.Cached.using(encode(batch, idCol, vecCol, codebooks,
+        meta.m, meta.dim / meta.m)) { coded =>
+      val n = coded.count()
+      val staging = Ivf.stageAppend(spark, path,
+        out => coded.write.mode("overwrite").parquet(out))
+      Ivf.promoteStaged(spark, staging, s"$path/codes", partitioned = false)
+      n
+    }
   }
 
   private def readManifest(spark: SparkSession, path: String,

@@ -244,25 +244,25 @@ object CorpusOps {
     require(fpp > 0 && fpp < 1, s"fpp=$fpp must be in (0,1)")
     val grams = benchGrams(bench, textCol, n)
     // The Bloom build is EAGER (count for expectedNumItems + the filter
-    // aggregation). Persist the hash frame across those two actions so
+    // aggregation). Cache the hash frame across those two actions so
     // the bench tokenize/explode/distinct runs once at build time; the
     // (lazy) exact join recomputes the gram dictionary once more per
     // downstream action — one extra bench scan, as a dictionary that
     // small warrants.
-    val hashes = grams.select(xxhash64(col("_gf_gram")).as("_gf_h"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    graft.Cached.using(grams.select(xxhash64(col("_gf_gram")).as("_gf_h"))) { hashes =>
       // Empty benchmark: nothing can overlap (and stat.bloomFilter NPEs
       // on an empty frame) — return the empty result with the right schema.
       val nGrams = hashes.count()
       if (nGrams == 0)
-        return corpus.select(col(idCol)).limit(0).withColumn("n_overlap", lit(0L))
-      val bf = hashes.stat.bloomFilter("_gf_h", nGrams, fpp)
-      val bc = corpus.sparkSession.sparkContext.broadcast(bf)
-      overlapCounts(corpus, grams, idCol, textCol, n,
-        probe = Some(graft.functions.BloomMightContain(
-          xxhash64(col("_gf_gram")), bc)))
-    } finally hashes.unpersist(false)
+        corpus.select(col(idCol)).limit(0).withColumn("n_overlap", lit(0L))
+      else {
+        val bf = hashes.stat.bloomFilter("_gf_h", nGrams, fpp)
+        val bc = corpus.sparkSession.sparkContext.broadcast(bf)
+        overlapCounts(corpus, grams, idCol, textCol, n,
+          probe = Some(graft.functions.BloomMightContain(
+            xxhash64(col("_gf_gram")), bc)))
+      }
+    }
   }
 
   /** PII patterns deliberately restricted to the regex subset Java and

@@ -62,32 +62,24 @@ object Dsir {
   /** (idCol, n_feats, log_weight): one row per input document. Docs with
     * no features (blank text) report n_feats 0 and a null weight — no
     * evidence of domain affinity either way, the [[LangModel.score]]
-    * convention.
-    *
-    * Cache lifecycle: the two feature-count tables are `.cache()`d for
-    * the build-side aggregates and the scoring joins and stay cached
-    * until the session drops them (Verify/Bench clear the cache between
-    * queries); API callers looping over many corpora should use
-    * [[logWeightsManaged]] and `release()` after materializing — the
-    * [[LangModel.Lm.release]] discipline. */
+    * convention. Leaves the fit's two feature-count tables cached
+    * ([[logWeightsManaged]] hands their release back). */
   def logWeights(docs: DataFrame, idCol: String, textCol: String,
                  target: DataFrame, raw: DataFrame,
                  buckets: Option[Int] = None, alpha: Double = 1.0,
                  maxBroadcastFeatures: Long = 5000000L,
                  portableHash: Boolean = false): DataFrame =
     logWeightsManaged(docs, idCol, textCol, target, raw, buckets, alpha,
-      maxBroadcastFeatures, portableHash).frame
+      maxBroadcastFeatures, portableHash).df
 
-  /** Weight frame plus the release handle for the two cached
-    * feature-count tables the fit built. */
-  final case class Weights(frame: DataFrame, release: () => Unit)
-
-  /** [[logWeights]] with the cache release handle exposed. */
+  /** [[logWeights]]'s frame, held with the release of the fit's two
+    * feature-count tables, which stay cached for the build-side
+    * aggregates and the scoring joins ([[graft.Cached]]). */
   def logWeightsManaged(docs: DataFrame, idCol: String, textCol: String,
                  target: DataFrame, raw: DataFrame,
                  buckets: Option[Int] = None, alpha: Double = 1.0,
                  maxBroadcastFeatures: Long = 5000000L,
-                 portableHash: Boolean = false): Weights = {
+                 portableHash: Boolean = false): graft.Cached.Held = {
     require(!portableHash || buckets.nonEmpty,
       "portableHash applies to the hashed lane — pass buckets = Some(B)")
     require(alpha > 0, s"alpha must be > 0, got $alpha")
@@ -97,20 +89,24 @@ object Dsir {
       featFrame(df, textCol, buckets, portableHash)
         .groupBy("_gf_f").agg(count(lit(1)).as("_gf_c"))
 
-    val tc = counts(target).cache()
-    val rc = counts(raw).cache()
+    val tcHeld = graft.Cached.hold(counts(target))
+    val rcHeld = graft.Cached.hold(counts(raw))
+    val (tc, rc) = (tcHeld.df, rcHeld.df)
     // Smoothing constants — build-side 1-row aggregates (the LangModel
     // total-count eagerness). V = feature-space size: B when hashed;
     // when unhashed, the distinct gram count over target ∪ raw (the
     // support the smoother distributes mass across).
-    val tTotal = Option(tc.agg(sum(col("_gf_c"))).collect()(0).get(0))
-      .map(_.asInstanceOf[Long]).getOrElse(0L)
-    val rTotal = Option(rc.agg(sum(col("_gf_c"))).collect()(0).get(0))
-      .map(_.asInstanceOf[Long]).getOrElse(0L)
-    require(tTotal > 0, "DSIR target slice has no features")
-    require(rTotal > 0, "DSIR raw slice has no features")
-    val v = buckets.map(_.toLong).getOrElse(
-      tc.select("_gf_f").union(rc.select("_gf_f")).distinct().count())
+    val (tTotal, rTotal, v) = graft.Cached.guard(rcHeld, tcHeld) {
+      val tTotal = Option(tc.agg(sum(col("_gf_c"))).collect()(0).get(0))
+        .map(_.asInstanceOf[Long]).getOrElse(0L)
+      val rTotal = Option(rc.agg(sum(col("_gf_c"))).collect()(0).get(0))
+        .map(_.asInstanceOf[Long]).getOrElse(0L)
+      require(tTotal > 0, "DSIR target slice has no features")
+      require(rTotal > 0, "DSIR raw slice has no features")
+      val v = buckets.map(_.toLong).getOrElse(
+        tc.select("_gf_f").union(rc.select("_gf_f")).distinct().count())
+      (tTotal, rTotal, v)
+    }
 
     def sized(d: DataFrame): DataFrame = {
       val n = d.count()
@@ -139,7 +135,7 @@ object Dsir {
       .join(agg, Seq(idCol), "left")
       .select(col(idCol), coalesce(col("n_feats"), lit(0L)).as("n_feats"),
         col("log_weight"))
-    Weights(frame, () => { tc.unpersist(false); rc.unpersist(false); () })
+    graft.Cached.Held(frame, () => Seq(rcHeld, tcHeld).foreach(_.release()))
   }
 
   /** The resampling step, deterministic form: keep the `k` documents

@@ -108,8 +108,7 @@ object FastText {
   }
 
   /** Trained model: B-bounded weight vector + bias + the per-epoch
-    * training loss trace (for convergence assertions), plus the release
-    * handle for the cached incidence frame. */
+    * training loss trace (for convergence assertions). */
   final case class Model(weights: Array[Double], bias: Double,
                          buckets: Int, losses: Vector[Double]) {
     /** Weight table as a frame for [[scoreHashed]] (only non-zero rows —
@@ -178,7 +177,8 @@ object FastText {
     * dispatches to the matching scoring route. */
   final case class LoadedModel(weights: DataFrame, bias: Double,
                                keyed: String, buckets: Option[Int],
-                               rows: Long) {
+                               rows: Long,
+                               held: Seq[graft.Cached.Held] = Nil) {
     /** Scores through the matching join route. The open-time row count
       * rides along so repeated scoring calls against one loaded model
       * skip the per-call sizing job (the Lm.uniTypes memoization). */
@@ -194,12 +194,9 @@ object FastText {
             weights.select(col("feature").as("_gf_f"), col("weight").as("_gf_w")),
             (g: Column) => g, bias, 5000000L, Some(rows))
       }
-    /** Unpersist the cached weight table (the [[LangModel.Lm.release]]
-      * discipline) once scoring plans are materialized. */
-    def release(): Unit = {
-      weights.unpersist(false)
-      ()
-    }
+    /** Release the cached weight table ([[graft.Cached]]) once scoring
+      * plans are materialized. */
+    def release(): Unit = held.foreach(_.release())
   }
 
   private def writeManifest(spark: org.apache.spark.sql.SparkSession,
@@ -272,26 +269,26 @@ object FastText {
     val keyed = String.valueOf(m.get("keyed"))
     val bias = String.valueOf(m.get("bias")).toDouble
     val declared = String.valueOf(m.get("rows")).toLong
-    val w = spark.read.parquet(s"$path/weights").cache()
-    val got = w.count()
-    def refuse(msg: String): Nothing = {
-      w.unpersist(false)
-      throw new IllegalArgumentException(msg)
-    }
-    if (got != declared) refuse(
-      s"$path/weights holds $got rows but the manifest declares " +
-        s"$declared — refusing a partially-copied model")
-    keyed match {
-      case "bucket" =>
-        val b = String.valueOf(m.get("buckets")).toInt
-        val bad = w.filter(col("bucket") < 0 || col("bucket") >= b).count()
-        if (bad > 0) refuse(
-          s"$path/weights holds $bad bucket ids outside [0, $b) — " +
-            "weight table from a different bucket count; refusing")
-        LoadedModel(w, bias, "bucket", Some(b), got)
-      case "feature" => LoadedModel(w, bias, "feature", None, got)
-      case other => refuse(
-        s"$path manifest declares unknown key lane '$other'")
+    val held = graft.Cached.hold(spark.read.parquet(s"$path/weights"))
+    val w = held.df
+    def refuse(msg: String): Nothing = throw new IllegalArgumentException(msg)
+    graft.Cached.guard(held) {
+      val got = w.count()
+      if (got != declared) refuse(
+        s"$path/weights holds $got rows but the manifest declares " +
+          s"$declared — refusing a partially-copied model")
+      keyed match {
+        case "bucket" =>
+          val b = String.valueOf(m.get("buckets")).toInt
+          val bad = w.filter(col("bucket") < 0 || col("bucket") >= b).count()
+          if (bad > 0) refuse(
+            s"$path/weights holds $bad bucket ids outside [0, $b) — " +
+              "weight table from a different bucket count; refusing")
+          LoadedModel(w, bias, "bucket", Some(b), got, Seq(held))
+        case "feature" => LoadedModel(w, bias, "feature", None, got, Seq(held))
+        case other => refuse(
+          s"$path manifest declares unknown key lane '$other'")
+      }
     }
   }
 
@@ -352,14 +349,13 @@ object FastText {
       .filter(size(col("_gf_gs")) > 0)
     // (id, sample key, y, 1/n_f, bucket) incidence rows — featurized
     // ONCE, cached for the epoch loop; text is never touched again.
-    val incWide = labeled
+    val incWide = graft.Cached.hold(labeled
       .select(col("_gf_id"), col("_gf_sk"),
         col("_gf_y"),
         (lit(1.0) / size(col("_gf_gs"))).as("_gf_inv"),
         explode(col("_gf_gs")).as("_gf_g"))
       .select(col("_gf_id"), col("_gf_sk"), col("_gf_y"), col("_gf_inv"),
-        pmod(xxhash64(col("_gf_g")), lit(buckets.toLong)).as("_gf_b"))
-      .cache()
+        pmod(xxhash64(col("_gf_g")), lit(buckets.toLong)).as("_gf_b")))
     // Size the EPOCH-LOOP partitioning by the incidence volume, not the
     // scan's parallelism (guide §2.2 "fewer, larger partitions"): the
     // featurize pass above wants every core, but each of the ~2·epochs
@@ -369,7 +365,7 @@ object FastText {
     // data. The ~4M-rows-per-partition target below keeps epoch tasks
     // substantial at any scale; the one-off shuffle reads the cache, so
     // featurization is never re-run.
-    val nInc = incWide.count()
+    val nInc = graft.Cached.guard(incWide)(incWide.df.count())
     // ~4M incidence rows ≈ 160 MB per epoch partition: measured locally,
     // epoch cost is dominated by per-stage scheduling overhead down to ONE
     // partition at bench scale (0.49 s/epoch at 1 partition vs ~1 s at 3),
@@ -384,23 +380,22 @@ object FastText {
     // 2·epochs jobs. Hash repartition also skips round-robin's
     // sort-before-repartition guard, and the assignment is deterministic
     // by construction.
-    val inc = {
-      val re = incWide.repartition(epochParts, col("_gf_id")).cache()
-      re.count(): Unit // materialize before releasing the wide cache
-      incWide.unpersist(false)
-      re
-    }
-    val classes = labeled.select(col("_gf_y")).distinct().collect()
-      .map(_.getDouble(0)).toSet
-    require(classes.subsetOf(Set(0.0, 1.0)),
-      s"labels must be 0/1, got ${classes.mkString(",")}")
-    require(classes == Set(0.0, 1.0),
-      "training needs BOTH classes present — a one-class fit diverges")
-
+    val incHeld = graft.Cached.hold(
+      incWide.df.repartition(epochParts, col("_gf_id")))
+    val inc = incHeld.df
     val w = Array.fill(buckets)(0.0)
     var bias = 0.0
     val losses = Vector.newBuilder[Double]
     try {
+      inc.count(): Unit // materialize before releasing the wide cache
+      incWide.release()
+      val classes = labeled.select(col("_gf_y")).distinct().collect()
+        .map(_.getDouble(0)).toSet
+      require(classes.subsetOf(Set(0.0, 1.0)),
+        s"labels must be 0/1, got ${classes.mkString(",")}")
+      require(classes == Set(0.0, 1.0),
+        "training needs BOTH classes present — a one-class fit diverges")
+
       (1 to epochs).foreach { ep =>
         // The paper's linear lr decay (never reaching exactly 0 — the
         // last epoch still moves at lr/epochs).
@@ -430,7 +425,7 @@ object FastText {
         // was ALSO tried here — it lost (22.6 s vs 13.1 s for the 12-epoch
         // trainer): two WindowExec sorts of the incidence per epoch cost
         // more than the hash-aggregate + join-back they replace.
-        val margins = epochInc.join(wDf, Seq("_gf_b"), "left")
+        graft.Cached.using(epochInc.join(wDf, Seq("_gf_b"), "left")
           .groupBy(col("_gf_id"))
           .agg(first(col("_gf_y")).as("_gf_y"),
             first(col("_gf_inv")).as("_gf_inv"),
@@ -439,49 +434,48 @@ object FastText {
           .select(col("_gf_id"), col("_gf_y"), col("_gf_inv"),
             (lit(1.0) / (lit(1.0) + exp(-(lit(bias) + col("_gf_m")))))
               .as("_gf_p"))
-          .withColumn("_gf_r", col("_gf_p") - col("_gf_y"))
-          .cache()
-        // Loss + bias gradient + doc count (one 1-row collect) and the
-        // per-bucket gradients (one B-bounded collect): TWO deliberate
-        // collects per epoch — a fused union (loss row riding a sentinel
-        // bucket) and a window-over-id single-shuffle variant were both
-        // tried in r14 and measured slower (15.6 s and 22.6 s vs 13.6 s);
-        // the hash-aggregate + join-back shape wins at this geometry.
-        // Per-doc loss and residual terms ride the same quantized-long
-        // exact sums as the margin (loss at 1e9 — its magnitude is
-        // bounded by −ln 1e-12 — the rest at 1e12). Clamp ln args away
-        // from 0 (a perfectly-separated fixture otherwise yields -inf).
-        // Normalization is by THIS epoch's doc count.
-        val statsRow = margins.agg(
-          graft.Num.qsum(-(col("_gf_y") * log(greatest(col("_gf_p"), lit(1e-12)))
-              + (lit(1.0) - col("_gf_y"))
-                * log(greatest(lit(1.0) - col("_gf_p"), lit(1e-12)))),
-            lit(1e9)).as("_gf_loss"),
-          graft.Num.qsum(col("_gf_r"), q12).as("_gf_rsum"),
-          count(lit(1)).as("_gf_n"))
-        // Per-bucket gradient: Σ_incidences r/n_f, B-bounded collect
-        // (the join against per-doc residuals re-selects the epoch's
-        // incidence subset — unsampled docs have no residual row).
-        val gradRows = epochInc
-          .join(margins.select(col("_gf_id"), col("_gf_r")), Seq("_gf_id"))
-          .groupBy(col("_gf_b"))
-          .agg(graft.Num.qsum(col("_gf_r") * col("_gf_inv"), q12).as("_gf_g"))
-        val stats = statsRow.collect()(0)
-        val nEpoch = stats.getLong(2).toDouble
-        if (nEpoch == 0) {
-          // the sample landed empty — no evidence, no update
-          losses += Double.NaN
-        } else {
-          val rows = gradRows.collect()
-          losses += stats.getDouble(0) / nEpoch
-          val gradB = stats.getDouble(1) / nEpoch
-          rows.foreach(r =>
-            w(r.getLong(0).toInt) -= lrT * r.getDouble(1) / nEpoch)
-          bias -= lrT * gradB
+          .withColumn("_gf_r", col("_gf_p") - col("_gf_y"))) { margins =>
+          // Loss + bias gradient + doc count (one 1-row collect) and the
+          // per-bucket gradients (one B-bounded collect): TWO deliberate
+          // collects per epoch — a fused union (loss row riding a sentinel
+          // bucket) and a window-over-id single-shuffle variant were both
+          // tried in r14 and measured slower (15.6 s and 22.6 s vs 13.6 s);
+          // the hash-aggregate + join-back shape wins at this geometry.
+          // Per-doc loss and residual terms ride the same quantized-long
+          // exact sums as the margin (loss at 1e9 — its magnitude is
+          // bounded by −ln 1e-12 — the rest at 1e12). Clamp ln args away
+          // from 0 (a perfectly-separated fixture otherwise yields -inf).
+          // Normalization is by THIS epoch's doc count.
+          val statsRow = margins.agg(
+            graft.Num.qsum(-(col("_gf_y") * log(greatest(col("_gf_p"), lit(1e-12)))
+                + (lit(1.0) - col("_gf_y"))
+                  * log(greatest(lit(1.0) - col("_gf_p"), lit(1e-12)))),
+              lit(1e9)).as("_gf_loss"),
+            graft.Num.qsum(col("_gf_r"), q12).as("_gf_rsum"),
+            count(lit(1)).as("_gf_n"))
+          // Per-bucket gradient: Σ_incidences r/n_f, B-bounded collect
+          // (the join against per-doc residuals re-selects the epoch's
+          // incidence subset — unsampled docs have no residual row).
+          val gradRows = epochInc
+            .join(margins.select(col("_gf_id"), col("_gf_r")), Seq("_gf_id"))
+            .groupBy(col("_gf_b"))
+            .agg(graft.Num.qsum(col("_gf_r") * col("_gf_inv"), q12).as("_gf_g"))
+          val stats = statsRow.collect()(0)
+          val nEpoch = stats.getLong(2).toDouble
+          if (nEpoch == 0) {
+            // the sample landed empty — no evidence, no update
+            losses += Double.NaN
+          } else {
+            val rows = gradRows.collect()
+            losses += stats.getDouble(0) / nEpoch
+            val gradB = stats.getDouble(1) / nEpoch
+            rows.foreach(r =>
+              w(r.getLong(0).toInt) -= lrT * r.getDouble(1) / nEpoch)
+            bias -= lrT * gradB
+          }
         }
-        margins.unpersist(false)
       }
-    } finally inc.unpersist(false)
+    } finally Seq(incHeld, incWide).foreach(_.release())
     Model(w, bias, buckets, losses.result())
   }
 }

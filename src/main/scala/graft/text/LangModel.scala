@@ -38,19 +38,17 @@ object LangModel {
 
   /** `unigrams`: (_gf_w, _gf_cw). `bigrams`: (_gf_prev, _gf_w, _gf_cb).
     * `total`: reference token count (the one driver-side scalar — a 1-row
-    * aggregate). Both frames cached: the LM is probed per scored batch. */
-  final case class Lm(unigrams: DataFrame, bigrams: DataFrame, total: Long) {
+    * aggregate). Both frames cached: the LM is probed per scored batch;
+    * `held` are their handles ([[graft.Cached]]), which [[release]] runs. */
+  final case class Lm(unigrams: DataFrame, bigrams: DataFrame, total: Long,
+                      held: Seq[graft.Cached.Held] = Nil) {
     /** Type counts, memoized: broadcast sizing and the in-memory-route
       * guard both need them, and a config-chain run scoring many corpora
       * against ONE cached LM should pay the two count jobs once, not per
       * scoring call. */
     lazy val uniTypes: Long = unigrams.count()
     lazy val biTypes: Long = bigrams.count()
-    def release(): Unit = {
-      unigrams.unpersist(false)
-      bigrams.unpersist(false)
-      ()
-    }
+    def release(): Unit = held.foreach(_.release())
   }
 
   private def toks(c: Column): Column = TextAnalysis.tokens(c)
@@ -83,20 +81,20 @@ object LangModel {
       .select(col("_gf_bg._gf_prev").as("_gf_prev"),
         col("_gf_bg._gf_w").as("_gf_w"))
       .groupBy("_gf_prev", "_gf_w").agg(count(lit(1)).as("_gf_c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val unigrams = grams.filter(col("_gf_prev").isNull)
-      .select(col("_gf_w"), col("_gf_c").as("_gf_cw"))
-      .cache()
-    val bigrams = grams.filter(col("_gf_prev").isNotNull)
-      .select(col("_gf_prev"), col("_gf_w"), col("_gf_c").as("_gf_cb"))
-      .cache()
-    // sum over an EMPTY reference is SQL null — surface it as total 0 so
-    // score()'s require gives the real diagnosis instead of an NPE here
-    val total = Option(unigrams.agg(sum(col("_gf_cw"))).collect()(0).get(0))
-      .map(_.asInstanceOf[Long]).getOrElse(0L)
-    bigrams.count(): Unit // materialize off the combined cache, then drop it
-    grams.unpersist(false)
-    Lm(unigrams, bigrams, total)
+    graft.Cached.using(grams) { grams =>
+      val unigrams = graft.Cached.hold(grams.filter(col("_gf_prev").isNull)
+        .select(col("_gf_w"), col("_gf_c").as("_gf_cw")))
+      val bigrams = graft.Cached.hold(grams.filter(col("_gf_prev").isNotNull)
+        .select(col("_gf_prev"), col("_gf_w"), col("_gf_c").as("_gf_cb")))
+      graft.Cached.guard(bigrams, unigrams) {
+        // sum over an EMPTY reference is SQL null — surface it as total 0
+        // so score()'s require gives the real diagnosis instead of an NPE
+        val total = Option(unigrams.df.agg(sum(col("_gf_cw"))).collect()(0).get(0))
+          .map(_.asInstanceOf[Long]).getOrElse(0L)
+        bigrams.df.count(): Unit // materialize off the combined cache
+        Lm(unigrams.df, bigrams.df, total, Seq(bigrams, unigrams))
+      }
+    }
   }
 
   /** (idCol, n_scored, avg_logprob): one row per input document.
@@ -275,16 +273,15 @@ object LangModel {
     if (format != "graft-lm-v1") throw new IllegalArgumentException(
       s"$path holds format '$format', not a graft-lm-v1 language model")
     val total = String.valueOf(m.get("total")).toLong
-    val unigrams = spark.read.parquet(s"$path/unigrams").cache()
-    val bigrams = spark.read.parquet(s"$path/bigrams").cache()
-    val recomputed = Option(unigrams.agg(sum(col("_gf_cw"))).collect()(0).get(0))
-      .map(_.asInstanceOf[Long]).getOrElse(0L)
-    if (recomputed != total) {
-      unigrams.unpersist(false); bigrams.unpersist(false)
-      throw new IllegalArgumentException(
+    val unigrams = graft.Cached.hold(spark.read.parquet(s"$path/unigrams"))
+    val bigrams = graft.Cached.hold(spark.read.parquet(s"$path/bigrams"))
+    graft.Cached.guard(bigrams, unigrams) {
+      val recomputed = Option(unigrams.df.agg(sum(col("_gf_cw"))).collect()(0).get(0))
+        .map(_.asInstanceOf[Long]).getOrElse(0L)
+      if (recomputed != total) throw new IllegalArgumentException(
         s"$path/unigrams sums to $recomputed tokens but the manifest " +
           s"declares $total — refusing a partially-copied model")
+      Lm(unigrams.df, bigrams.df, total, Seq(bigrams, unigrams))
     }
-    Lm(unigrams, bigrams, total)
   }
 }

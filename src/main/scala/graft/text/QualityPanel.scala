@@ -36,14 +36,6 @@ import org.apache.spark.sql.functions._
   */
 object QualityPanel {
 
-  /** Audit frame plus the release handle for the bigram LM the audit
-    * trained (its two count tables are `.cache()`d for the scoring
-    * joins — the [[graft.pipeline.Pipeline.Result]] discipline). Call
-    * `release()` once the frame is materialized; repeated [[audit]]
-    * calls without it accumulate pinned cached tables until the
-    * session cache is cleared wholesale. */
-  final case class Result(frame: DataFrame, release: () => Unit)
-
   /** @param corpus  documents to audit: idCol + textCol
     * @param bench   benchmark suite for the contamination gate
     * @param lmRef   trusted reference slice the bigram LM trains on
@@ -62,17 +54,19 @@ object QualityPanel {
             n: Int = 8,
             hashKeys: Boolean = false): DataFrame =
     auditManaged(corpus, bench, lmRef, idCol, textCol, gopherCfg,
-      minLmLogprob, maxOverlapFrac, n, hashKeys).frame
+      minLmLogprob, maxOverlapFrac, n, hashKeys).df
 
-  /** [[audit]] with the trained LM's release handle exposed — the route
-    * for callers auditing many corpora in one session. */
+  /** [[audit]]'s frame, held with the release of the bigram LM the audit
+    * trained (its count tables stay cached for the scoring joins) — the
+    * route for callers auditing many corpora in one session. Release
+    * once the frame is materialized ([[graft.Cached]]). */
   def auditManaged(corpus: DataFrame, bench: DataFrame, lmRef: DataFrame,
                    idCol: String, textCol: String,
                    gopherCfg: GopherRules.Config = GopherRules.Config(),
                    minLmLogprob: Double = -6.0,
                    maxOverlapFrac: Double = 0.1,
                    n: Int = 8,
-                   hashKeys: Boolean = false): Result = {
+                   hashKeys: Boolean = false): graft.Cached.Held = {
     val base = corpus.select(col(idCol),
       GopherRules.keepFlag(col(textCol), gopherCfg).cast("int").as("gopher_keep"))
     val lm = LangModel.train(lmRef, textCol)
@@ -93,6 +87,6 @@ object QualityPanel {
       .withColumn("keep",
         (col("gopher_keep") === 1 && col("lm_keep") === 1 &&
           col("decon_keep") === 1).cast("int"))
-    Result(frame, () => lm.release())
+    graft.Cached.Held(frame, () => lm.release())
   }
 }

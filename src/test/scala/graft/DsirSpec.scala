@@ -89,7 +89,7 @@ class DsirSpec extends SparkSpec {
     spark.sharedState.cacheManager.clearCache()
     val c = Seq((1L, "aa bb")).toDF("doc_id", "text")
     val w = Dsir.logWeightsManaged(c, "doc_id", "text", target, raw)
-    assert(w.frame.count() == 1)
+    assert(w.df.count() == 1)
     assert(!spark.sharedState.cacheManager.isEmpty)
     w.release()
     assert(spark.sharedState.cacheManager.isEmpty,

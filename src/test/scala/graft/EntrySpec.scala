@@ -112,6 +112,9 @@ class EntrySpec extends SparkSpec {
       files.filter(f => Files.readString(f).contains(s)).map(_.getFileName.toString)
     assert(holding("SparkSession.builder") == Seq("Session.scala"))
     assert(holding("nanosAsLong") == Seq("Session.scala"))
+    // one cache owner: comments that name these calls live in Cached too
+    for (call <- Seq(".persist(", ".cache()", ".unpersist(", "heckpoint("))
+      assert(holding(call) == Seq("Cached.scala"), call)
     val mains = files.flatMap { f =>
       var obj = ""
       Files.readAllLines(f).asScala.flatMap { l =>

@@ -295,6 +295,7 @@ class IvfPqSpec extends SparkSpec {
   }
 
   test("indexes from different corpora refuse to combine") {
+    spark.sharedState.cacheManager.clearCache()
     val e = Tables.embeddings(spark, sfDir)
     val ivf = Ivf.train(e, "vec_id", "embedding", k = 8, iters = 1)
     val pqHalf = Pq.train(e.filter(col("vec_id") % 2 === 0),
@@ -303,5 +304,8 @@ class IvfPqSpec extends SparkSpec {
       IvfPq.build(ivf, pqHalf)
     }
     assert(ex.getMessage.contains("disagree"))
+    ivf.release()
+    pqHalf.release()
+    assert(spark.sharedState.cacheManager.isEmpty, "the refusal left a cache behind")
   }
 }

@@ -32,6 +32,15 @@ class IvfSpec extends SparkSpec {
     assert(top.forall(_.getAs[Long]("neighbor_id") < 10L))
   }
 
+  test("a second train of an equal plan neither owns nor drops the first's cache") {
+    val df = clustered.toDF("vec_id", "embedding")
+    val first = Ivf.train(df, "vec_id", "embedding", k = 3, iters = 2)
+    val second = Ivf.train(df, "vec_id", "embedding", k = 3, iters = 2)
+    second.release()
+    assert(first.cells.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+    first.release()
+  }
+
   test("train is bit-identical under different partition layouts (r15)") {
     // the Lloyd means now accumulate exact quantized longs (Num.qmean) —
     // a multi-split embeddings scan must train the identical index

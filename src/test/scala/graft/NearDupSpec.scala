@@ -361,6 +361,22 @@ class NearDupSpec extends SparkSpec {
     assert(rounds <= 24, s"contraction took $rounds rounds — not O(log n)")
   }
 
+  test("contraction rounds drop their localCheckpoint blocks once superseded") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val chain = (1L until 64L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val (labels, rounds) = Components.componentLabelsWithRounds(chain)
+    assert(rounds >= 3)
+    // the returned plan reads the pair checkpoint and the final round only
+    val read = labels.queryExecution.analyzed.collect {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+    }.toSet
+    val kept = sc.getPersistentRDDs.keySet -- before
+    assert(kept.subsetOf(read) && kept.size <= 2,
+      s"$rounds rounds kept ${kept.size} checkpoint RDDs, the plan reads ${read.size}")
+    assert(labels.collect().map(_.getLong(1)).toSet == Set(1L))
+  }
+
   test("reliable-checkpoint file count stays bounded across rounds") {
     // A chain of diameter 8 needs several propagation rounds; each round
     // reliably checkpoints a new label frame when a checkpoint dir is set.

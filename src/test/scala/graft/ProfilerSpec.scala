@@ -171,7 +171,7 @@ class ProfilerSpec extends SparkSpec {
     assert(byIdx == want - "none", "a column with no non-null value has no row")
     def counts(p: DataFrame) = p.select("column_name", "distinct_count").collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(counts(DataDictionary.build(df, exact = true)) == want)
+    assert(counts(DataDictionary.build(df)) == want)
     assert(counts(Profiler.schemaProfile(df, exact = true)) == want)
     assert(counts(Profiler.highCardinality(df, 0, exact = true)) == Map("s" -> 3L))
   }

@@ -99,7 +99,7 @@ class QualityPanelSpec extends SparkSpec {
       Seq((100L, "unrelated bench")).toDF("doc_id", "text"),
       Seq(Tuple1(goodText)).toDF("text"),
       "doc_id", "text", GopherRules.Config(minWords = 5, minStopHits = 1))
-    assert(r.frame.count() == 1)
+    assert(r.df.count() == 1)
     assert(!spark.sharedState.cacheManager.isEmpty)  // LM tables pinned
     r.release()
     assert(spark.sharedState.cacheManager.isEmpty,
