@@ -381,9 +381,7 @@ object MinHash {
     * count that disagrees with the manifest's k. */
   def readSignatureIndex(spark: org.apache.spark.sql.SparkSession,
                          path: String): DataFrame = {
-    val (k, rows) = readManifest(spark, path,
-      "nothing was persisted here, or the write was interrupted before " +
-        "completion (manifest is last)")
+    val (k, rows) = readManifest(spark, path)
     val sigs = spark.read.parquet(s"$path/sigs")
     val n = sigs.count()
     if (n != rows) throw new IllegalArgumentException(
@@ -409,9 +407,8 @@ object MinHash {
     * every persisted index in this engine. */
   def appendToSignatureIndex(sigs: DataFrame, path: String): Unit = {
     val spark = sigs.sparkSession
-    val (k, _) = readManifest(spark, path,
-      "appendToSignatureIndex needs an existing index; use " +
-        "writeSignatureIndex for the first write")
+    val (k, _) = readManifest(spark, path, "signature index " +
+      "(appendToSignatureIndex needs one written by writeSignatureIndex)")
     checkedFrame(sigs, "appendToSignatureIndex", Some(k), path)
     val clashes = sigs.select(col("_gf_id"))
       .join(spark.read.parquet(s"$path/sigs").select(col("_gf_id")),
@@ -457,36 +454,18 @@ object MinHash {
     (lo, n)
   }
 
-  /** The manifest's (k, rows); refuses a missing (`missing` says why that
-    * matters to the caller) or foreign manifest. */
+  /** The manifest's (k, rows); refuses a missing or foreign manifest. */
   private def readManifest(spark: org.apache.spark.sql.SparkSession,
-                           path: String, missing: String): (Int, Long) = {
-    val mp = new org.apache.hadoop.fs.Path(s"$path/manifest.json")
-    val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(mp)) throw new IllegalArgumentException(
-      s"no signature-index manifest at $path — $missing")
-    val in = fs.open(mp)
-    val raw =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    if (!raw.contains("\"" + IndexFormat + "\"")) throw new IllegalArgumentException(
-      s"manifest at $path is not a $IndexFormat index (got: $raw) — " +
-        "refusing to probe foreign signatures")
-    def num(key: String): Long =
-      s""""$key":\\s*(\\d+)""".r.findFirstMatchIn(raw).map(_.group(1).toLong)
-        .getOrElse(throw new IllegalArgumentException(
-          s"signature-index manifest at $path is missing '$key': $raw"))
-    (num("k").toInt, num("rows"))
+                           path: String,
+                           what: String = "signature index"): (Int, Long) = {
+    val m = graft.Manifest.read(spark, path, what, IndexFormat)
+    (m.int("k"), m.long("rows"))
   }
 
   /** Writes the manifest — callers write it LAST, as the completeness
     * marker. */
   private def writeManifest(spark: org.apache.spark.sql.SparkSession,
-                            path: String, k: Int, rows: Long): Unit = {
-    val mp = new org.apache.hadoop.fs.Path(s"$path/manifest.json")
-    val out = mp.getFileSystem(spark.sessionState.newHadoopConf()).create(mp, true)
-    try out.write(s"""{"format": "$IndexFormat", "k": $k, "rows": $rows}"""
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+                            path: String, k: Int, rows: Long): Unit =
+    graft.Manifest.write(spark, path, "format" -> IndexFormat, "k" -> k,
+      "rows" -> rows)
 }

@@ -72,7 +72,7 @@ object Cdc {
   // to a mutable snapshot): a versioned directory tree
   //
   //   path/v0/  path/v1/ …  (immutable parquet per version)
-  //   path/manifest.json    (format tag, current version, rows, schema DDL,
+  //   path/ manifest        (format tag, current version, rows, schema DDL,
   //                          key columns, max applied seq — written LAST)
   //
   // Each applied batch writes a NEW version directory first and commits by
@@ -85,99 +85,28 @@ object Cdc {
 
   private val Format = "graft-cdc-snapshot-v1"
 
-  private def esc(s: String): String = s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
-
   private def fs(spark: org.apache.spark.sql.SparkSession,
                  path: String): org.apache.hadoop.fs.FileSystem =
     new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sessionState.newHadoopConf())
 
+  // The commit overwrites the manifest by rename, so a concurrent reader
+  // sees the old manifest or the new one ([[graft.Manifest]]).
   private def writeManifest(spark: org.apache.spark.sql.SparkSession,
                             path: String, version: Long, rows: Long,
                             ddl: String, keyCols: Seq[String],
-                            maxSeq: Long): Unit = {
-    val json =
-      s"""{"format": "$Format", "version": $version, "rows": $rows, """ +
-        s""""schema": "${esc(ddl)}", """ +
-        s""""key_cols": [${keyCols.map(k => s""""${esc(k)}"""").mkString(", ")}], """ +
-        s""""max_seq": $maxSeq}"""
-    // Write-then-rename, not truncate-in-place: create(overwrite=true)
-    // zeroes the live manifest before the new bytes land, so a concurrent
-    // reader could observe an empty/partial manifest and fail a read that
-    // the "reader sees old or new" lifecycle claim promises succeeds.
-    // HDFS rename is atomic; local/object stores give at worst a
-    // far-smaller replace window than a truncate-then-write.
-    val f = fs(spark, path)
-    val mp = new org.apache.hadoop.fs.Path(s"$path/manifest.json")
-    val tmp = new org.apache.hadoop.fs.Path(s"$path/manifest.json.tmp")
-    val out = f.create(tmp, true)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    // Atomic overwrite where the FS provides it (FileContext.rename with
-    // OVERWRITE — atomic on HDFS; plain FileSystem.rename refuses an
-    // existing target, which is why the naive shape needed a delete first
-    // and left a missing-manifest window between delete and rename).
-    // Stores without FileContext support fall back to delete+rename;
-    // readManifest absorbs that tiny window with a bounded retry.
-    try {
-      val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-        mp.toUri, spark.sessionState.newHadoopConf())
-      fc.rename(tmp, mp, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    } catch {
-      case _: UnsupportedOperationException |
-           _: org.apache.hadoop.fs.UnsupportedFileSystemException =>
-        if (f.exists(mp)) f.delete(mp, false)
-        if (!f.rename(tmp, mp)) throw new IllegalStateException(
-          s"CDC manifest commit failed: could not rename $tmp over $mp")
-    }
-  }
+                            maxSeq: Long): Unit =
+    graft.Manifest.write(spark, path, "format" -> Format, "version" -> version,
+      "rows" -> rows, "schema" -> ddl, "key_cols" -> keyCols, "max_seq" -> maxSeq)
 
-  private def readManifest(spark: org.apache.spark.sql.SparkSession,
-                           path: String): java.util.Map[String, Object] = {
-    val mp = new org.apache.hadoop.fs.Path(s"$path/manifest.json")
-    // Bounded retry on a missing manifest: on stores without an atomic
-    // overwrite-rename, a concurrent writeManifest has a tiny
-    // delete→rename window where no manifest exists — retry briefly
-    // before concluding nothing was ever written here.
-    def openRaw(attempt: Int): String = {
-      val f = fs(spark, path)
-      if (!f.exists(mp)) {
-        if (attempt < 5) { Thread.sleep(40L << attempt); openRaw(attempt + 1) }
-        else throw new IllegalArgumentException(
-          s"no CDC snapshot manifest at $path — nothing was written here, or " +
-            "the write was interrupted before completion (manifest is last)")
-      } else {
-        val in =
-          try f.open(mp)
-          catch {
-            case _: java.io.FileNotFoundException if attempt < 5 =>
-              Thread.sleep(40L << attempt); return openRaw(attempt + 1)
-          }
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      }
+  /** The schema the manifest pins. */
+  private def pinnedSchema(m: graft.Manifest.Fields, path: String) = {
+    val ddl = m.string("schema")
+    try org.apache.spark.sql.types.StructType.fromDDL(ddl)
+    catch {
+      case e: Exception => throw new IllegalArgumentException(
+        s"manifest at $path pins an unparsable schema '$ddl': ${e.getMessage}")
     }
-    val raw = openRaw(0)
-    val m =
-      try {
-        val y = new org.yaml.snakeyaml.Yaml(
-          new org.yaml.snakeyaml.constructor.SafeConstructor(
-            new org.yaml.snakeyaml.LoaderOptions()))
-        y.load[java.util.Map[String, Object]](raw)
-      } catch {
-        case e: Exception => throw new IllegalArgumentException(
-          s"$path/manifest.json is unreadable: ${e.getMessage}")
-      }
-    val format = String.valueOf(m.get("format"))
-    if (format != Format) throw new IllegalArgumentException(
-      s"manifest at $path holds format '$format', not a $Format export — " +
-        "refusing to treat foreign data as a CDC snapshot")
-    m
   }
 
   /** Write version 0 of a persisted snapshot. Refusals: empty base (an
@@ -208,22 +137,14 @@ object Cdc {
   def applyBatch(spark: org.apache.spark.sql.SparkSession, path: String,
                  changes: DataFrame, keyCols: Seq[String],
                  seqCol: String, opCol: String): Unit = {
-    val m = readManifest(spark, path)
-    val pinnedKeys = m.get("key_cols")
-      .asInstanceOf[java.util.List[Object]]
-    val pk = (0 until pinnedKeys.size()).map(i => String.valueOf(pinnedKeys.get(i)))
+    val m = graft.Manifest.read(spark, path, "CDC snapshot", Format)
+    val pk = m.strings("key_cols")
     require(pk == keyCols,
       s"snapshot at $path is keyed by (${pk.mkString(", ")}), " +
         s"not (${keyCols.mkString(", ")})")
-    val version = String.valueOf(m.get("version")).toLong
-    val maxSeq = String.valueOf(m.get("max_seq")).toLong
-    val ddl = String.valueOf(m.get("schema"))
-    val schema =
-      try org.apache.spark.sql.types.StructType.fromDDL(ddl)
-      catch {
-        case e: Exception => throw new IllegalArgumentException(
-          s"manifest at $path pins an unparsable schema '$ddl': ${e.getMessage}")
-      }
+    val version = m.long("version")
+    val maxSeq = m.long("max_seq")
+    val schema = pinnedSchema(m, path)
     val bounds = changes.agg(min(col(seqCol)).cast("long"),
       max(col(seqCol)).cast("long")).collect()(0)
     if (bounds.isNullAt(0)) throw new IllegalArgumentException(
@@ -238,7 +159,8 @@ object Cdc {
     val next = applyChanges(current, changes, keyCols, seqCol, opCol)
     next.write.mode("overwrite").parquet(s"$path/v${version + 1}")
     val rows = spark.read.parquet(s"$path/v${version + 1}").count()
-    writeManifest(spark, path, version + 1, rows, ddl, keyCols, batchMax)
+    writeManifest(spark, path, version + 1, rows, m.string("schema"), keyCols,
+      batchMax)
   }
 
   /** Re-open the current snapshot version under the manifest's pinned
@@ -247,16 +169,10 @@ object Cdc {
     * copy / torn write). */
   def readSnapshot(spark: org.apache.spark.sql.SparkSession,
                    path: String): DataFrame = {
-    val m = readManifest(spark, path)
-    val version = String.valueOf(m.get("version")).toLong
-    val rows = String.valueOf(m.get("rows")).toLong
-    val ddl = String.valueOf(m.get("schema"))
-    val schema =
-      try org.apache.spark.sql.types.StructType.fromDDL(ddl)
-      catch {
-        case e: Exception => throw new IllegalArgumentException(
-          s"manifest at $path pins an unparsable schema '$ddl': ${e.getMessage}")
-      }
+    val m = graft.Manifest.read(spark, path, "CDC snapshot", Format)
+    val version = m.long("version")
+    val rows = m.long("rows")
+    val schema = pinnedSchema(m, path)
     val vp = new org.apache.hadoop.fs.Path(s"$path/v$version")
     if (!fs(spark, path).exists(vp)) throw new IllegalArgumentException(
       s"manifest at $path points at version $version but $path/v$version " +

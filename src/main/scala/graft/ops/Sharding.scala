@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
+import scala.collection.immutable.ListMap
+
 import graft.text.TextAnalysis
 
 /** Deterministic corpus sharding — the export shape a training run reads:
@@ -21,8 +23,8 @@ import graft.text.TextAnalysis
   * DuckDB oracle recomputes it verbatim. A same-engine-only hash (e.g.
   * xxhash64) would shard equally well but be unverifiable outside Spark.
   *
-  * Write lifecycle follows the persisted-index discipline
-  * ([[graft.sim.Quantize.writeSq8Index]]): refusals before any write,
+  * Write lifecycle follows the persisted-index discipline (the MANIFEST
+  * CONTRACT of [[graft.Manifest]]): refusals before any write,
   * data first (partitioned BY SHARD, so a trainer reading shard k
   * partition-prunes to its own files), format-tagged manifest LAST as
   * the completeness marker, open-time validation against it.
@@ -95,7 +97,8 @@ object Sharding {
       "writeShards: refusing to export an empty corpus")
     docs.withColumn("shard", shardId(col(idCol), n))
       .write.mode("overwrite").partitionBy("shard").parquet(s"$path/data")
-    writeManifest(spark, path, textCol, n)
+    writeManifest(path, ParquetFormat, n, spark.read.parquet(s"$path/data"),
+      textCol)
   }
 
   /** Write the corpus as JSON-LINES shards — the text-interop twin of
@@ -117,32 +120,9 @@ object Sharding {
         "drop or rename it; the export owns that name")
     docs.withColumn("shard", shardId(col(idCol), n))
       .write.mode("overwrite").partitionBy("shard").json(s"$path/data")
-    val ddl = docs.schema.toDDL
-    val per = spark.read.schema(docs.schema.add("shard", "int"))
-      .json(s"$path/data")
-      .groupBy("shard")
-      .agg(count(lit(1)).as("rows"),
-        sum(TextAnalysis.tokenCount(col(textCol)).cast(LongType)).as("tokens"))
-      .orderBy("shard")
-      .collect()
-    val total = per.map(_.getLong(1)).sum
-    val shardsJson = per.map(r =>
-      s"""{"shard": ${r.getInt(0)}, "rows": ${r.getLong(1)}, "tokens": ${r.getLong(2)}}""")
-      .mkString("[", ", ", "]")
-    def esc(s: String): String = s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-    val json =
-      s"""{"format": "graft-shards-jsonl-v1", "n_shards": $n, """ +
-        s""""rows": $total, "schema": "${esc(ddl)}", "shards": $shardsJson}"""
-    val mp = new org.apache.hadoop.fs.Path(s"$path/manifest.json")
-    val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(mp, true)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    writeManifest(path, JsonlFormat, n,
+      spark.read.schema(docs.schema.add("shard", "int")).json(s"$path/data"),
+      textCol, Some(docs.schema.toDDL))
   }
 
   /** Re-open a JSONL export under its manifest-pinned schema. Refusals:
@@ -151,70 +131,50 @@ object Sharding {
     * Returns the corpus with its `shard` column, typed exactly as
     * written. */
   def readShardsJsonl(spark: SparkSession, path: String): DataFrame = {
-    val mp = new org.apache.hadoop.fs.Path(s"$path/manifest.json")
-    val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(mp)) throw new IllegalArgumentException(
-      s"no shard manifest at $path — nothing was exported here, or the " +
-        "write was interrupted before completion (manifest is written last)")
-    val in = fs.open(mp)
-    val raw =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val m =
-      try {
-        val y = new org.yaml.snakeyaml.Yaml(
-          new org.yaml.snakeyaml.constructor.SafeConstructor(
-            new org.yaml.snakeyaml.LoaderOptions()))
-        y.load[java.util.Map[String, Object]](raw)
-      } catch {
-        case e: Exception => throw new IllegalArgumentException(
-          s"$path/manifest.json is unreadable: ${e.getMessage}")
-      }
-    val format = String.valueOf(m.get("format"))
-    if (format != "graft-shards-jsonl-v1") throw new IllegalArgumentException(
-      s"manifest at $path holds format '$format', not a graft-shards-jsonl-v1 " +
-        "export — refusing to read foreign shards")
-    val ddl = String.valueOf(m.get("schema"))
+    val m = graft.Manifest.read(spark, path, "JSONL shard export", JsonlFormat)
+    val ddl = m.string("schema")
     val schema =
       try org.apache.spark.sql.types.StructType.fromDDL(ddl)
       catch {
         case e: Exception => throw new IllegalArgumentException(
           s"manifest at $path pins an unparsable schema '$ddl': ${e.getMessage}")
       }
-    val pinned = """\{"shard":\s*(\d+),\s*"rows":\s*(\d+)""".r
-      .findAllMatchIn(raw).map(g => (g.group(1).toInt, g.group(2).toLong)).toMap
-    val data = spark.read.schema(schema.add("shard", "int")).json(s"$path/data")
-    val actual = data.groupBy("shard").agg(count(lit(1)).as("rows"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).toMap
-    if (actual != pinned) throw new IllegalArgumentException(
-      s"JSONL export at $path does not match its manifest (manifest " +
-        s"$pinned vs files $actual) — partial copy or torn write; restore " +
-        "the matching files")
-    data
+    matched(spark.read.schema(schema.add("shard", "int")).json(s"$path/data"),
+      m, s"JSONL export at $path")
   }
 
-  /** Recompute the manifest from the WRITTEN files (what a reader will
-    * see, not the input frame) and overwrite it — always the LAST step
-    * of a write or append, so its presence marks completeness. */
-  private def writeManifest(spark: SparkSession, path: String,
-                            textCol: String, n: Int): Unit = {
-    val per = spark.read.parquet(s"$path/data")
-      .groupBy("shard")
+  private val ParquetFormat = "graft-shards-v1"
+  private val JsonlFormat = "graft-shards-jsonl-v1"
+
+  /** Write the manifest from the WRITTEN files (what a reader will see,
+    * not the input frame), with per-shard row/token mass — always the
+    * LAST step of a write or append, so its presence marks completeness. */
+  private def writeManifest(path: String, format: String, n: Int,
+                            written: DataFrame, textCol: String,
+                            schema: Option[String] = None): Unit = {
+    val per = written.groupBy("shard")
       .agg(count(lit(1)).as("rows"),
         sum(TextAnalysis.tokenCount(col(textCol)).cast(LongType)).as("tokens"))
       .orderBy("shard")
-      .collect()
-    val total = per.map(_.getLong(1)).sum
-    val shardsJson = per.map(r =>
-      s"""{"shard": ${r.getInt(0)}, "rows": ${r.getLong(1)}, "tokens": ${r.getLong(2)}}""")
-      .mkString("[", ", ", "]")
-    val json =
-      s"""{"format": "graft-shards-v1", "n_shards": $n, "rows": $total, "shards": $shardsJson}"""
-    val mp = new org.apache.hadoop.fs.Path(s"$path/manifest.json")
-    val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(mp, true)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+      .collect().toSeq
+    graft.Manifest.write(written.sparkSession, path,
+      Seq("format" -> format, "n_shards" -> n, "rows" -> per.map(_.getLong(1)).sum) ++
+        schema.map("schema" -> _) :+
+        "shards" -> per.map(r => ListMap("shard" -> r.getInt(0),
+          "rows" -> r.getLong(1), "tokens" -> r.getLong(2))): _*)
+  }
+
+  /** `data` if its per-shard row counts are the manifest's; the count
+    * reads no data columns, only the shard partition value. */
+  private def matched(data: DataFrame, m: graft.Manifest.Fields,
+                      what: String): DataFrame = {
+    val pinned = m.objects("shards").map(s => s.int("shard") -> s.long("rows")).toMap
+    val actual = data.groupBy("shard").agg(count(lit(1)).as("rows"))
+      .collect().map(r => (r.getInt(0), r.getLong(1))).toMap
+    if (actual != pinned) throw new IllegalArgumentException(
+      s"$what does not match its manifest (manifest $pinned vs files " +
+        s"$actual) — partial copy or torn write; restore the matching files")
+    data
   }
 
   /** Append documents to an existing sharded export WITHOUT rewriting it:
@@ -233,22 +193,9 @@ object Sharding {
   def appendToShards(docs: DataFrame, idCol: String, textCol: String,
                      path: String): Unit = {
     val spark = docs.sparkSession
-    val mp = new org.apache.hadoop.fs.Path(s"$path/manifest.json")
-    val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(mp)) throw new IllegalArgumentException(
-      s"no shard manifest at $path — appendToShards needs an existing " +
-        "export; use writeShards for the first write")
-    val in = fs.open(mp)
-    val raw =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    if (!raw.contains("\"graft-shards-v1\"")) throw new IllegalArgumentException(
-      s"manifest at $path is not a graft-shards-v1 export (got: $raw) — " +
-        "refusing to append to foreign shards")
-    val n = """"n_shards":\s*(\d+)""".r.findFirstMatchIn(raw)
-      .map(_.group(1).toInt)
-      .getOrElse(throw new IllegalArgumentException(
-        s"shard manifest at $path is missing 'n_shards': $raw"))
+    val n = graft.Manifest.read(spark, path,
+      "shard export (appendToShards needs one written by writeShards)",
+      ParquetFormat).int("n_shards")
     require(docs.limit(1).collect().nonEmpty,
       "appendToShards: refusing to append an empty frame")
     // id-collision refusal reads only the id column of the existing export
@@ -263,7 +210,8 @@ object Sharding {
     docs.withColumn("shard", shardId(col(idCol), n))
       .write.mode("append").partitionBy("shard").parquet(s"$path/data")
     // manifest recomputed from the written files, overwritten LAST
-    writeManifest(spark, path, textCol, n)
+    writeManifest(path, ParquetFormat, n, spark.read.parquet(s"$path/data"),
+      textCol)
   }
 
   /** Re-open a sharded export; refuses a missing/foreign manifest and a
@@ -271,27 +219,7 @@ object Sharding {
     * validation count reads no data columns, only the shard partition
     * value). Returns the corpus with its `shard` column. */
   def readShards(spark: SparkSession, path: String): DataFrame = {
-    val mp = new org.apache.hadoop.fs.Path(s"$path/manifest.json")
-    val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(mp)) throw new IllegalArgumentException(
-      s"no shard manifest at $path — nothing was exported here, or the " +
-        "write was interrupted before completion (manifest is written last)")
-    val in = fs.open(mp)
-    val raw =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    if (!raw.contains("\"graft-shards-v1\"")) throw new IllegalArgumentException(
-      s"manifest at $path is not a graft-shards-v1 export (got: $raw) — " +
-        "refusing to read foreign shards")
-    val pinned = """\{"shard":\s*(\d+),\s*"rows":\s*(\d+)""".r
-      .findAllMatchIn(raw).map(m => (m.group(1).toInt, m.group(2).toLong)).toMap
-    val data = spark.read.parquet(s"$path/data")
-    val actual = data.groupBy("shard").agg(count(lit(1)).as("rows"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).toMap
-    if (actual != pinned) throw new IllegalArgumentException(
-      s"sharded export at $path does not match its manifest (manifest " +
-        s"$pinned vs files $actual) — partial copy or torn write; restore " +
-        "the matching files")
-    data
+    val m = graft.Manifest.read(spark, path, "shard export", ParquetFormat)
+    matched(spark.read.parquet(s"$path/data"), m, s"sharded export at $path")
   }
 }

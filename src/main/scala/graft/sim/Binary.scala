@@ -283,12 +283,8 @@ object Binary {
           "them before persisting; a null code word cannot be probed")
     val dim = stats.getInt(2)
     val n = stats.getLong(0)
-    val json = s"""{"format": "graft-bin-v1", "dim": $dim, "rows": $n}"""
-    val mp = new org.apache.hadoop.fs.Path(s"$path/manifest.json")
-    val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(mp, true)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    graft.Manifest.write(spark, path, "format" -> "graft-bin-v1", "dim" -> dim,
+      "rows" -> n)
   }
 
   /** Re-open a persisted binary index; refuses a missing/foreign manifest,
@@ -296,23 +292,8 @@ object Binary {
     * length disagrees with ceil(dim/8) (the manifest does not belong to
     * this data). */
   def readBinaryIndex(spark: SparkSession, path: String): DataFrame = {
-    val mp = new org.apache.hadoop.fs.Path(s"$path/manifest.json")
-    val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(mp)) throw new IllegalArgumentException(
-      s"no binary index manifest at $path — nothing was persisted here, or " +
-        "the write was interrupted before completion (manifest is written last)")
-    val in = fs.open(mp)
-    val raw =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    def num(k: String): Long =
-      s""""$k":\\s*(\\d+)""".r.findFirstMatchIn(raw).map(_.group(1).toLong)
-        .getOrElse(throw new IllegalArgumentException(
-          s"binary index manifest at $path is missing '$k': $raw"))
-    if (!raw.contains("\"graft-bin-v1\"")) throw new IllegalArgumentException(
-      s"manifest at $path is not a graft-bin-v1 index (got: $raw) — refusing " +
-        "to scan foreign codes")
-    val dim = num("dim"); val rows = num("rows")
+    val m = graft.Manifest.read(spark, path, "binary index", "graft-bin-v1")
+    val dim = m.long("dim"); val rows = m.long("rows")
     val expectBytes = ((dim + 7) / 8).toInt
     val codes = spark.read.parquet(s"$path/codes")
     val n = codes.count()

@@ -50,7 +50,7 @@ object Ivf {
     * the two-level path caps per-row work at O(√k·dim). */
   val SingleLevelMaxK = 256
 
-  /** Index metadata, persisted as `manifest.json` by [[writeIndex]] and
+  /** Index metadata, persisted as the manifest by [[writeIndex]] and
     * validated by [[readIndex]]/[[topK]]. Without it a re-opened index
     * probed with wrong-dimension vectors fails only via
     * [[graft.functions.VecCosine]]'s NULL-on-length-mismatch semantics —
@@ -316,16 +316,9 @@ object Ivf {
       IvfMeta(dim, index.coarse.count().toInt, index.cells.count(),
         "cosine", -1, -1L)
     }
-    val json =
-      s"""{"format": "graft-ivf-v1", "dim": ${m.dim}, "kc": ${m.kc}, """ +
-        s""""num_cells": ${m.numCells}, "metric": "${m.metric}", """ +
-        s""""iters": ${m.iters}, "seed": ${m.seed}}"""
-    val spark = index.coarse.sparkSession
-    val mp = new org.apache.hadoop.fs.Path(s"$path/manifest.json")
-    val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(mp, true)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    graft.Manifest.write(index.coarse.sparkSession, path, "format" -> Format,
+      "dim" -> m.dim, "kc" -> m.kc, "num_cells" -> m.numCells,
+      "metric" -> m.metric, "iters" -> m.iters, "seed" -> m.seed)
   }
 
   /** Re-open a persisted index without retraining. The partition column
@@ -463,51 +456,25 @@ object Ivf {
     fs.delete(sp, true): Unit
   }
 
-  /** Parse + validate `manifest.json`. Fails loudly on a missing or
-    * corrupt manifest — an index dir without one is not a graft IVF index
-    * (or was written by a pre-manifest version; re-write it with
+  private val Format = "graft-ivf-v1"
+
+  /** Open + validate the manifest ([[graft.Manifest]] refuses a missing,
+    * corrupt or foreign one; an index dir without one is not a graft IVF
+    * index, or was written by a pre-manifest version: re-write it with
     * [[writeIndex]]). */
   private def readManifest(spark: org.apache.spark.sql.SparkSession,
                            path: String): IvfMeta = {
-    val mp = new org.apache.hadoop.fs.Path(s"$path/manifest.json")
-    val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(mp)) throw new IllegalArgumentException(
-      s"$path/manifest.json is missing — not a graft IVF index (or written " +
-        "by a pre-manifest version); re-create it with Ivf.writeIndex")
-    val in = fs.open(mp)
-    val txt =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val m =
-      try {
-        // JSON is valid YAML flow syntax; SnakeYAML is already on the
-        // classpath. SafeConstructor, NOT the default constructor: a
-        // manifest can arrive from a shared filesystem, and plain
-        // `new Yaml().load` instantiates arbitrary classes from `!!` tags
-        // — an unsafe-deserialization hole at index-open time.
-        val y = new org.yaml.snakeyaml.Yaml(
-            new org.yaml.snakeyaml.constructor.SafeConstructor(
-              new org.yaml.snakeyaml.LoaderOptions()))
-          .load[java.util.Map[String, Object]](txt)
-        def num(k: String): Long = y.get(k) match {
-          case n: Number => n.longValue()
-          case other => throw new IllegalArgumentException(
-            s"field '$k' is ${if (other == null) "missing" else other.toString}")
-        }
-        IvfMeta(num("dim").toInt, num("kc").toInt, num("num_cells"),
-          String.valueOf(y.get("metric")), num("iters").toInt, num("seed"))
-      } catch {
-        case e: Exception => throw new IllegalArgumentException(
-          s"$path/manifest.json is corrupt: ${e.getMessage}", e)
-      }
+    val y = graft.Manifest.read(spark, path, "IVF index", Format)
+    val m = IvfMeta(y.int("dim"), y.int("kc"), y.long("num_cells"),
+      y.string("metric"), y.int("iters"), y.long("seed"))
     if (m.dim <= 0 || m.numCells <= 0) throw new IllegalArgumentException(
-      s"$path/manifest.json is corrupt: dim=${m.dim}, num_cells=${m.numCells}")
+      s"the manifest at $path is corrupt: dim=${m.dim}, num_cells=${m.numCells}")
     // topK unconditionally reranks with cosine; opening an index that
     // declares any other metric (or none) would silently rank with the
     // wrong distance — the exact divergence class the manifest exists to
     // turn into a raise.
     if (m.metric != "cosine") throw new IllegalArgumentException(
-      s"$path/manifest.json declares metric='${m.metric}' but this engine " +
+      s"the manifest at $path declares metric='${m.metric}' but this engine " +
         "ranks with cosine only — refusing to probe with the wrong distance")
     m
   }

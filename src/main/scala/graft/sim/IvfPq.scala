@@ -99,15 +99,7 @@ object IvfPq {
     Pq.writeIndex(index.pq, s"$path/pq")
     index.coCodes.repartition(col("_gf_cid"))
       .write.mode("overwrite").partitionBy("_gf_cid").parquet(s"$path/codes")
-    val json =
-      s"""{"format": "graft-ivfpq-v1", "dim": ${index.pq.meta.dim}, """ +
-        s""""m": ${index.pq.meta.m}, "ks": ${index.pq.meta.ks}}"""
-    val spark = index.coCodes.sparkSession
-    val mp = new org.apache.hadoop.fs.Path(s"$path/manifest.json")
-    val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(mp, true)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    writeManifest(path, PlainFormat, index.pq)
   }
 
   /** Re-open a persisted IVFADC index. The child manifests carry the
@@ -115,15 +107,11 @@ object IvfPq {
     * manifest to their data); this adds the cross-check the children
     * cannot do alone — both halves must describe the SAME geometry — so
     * a dir assembled from two different indexes fails at open time, not
-    * as silently-wrong ADC estimates mid-probe. */
+    * as silently-wrong ADC estimates mid-probe. A residual index is
+    * refused from the parent manifest's format. */
   def readIndex(spark: org.apache.spark.sql.SparkSession,
                 path: String): IvfPqIndex = {
-    val mp = new org.apache.hadoop.fs.Path(s"$path/manifest.json")
-    val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(mp)) throw new IllegalArgumentException(
-      s"$path/manifest.json is missing — not a graft IVFADC index (or a " +
-        "torn write: the manifest is written last); re-create it with " +
-        "IvfPq.writeIndex")
+    readPlainManifest(spark, path)
     val ivf = Ivf.readIndex(spark, s"$path/ivf")
     val pq = Pq.readIndex(spark, s"$path/pq")
     val ivfDim = ivf.meta.map(_.dim).getOrElse(-1)
@@ -260,30 +248,17 @@ object IvfPq {
     index.offsets.write.mode("overwrite").parquet(s"$path/offsets")
     index.coCodes.repartition(col("_gf_cid"))
       .write.mode("overwrite").partitionBy("_gf_cid").parquet(s"$path/codes")
-    val json =
-      s"""{"format": "graft-ivfpq-res-v1", "dim": ${index.pq.meta.dim}, """ +
-        s""""m": ${index.pq.meta.m}, "ks": ${index.pq.meta.ks}}"""
-    val spark = index.coCodes.sparkSession
-    val mp = new org.apache.hadoop.fs.Path(s"$path/manifest.json")
-    val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(mp, true)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    writeManifest(path, ResidualFormat, index.pq)
   }
 
   /** Re-open a persisted residual index (offsets cached — K×dim doubles,
     * the same budget as the fine centroids). Same open-time dim
     * cross-check as [[readIndex]]; additionally the offsets table must
-    * match the geometry (a plain index dir is refused by the PQ metric
-    * gate before this is reached). */
+    * match the geometry (a plain index dir is refused from the parent
+    * manifest's format before this is reached). */
   def readIndexResidual(spark: org.apache.spark.sql.SparkSession,
                         path: String): IvfPqResidualIndex = {
-    val mp = new org.apache.hadoop.fs.Path(s"$path/manifest.json")
-    val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(mp)) throw new IllegalArgumentException(
-      s"$path/manifest.json is missing — not a graft residual IVFADC " +
-        "index (or a torn write: the manifest is written last); " +
-        "re-create it with IvfPq.writeIndexResidual")
+    graft.Manifest.read(spark, path, "residual IVFADC index", ResidualFormat)
     val ivf = Ivf.readIndex(spark, s"$path/ivf")
     val pq = Pq.readIndex(spark, s"$path/pq", expectMetric = "l2adc-residual")
     val ivfDim = ivf.meta.map(_.dim).getOrElse(-1)
@@ -311,7 +286,8 @@ object IvfPq {
     * `ivf/indexed` and the byte codes into `codes`, each cid-partitioned
     * so only the batch's cells' directories are written.
     *
-    * Refusals BEFORE any write: wrong-dim batch (parent manifest), and
+    * Refusals BEFORE any write: a residual index and a wrong-dim batch
+    * (parent manifest), and
     * with `checkIds` (default) ids already present in EITHER half — a
     * duplicate code row double-counts in every ADC scan, and a duplicate
     * raw row duplicates rerank shortlist hits.
@@ -331,11 +307,11 @@ object IvfPq {
   def appendToIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                     batch: DataFrame, idCol: String, vecCol: String,
                     checkIds: Boolean = true): Long = {
-    val parent = readParentManifest(spark, path)
+    val (pdim, pm) = readParentManifest(spark, path)
     val dim = Similarity.inferDim(batch, vecCol)
-    if (dim != parent.dim) throw new IllegalArgumentException(
+    if (dim != pdim) throw new IllegalArgumentException(
       s"append batch has vector dim $dim but the IVFADC index at $path " +
-        s"was built at dim ${parent.dim} — wrong embedding column or " +
+        s"was built at dim $pdim — wrong embedding column or " +
         "wrong index")
     val coarse = spark.read.parquet(s"$path/ivf/coarse")
     val cells = spark.read.parquet(s"$path/ivf/cells")
@@ -356,7 +332,7 @@ object IvfPq {
           "batch or use fresh ids")
     }
     val coded = Pq.encode(batch, idCol, vecCol, codebooks,
-      parent.m, parent.dim / parent.m)
+      pm, pdim / pm)
     graft.Cached.using(Ivf.assignFine(Ivf.assignCoarse(base, coarse), cells)
         .select(col("_gf_cid"), col("_gf_id"), col("_gf_v"))) { assigned =>
       graft.Cached.using(assigned.select(col("_gf_cid"), col("_gf_id"))
@@ -381,67 +357,40 @@ object IvfPq {
     }
   }
 
-  private final case class ParentMeta(dim: Int, m: Int, ks: Int)
+  private val PlainFormat = "graft-ivfpq-v1"
+  private val ResidualFormat = "graft-ivfpq-res-v1"
 
-  /** The one format [[appendToIndex]] may write into. A residual index
-    * (`graft-ivfpq-res-v1`) stores codes of per-cell OFFSET residuals
-    * plus an `offsets` table the plain append path neither applies nor
-    * updates — appending plainly-encoded codes into it would silently
-    * corrupt every ADC ranking, so the manifest format is checked and
-    * anything else refused BEFORE any read of the codebooks. */
-  private val AppendableFormat = "graft-ivfpq-v1"
+  private def writeManifest(path: String, format: String,
+                            pq: Pq.PqIndex): Unit =
+    graft.Manifest.write(pq.codebooks.sparkSession, path, "format" -> format,
+      "dim" -> pq.meta.dim, "m" -> pq.meta.m, "ks" -> pq.meta.ks)
 
+  /** The parent manifest of a PLAIN index. A residual index stores codes
+    * of per-cell OFFSET residuals plus an `offsets` table that a plain
+    * open ignores and a plain append neither applies nor updates, so it
+    * is refused by name, BEFORE any read of the halves or any write. */
+  private def readPlainManifest(spark: org.apache.spark.sql.SparkSession,
+                                path: String): graft.Manifest.Fields = {
+    val m = graft.Manifest.read(spark, path, "IVFADC index",
+      PlainFormat, ResidualFormat)
+    if (m.string("format") == ResidualFormat) throw new IllegalArgumentException(
+      s"the index at $path is a RESIDUAL IVFADC index ($ResidualFormat): " +
+        "its codes encode per-cell offset residuals, which a plain open " +
+        "would misread and a plain append would silently corrupt. Open it " +
+        "with readIndexResidual; to append, rebuild with buildResidual + " +
+        "writeIndexResidual or use a plain-format index")
+    m
+  }
+
+  /** (dim, m) of a plain index's parent manifest, for [[appendToIndex]]. */
   private def readParentManifest(spark: org.apache.spark.sql.SparkSession,
-                                 path: String): ParentMeta = {
-    val mp = new org.apache.hadoop.fs.Path(s"$path/manifest.json")
-    val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(mp)) throw new IllegalArgumentException(
-      s"$path/manifest.json is missing — not a graft IVFADC index (or a " +
-        "torn write: the manifest is written last); re-create it with " +
-        "IvfPq.writeIndex")
-    val in = fs.open(mp)
-    val txt =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val y =
-      try {
-        // SafeConstructor: a shared-filesystem manifest must not
-        // instantiate classes (same rationale as Ivf/Pq.readManifest)
-        new org.yaml.snakeyaml.Yaml(
-            new org.yaml.snakeyaml.constructor.SafeConstructor(
-              new org.yaml.snakeyaml.LoaderOptions()))
-          .load[java.util.Map[String, Object]](txt)
-      } catch {
-        case e: Exception => throw new IllegalArgumentException(
-          s"$path/manifest.json is corrupt: ${e.getMessage}", e)
-      }
-    if (y == null) throw new IllegalArgumentException(
-      s"$path/manifest.json is empty")
-    // format refusal stays OUTSIDE the corrupt-wrapper: a residual
-    // index is a well-formed manifest being used wrongly, not damage
-    y.get("format") match {
-      case AppendableFormat => // the only append-safe layout
-      case "graft-ivfpq-res-v1" => throw new IllegalArgumentException(
-        s"the index at $path is a RESIDUAL IVFADC index " +
-          "(graft-ivfpq-res-v1): its codes encode per-cell offset " +
-          "residuals, which appendToIndex's plain encoding would " +
-          "silently corrupt. Rebuild with buildResidual + " +
-          "writeResidualIndex, or append to a plain-format index")
-      case other => throw new IllegalArgumentException(
-        s"$path/manifest.json field 'format' is ${if (other == null)
-          "missing" else s"'$other'"} — expected '$AppendableFormat'")
-    }
-    def num(k: String): Int = y.get(k) match {
-      case nn: Number => nn.intValue()
-      case other => throw new IllegalArgumentException(
-        s"$path/manifest.json field '$k' is ${if (other == null)
-          "missing" else other.toString}")
-    }
-    val pm = ParentMeta(num("dim"), num("m"), num("ks"))
-    if (pm.dim <= 0 || pm.m <= 0 || pm.dim % pm.m != 0)
+                                 path: String): (Int, Int) = {
+    val m = readPlainManifest(spark, path)
+    val (dim, sub) = (m.int("dim"), m.int("m"))
+    if (dim <= 0 || sub <= 0 || dim % sub != 0)
       throw new IllegalArgumentException(
-        s"$path/manifest.json: dim=${pm.dim}, m=${pm.m}")
-    pm
+        s"the manifest at $path is corrupt: dim=$dim, m=$sub")
+    (dim, sub)
   }
 
   /** The shared ADC scan: probe subplan collected ONCE upstream, (qid,

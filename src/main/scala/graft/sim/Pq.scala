@@ -47,7 +47,7 @@ import org.apache.spark.sql.functions._
   */
 object Pq {
 
-  /** Index metadata, persisted as `manifest.json` and validated on
+  /** Index metadata, persisted as the manifest and validated on
     * read/probe — same fail-loudly contract as [[Ivf.IvfMeta]]. */
   final case class PqMeta(dim: Int, m: Int, ks: Int, iters: Int, seed: Long,
                           metric: String)
@@ -285,16 +285,9 @@ object Pq {
     index.codebooks.write.mode("overwrite").parquet(s"$path/codebooks")
     index.codes.write.mode("overwrite").parquet(s"$path/codes")
     val mt = index.meta
-    val json =
-      s"""{"format": "graft-pq-v1", "dim": ${mt.dim}, "m": ${mt.m}, """ +
-        s""""ks": ${mt.ks}, "iters": ${mt.iters}, "seed": ${mt.seed}, """ +
-        s""""metric": "${mt.metric}"}"""
-    val spark = index.codebooks.sparkSession
-    val mp = new org.apache.hadoop.fs.Path(s"$path/manifest.json")
-    val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(mp, true)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    graft.Manifest.write(index.codebooks.sparkSession, path, "format" -> Format,
+      "dim" -> mt.dim, "m" -> mt.m, "ks" -> mt.ks, "iters" -> mt.iters,
+      "seed" -> mt.seed, "metric" -> mt.metric)
   }
 
   /** Re-open a persisted PQ index. Validates manifest presence/sanity and
@@ -360,42 +353,19 @@ object Pq {
     }
   }
 
+  private val Format = "graft-pq-v1"
+
   private def readManifest(spark: SparkSession, path: String,
                            expectMetric: String = "cosine-l2adc"): PqMeta = {
-    val mp = new org.apache.hadoop.fs.Path(s"$path/manifest.json")
-    val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(mp)) throw new IllegalArgumentException(
-      s"$path/manifest.json is missing — not a graft PQ index; re-create " +
-        "it with Pq.writeIndex")
-    val in = fs.open(mp)
-    val txt =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val meta =
-      try {
-        // SafeConstructor for the same reason as Ivf.readManifest: a
-        // shared-filesystem manifest must not instantiate classes.
-        val y = new org.yaml.snakeyaml.Yaml(
-            new org.yaml.snakeyaml.constructor.SafeConstructor(
-              new org.yaml.snakeyaml.LoaderOptions()))
-          .load[java.util.Map[String, Object]](txt)
-        def num(k: String): Long = y.get(k) match {
-          case n: Number => n.longValue()
-          case other => throw new IllegalArgumentException(
-            s"field '$k' is ${if (other == null) "missing" else other.toString}")
-        }
-        PqMeta(num("dim").toInt, num("m").toInt, num("ks").toInt,
-          num("iters").toInt, num("seed"), String.valueOf(y.get("metric")))
-      } catch {
-        case e: Exception => throw new IllegalArgumentException(
-          s"$path/manifest.json is corrupt: ${e.getMessage}", e)
-      }
+    val y = graft.Manifest.read(spark, path, "PQ index", Format)
+    val meta = PqMeta(y.int("dim"), y.int("m"), y.int("ks"), y.int("iters"),
+      y.long("seed"), y.string("metric"))
     if (meta.dim <= 0 || meta.m <= 0 || meta.ks <= 0 || meta.ks > 256 ||
         meta.dim % meta.m != 0) throw new IllegalArgumentException(
-      s"$path/manifest.json is corrupt: dim=${meta.dim}, m=${meta.m}, " +
+      s"the manifest at $path is corrupt: dim=${meta.dim}, m=${meta.m}, " +
         s"ks=${meta.ks}")
     if (meta.metric != expectMetric) throw new IllegalArgumentException(
-      s"$path/manifest.json declares metric='${meta.metric}' but this " +
+      s"the manifest at $path declares metric='${meta.metric}' but this " +
         s"open expects '$expectMetric' — a residual-encoded index is only " +
         "probeable through IvfPq.readIndexResidual (its codes are " +
         "relative to per-cell offsets), and a plain index only through " +

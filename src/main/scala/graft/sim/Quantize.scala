@@ -128,12 +128,8 @@ object Quantize {
           "them before persisting; a null code word cannot be probed")
     val dim = stats.getLong(2)
     val n = stats.getLong(0)
-    val json = s"""{"format": "graft-sq8-v1", "dim": $dim, "rows": $n}"""
-    val mp = new org.apache.hadoop.fs.Path(s"$path/manifest.json")
-    val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(mp, true)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    graft.Manifest.write(spark, path, "format" -> "graft-sq8-v1", "dim" -> dim,
+      "rows" -> n)
   }
 
   /** Re-open a persisted SQ8 index; refuses a missing/foreign manifest, a
@@ -141,23 +137,8 @@ object Quantize {
     * code word whose byte length disagrees with the manifest dim (the
     * manifest does not belong to this data). */
   def readSq8Index(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
-    val mp = new org.apache.hadoop.fs.Path(s"$path/manifest.json")
-    val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(mp)) throw new IllegalArgumentException(
-      s"no SQ8 index manifest at $path — nothing was persisted here, or the " +
-        "write was interrupted before completion (manifest is written last)")
-    val in = fs.open(mp)
-    val raw =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    def num(k: String): Long =
-      s""""$k":\\s*(\\d+)""".r.findFirstMatchIn(raw).map(_.group(1).toLong)
-        .getOrElse(throw new IllegalArgumentException(
-          s"SQ8 manifest at $path is missing '$k': $raw"))
-    if (!raw.contains("\"graft-sq8-v1\"")) throw new IllegalArgumentException(
-      s"manifest at $path is not a graft-sq8-v1 index (got: $raw) — refusing " +
-        "to scan foreign codes")
-    val dim = num("dim"); val rows = num("rows")
+    val m = graft.Manifest.read(spark, path, "SQ8 index", "graft-sq8-v1")
+    val dim = m.long("dim"); val rows = m.long("rows")
     val codes = spark.read.parquet(s"$path/codes")
     val n = codes.count()
     if (n != rows) throw new IllegalArgumentException(

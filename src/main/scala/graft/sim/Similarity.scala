@@ -255,12 +255,15 @@ object Similarity {
     val spark = exact.sparkSession
     val sel = exact.select(col("query_id"), col("neighbor_id"))
     val truthRows = sel.collect()
-    val truth = broadcast(spark.createDataFrame(
-      java.util.Arrays.asList(truthRows: _*), sel.schema))
+    val truth = spark.createDataFrame(
+      java.util.Arrays.asList(truthRows: _*), sel.schema)
+    // The broadcast hint goes on the semi-join's build side only: a hinted
+    // `truthN` would carry it to the preserved side of the left join,
+    // where Spark cannot build and drops the hint with a warning.
     val truthN = truth.groupBy("query_id").agg(count(lit(1)).as("_gf_n"))
     approx.map { case (name, df) =>
       val hits = df.select(col("query_id"), col("neighbor_id"))
-        .join(truth, Seq("query_id", "neighbor_id"), "left_semi")
+        .join(broadcast(truth), Seq("query_id", "neighbor_id"), "left_semi")
         .groupBy("query_id").agg(count(lit(1)).as("_gf_hits"))
       truthN
         .join(hits, Seq("query_id"), "left")

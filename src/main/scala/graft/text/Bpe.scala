@@ -155,6 +155,8 @@ object Bpe {
     syms
   }
 
+  private val Format = "graft-bpe-v1"
+
   /** Persist a trained merge table — the "train the tokenizer once on a
     * sample, ship it to the 100 TB encode pass" lifecycle. One tiny
     * rank-ordered parquet, the public text shape alongside (merges.txt +
@@ -169,14 +171,8 @@ object Bpe {
       .toDF("rank", "first", "second")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/merges")
     writeTextFormat(spark, model, path)
-    val json =
-      s"""{"format": "graft-bpe-v1", "num_merges": ${model.merges.size}, """ +
-        s""""end_of_word": "$EndOfWord"}"""
-    val mp = new org.apache.hadoop.fs.Path(s"$path/manifest.json")
-    val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(mp, true)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    graft.Manifest.write(spark, path, "format" -> Format,
+      "num_merges" -> model.merges.size, "end_of_word" -> EndOfWord)
   }
 
   /** Re-open a persisted merge table. Rank order restores the exact
@@ -185,29 +181,8 @@ object Bpe {
     * manifest (a partially-copied merges file would otherwise encode
     * silently differently). */
   def readModel(spark: org.apache.spark.sql.SparkSession, path: String): Model = {
-    val mp = new org.apache.hadoop.fs.Path(s"$path/manifest.json")
-    val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(mp)) throw new IllegalArgumentException(
-      s"$path/manifest.json is missing — not a persisted graft BPE model " +
-        "(or an interrupted write; re-create it with Bpe.writeModel)")
-    val in = fs.open(mp)
-    val txt =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val m =
-      try {
-        val y = new org.yaml.snakeyaml.Yaml(
-          new org.yaml.snakeyaml.constructor.SafeConstructor(
-            new org.yaml.snakeyaml.LoaderOptions()))
-        y.load[java.util.Map[String, Object]](txt)
-      } catch {
-        case e: Exception => throw new IllegalArgumentException(
-          s"$path/manifest.json is unreadable: ${e.getMessage}")
-      }
-    val format = String.valueOf(m.get("format"))
-    if (format != "graft-bpe-v1") throw new IllegalArgumentException(
-      s"$path holds format '$format', not a graft-bpe-v1 merge table")
-    val declared = String.valueOf(m.get("num_merges")).toInt
+    val declared = graft.Manifest.read(spark, path, "BPE merge table", Format)
+      .int("num_merges")
     val rows = spark.read.parquet(s"$path/merges")
       .orderBy("rank").collect()
       .map(r => (r.getAs[String]("first"), r.getAs[String]("second")))
@@ -236,7 +211,7 @@ object Bpe {
 
   /** JSON string escaping for vocab tokens: `"`/`\`/control chars and all
     * non-ASCII as \\uXXXX, so the file is plain-ASCII JSON any consumer
-    * (and our snakeyaml read-back) parses identically. */
+    * (and our [[graft.Manifest.parse]] read-back) parses identically. */
   private def jsonEscape(s: String): String = {
     val sb = new StringBuilder
     s.foreach {
@@ -315,19 +290,10 @@ object Bpe {
     }
     val model = Model(merges)
     val vocabTxt = readText(spark, s"$path/vocab.json")
-    val parsed =
-      try {
-        val y = new org.yaml.snakeyaml.Yaml(
-          new org.yaml.snakeyaml.constructor.SafeConstructor(
-            new org.yaml.snakeyaml.LoaderOptions()))
-        y.load[java.util.Map[String, Object]](vocabTxt)
-      } catch {
-        case e: Exception => throw new IllegalArgumentException(
-          s"$path/vocab.json is unreadable: ${e.getMessage}")
-      }
-    val byId = new Array[String](parsed.size())
-    parsed.forEach { (tok, id) =>
-      val i = String.valueOf(id).toInt
+    val parsed = graft.Manifest.parse(s"$path/vocab.json", vocabTxt)
+    val byId = new Array[String](parsed.keys.size)
+    parsed.keys.foreach { tok =>
+      val i = parsed.int(tok)
       if (i < 0 || i >= byId.length || byId(i) != null)
         throw new IllegalArgumentException(
           s"$path/vocab.json ids are not dense 0..${byId.length - 1} " +

@@ -199,14 +199,7 @@ object FastText {
     def release(): Unit = held.foreach(_.release())
   }
 
-  private def writeManifest(spark: org.apache.spark.sql.SparkSession,
-                            path: String, json: String): Unit = {
-    val mp = new org.apache.hadoop.fs.Path(s"$path/manifest.json")
-    val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(mp, true)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+  private val Format = "graft-ft-v1"
 
   /** Persist a TRAINED (bucket-keyed) model — the "fit the gate once on
     * labeled data, ship it to every curation run" lifecycle (the
@@ -219,9 +212,8 @@ object FastText {
     val w = model.weightFrame(spark)
     w.coalesce(1).write.mode("overwrite").parquet(s"$path/weights")
     val n = model.weights.count(_ != 0.0)
-    writeManifest(spark, path,
-      s"""{"format": "graft-ft-v1", "keyed": "bucket", """ +
-        s""""buckets": ${model.buckets}, "bias": ${model.bias}, "rows": $n}""")
+    graft.Manifest.write(spark, path, "format" -> Format, "keyed" -> "bucket",
+      "buckets" -> model.buckets, "bias" -> model.bias, "rows" -> n)
   }
 
   /** Persist a STRING-keyed weight table (a handed/exported model — the
@@ -232,9 +224,8 @@ object FastText {
     val w = weights.select(col("feature"), col("weight"))
     w.coalesce(1).write.mode("overwrite").parquet(s"$path/weights")
     val n = w.count()
-    writeManifest(spark, path,
-      s"""{"format": "graft-ft-v1", "keyed": "feature", """ +
-        s""""bias": $bias, "rows": $n}""")
+    graft.Manifest.write(spark, path, "format" -> Format, "keyed" -> "feature",
+      "bias" -> bias, "rows" -> n)
   }
 
   /** Re-open a persisted classifier. Refusals: missing manifest (an
@@ -244,31 +235,10 @@ object FastText {
     * would silently mis-route every feature). */
   def readModel(spark: org.apache.spark.sql.SparkSession,
                 path: String): LoadedModel = {
-    val mp = new org.apache.hadoop.fs.Path(s"$path/manifest.json")
-    val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(mp)) throw new IllegalArgumentException(
-      s"$path/manifest.json is missing — not a persisted graft fastText " +
-        "model (or an interrupted write; re-create with FastText.writeModel)")
-    val in = fs.open(mp)
-    val txt =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val m =
-      try {
-        val y = new org.yaml.snakeyaml.Yaml(
-          new org.yaml.snakeyaml.constructor.SafeConstructor(
-            new org.yaml.snakeyaml.LoaderOptions()))
-        y.load[java.util.Map[String, Object]](txt)
-      } catch {
-        case e: Exception => throw new IllegalArgumentException(
-          s"$path/manifest.json is unreadable: ${e.getMessage}")
-      }
-    val format = String.valueOf(m.get("format"))
-    if (format != "graft-ft-v1") throw new IllegalArgumentException(
-      s"$path holds format '$format', not a graft-ft-v1 classifier")
-    val keyed = String.valueOf(m.get("keyed"))
-    val bias = String.valueOf(m.get("bias")).toDouble
-    val declared = String.valueOf(m.get("rows")).toLong
+    val m = graft.Manifest.read(spark, path, "fastText model", Format)
+    val keyed = m.string("keyed")
+    val bias = m.double("bias")
+    val declared = m.long("rows")
     val held = graft.Cached.hold(spark.read.parquet(s"$path/weights"))
     val w = held.df
     def refuse(msg: String): Nothing = throw new IllegalArgumentException(msg)
@@ -279,7 +249,7 @@ object FastText {
           s"$declared — refusing a partially-copied model")
       keyed match {
         case "bucket" =>
-          val b = String.valueOf(m.get("buckets")).toInt
+          val b = m.int("buckets")
           val bad = w.filter(col("bucket") < 0 || col("bucket") >= b).count()
           if (bad > 0) refuse(
             s"$path/weights holds $bad bucket ids outside [0, $b) — " +

@@ -219,6 +219,8 @@ object LangModel {
     (uni, bi)
   }
 
+  private val Format = "graft-lm-v1"
+
   /** Persist a trained LM — the "train once on the trusted slice, ship
     * to every curation run" lifecycle (the [[graft.sim.Ivf.writeIndex]]
     * conventions: frames first, manifest LAST as the completeness
@@ -226,14 +228,8 @@ object LangModel {
   def writeModel(lm: Lm, path: String): Unit = {
     lm.unigrams.write.mode("overwrite").parquet(s"$path/unigrams")
     lm.bigrams.write.mode("overwrite").parquet(s"$path/bigrams")
-    val json =
-      s"""{"format": "graft-lm-v1", "total": ${lm.total}}"""
-    val spark = lm.unigrams.sparkSession
-    val mp = new org.apache.hadoop.fs.Path(s"$path/manifest.json")
-    val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(mp, true)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    graft.Manifest.write(lm.unigrams.sparkSession, path,
+      "format" -> Format, "total" -> lm.total)
   }
 
   /** Re-open a persisted LM without retraining. Count tables come back
@@ -248,31 +244,8 @@ object LangModel {
     * one open-time aggregate is the IvfPq persisted-index cross-check
     * precedent). */
   def readModel(spark: org.apache.spark.sql.SparkSession, path: String): Lm = {
-    val mp = new org.apache.hadoop.fs.Path(s"$path/manifest.json")
-    val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(mp)) throw new IllegalArgumentException(
-      s"$path/manifest.json is missing — not a persisted graft LM " +
-        "(or an interrupted write; re-create it with LangModel.writeModel)")
-    val in = fs.open(mp)
-    val txt =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val m =
-      try {
-        // SafeConstructor, NOT the default constructor (shared-filesystem
-        // manifests must not instantiate classes from !! tags).
-        val y = new org.yaml.snakeyaml.Yaml(
-          new org.yaml.snakeyaml.constructor.SafeConstructor(
-            new org.yaml.snakeyaml.LoaderOptions()))
-        y.load[java.util.Map[String, Object]](txt)
-      } catch {
-        case e: Exception => throw new IllegalArgumentException(
-          s"$path/manifest.json is unreadable: ${e.getMessage}")
-      }
-    val format = String.valueOf(m.get("format"))
-    if (format != "graft-lm-v1") throw new IllegalArgumentException(
-      s"$path holds format '$format', not a graft-lm-v1 language model")
-    val total = String.valueOf(m.get("total")).toLong
+    val total = graft.Manifest.read(spark, path, "language model", Format)
+      .long("total")
     val unigrams = graft.Cached.hold(spark.read.parquet(s"$path/unigrams"))
     val bigrams = graft.Cached.hold(spark.read.parquet(s"$path/bigrams"))
     graft.Cached.guard(bigrams, unigrams) {

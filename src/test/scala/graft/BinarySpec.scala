@@ -227,6 +227,11 @@ class BinarySpec extends SparkSpec {
       Binary.readBinaryIndex(spark, path)
     }
     assert(ex2.getMessage.contains("graft-bin-v1"))
+    // only the format field decides: the tag named in another field does not pass
+    tamper("""{"format": "graft-sq8-v1", "note": "graft-bin-v1", "dim": 64, "rows": 64}""")
+    assert(intercept[IllegalArgumentException] {
+      Binary.readBinaryIndex(spark, path)
+    }.getMessage.contains("foreign"))
     // row-count mismatch (partial copy)
     tamper("""{"format": "graft-bin-v1", "dim": 64, "rows": 63}""")
     val ex3 = intercept[IllegalArgumentException] {

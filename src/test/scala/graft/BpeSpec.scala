@@ -92,6 +92,9 @@ class BpeSpec extends SparkSpec {
     }
     rewrite("""{"format": "graft-lm-v1", "total": 3}""")
     intercept[IllegalArgumentException] { Bpe.readModel(spark, path) }
+    // empty manifest
+    rewrite("")
+    intercept[IllegalArgumentException] { Bpe.readModel(spark, path) }
     // rank-count mismatch (partially-copied merges) refuses
     rewrite("""{"format": "graft-bpe-v1", "num_merges": 9, "end_of_word": "</w>"}""")
     intercept[IllegalArgumentException] { Bpe.readModel(spark, path) }
@@ -151,6 +154,11 @@ class BpeSpec extends SparkSpec {
     rewrite("merges.txt", "#version: 0.2\ne s\n")
     rewrite("vocab.json", """{"e": 0, "s": 2, "es": 3}""")
     intercept[IllegalArgumentException] { Bpe.readTextFormat(spark, p) }
+    // empty vocab
+    rewrite("vocab.json", "")
+    assert(intercept[IllegalArgumentException] {
+      Bpe.readTextFormat(spark, p)
+    }.getMessage.contains("vocab.json is corrupt"))
     // exporting a vocab that lacks a product refuses at write time
     intercept[IllegalArgumentException] {
       Bpe.writeTextFormat(spark, Bpe.TextModel(m, Vector("e", "s")), p)

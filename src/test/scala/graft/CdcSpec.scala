@@ -100,6 +100,11 @@ class CdcSpec extends SparkSpec {
     assert(intercept[IllegalArgumentException] {
       Cdc.readSnapshot(spark, foreign)
     }.getMessage.contains("foreign"))
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(s"$foreign/manifest.json"), Array.emptyByteArray)
+    assert(intercept[IllegalArgumentException] {
+      Cdc.readSnapshot(spark, foreign)
+    }.getMessage.contains("corrupt"))
 
     val path = tmpDir()
     Cdc.writeSnapshot(base, Seq("k"), path)

@@ -115,6 +115,9 @@ class EntrySpec extends SparkSpec {
     // one cache owner: comments that name these calls live in Cached too
     for (call <- Seq(".persist(", ".cache()", ".unpersist(", "heckpoint("))
       assert(holding(call) == Seq("Cached.scala"), call)
+    // one manifest codec: comments that name the file live in Manifest too
+    assert(holding("manifest.json") == Seq("Manifest.scala"))
+    assert(holding("snakeyaml").sorted == Seq("ConfigPipeline.scala", "Manifest.scala"))
     val mains = files.flatMap { f =>
       var obj = ""
       Files.readAllLines(f).asScala.flatMap { l =>

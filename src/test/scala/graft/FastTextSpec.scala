@@ -207,6 +207,14 @@ class FastTextSpec extends SparkSpec {
     rewriteManifest(
       """{"format": "graft-lm-v1", "keyed": "bucket", "buckets": 64, "bias": 0.0, "rows": 1}""")
     intercept[IllegalArgumentException] { FastText.readModel(spark, path) }
+    // empty manifest; a number where the key lane belongs
+    rewriteManifest("")
+    intercept[IllegalArgumentException] { FastText.readModel(spark, path) }
+    rewriteManifest(
+      """{"format": "graft-ft-v1", "keyed": 7, "buckets": 64, "bias": 0.0, "rows": 1}""")
+    assert(intercept[IllegalArgumentException] {
+      FastText.readModel(spark, path)
+    }.getMessage.contains("field 'keyed'"))
     // truncated weights: declare one more row than the parquet holds
     val n = spark.read.parquet(s"$path/weights").count()
     rewriteManifest(

@@ -124,6 +124,13 @@ class LangModelSpec extends SparkSpec {
       java.nio.file.Paths.get(path, "manifest.json"),
       """{"format": "graft-bpe-v1", "num_merges": 2}""")
     intercept[IllegalArgumentException] { LangModel.readModel(spark, path) }
+    // an empty manifest, and one without its numeric field, refuse by name
+    for (json <- Seq("", """{"format": "graft-lm-v1"}""")) {
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(path, "manifest.json"), json)
+      val e = intercept[IllegalArgumentException] { LangModel.readModel(spark, path) }
+      assert(e.getMessage.contains("manifest.json is corrupt"), e.getMessage)
+    }
   }
 
   test("a partially-copied unigram table refuses at open, not at score time") {

@@ -451,6 +451,13 @@ class NearDupSpec extends SparkSpec {
       MinHash.readSignatureIndex(spark, path)
     }
     assert(ex4.getMessage.contains("graft-minhash-v1"))
+    // only the format field decides: the tag named in another field does not pass
+    val fp2 = new java.io.PrintWriter(s"$path/manifest.json")
+    try fp2.write("""{"format": "other", "note": "graft-minhash-v1", "k": 64, "rows": 1}""")
+    finally fp2.close()
+    assert(intercept[IllegalArgumentException] {
+      MinHash.readSignatureIndex(spark, path)
+    }.getMessage.contains("foreign"))
   }
 
   test("dedup_recall grader computes exact precision/recall on a known fixture") {

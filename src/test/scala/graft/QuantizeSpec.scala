@@ -116,6 +116,11 @@ class QuantizeSpec extends SparkSpec {
     }
     rewrite(orig.replace("graft-sq8-v1", "graft-pq-v1"))
     assertThrows[IllegalArgumentException](Quantize.readSq8Index(spark, tmp))
+    // only the format field decides: the tag named in another field does not pass
+    rewrite(orig.replace("\"graft-sq8-v1\"", "\"graft-bin-v1\", \"note\": \"graft-sq8-v1\""))
+    assert(intercept[IllegalArgumentException] {
+      Quantize.readSq8Index(spark, tmp)
+    }.getMessage.contains("foreign"))
     rewrite(orig.replaceAll(""""rows": \d+""", "\"rows\": 9999"))
     assertThrows[IllegalArgumentException](Quantize.readSq8Index(spark, tmp))
     rewrite(orig.replaceAll(""""dim": \d+""", "\"dim\": 3"))

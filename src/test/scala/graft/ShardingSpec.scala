@@ -71,6 +71,11 @@ class ShardingSpec extends SparkSpec {
       Sharding.readShards(spark, path)
     }
     assert(ex2.getMessage.contains("graft-shards-v1"))
+    // only the format field decides: the tag named in another field does not pass
+    tamper("""{"format": "other-v1", "note": "graft-shards-v1", "n_shards": 8, "rows": 0, "shards": []}""")
+    for (open <- Seq(() => Sharding.readShards(spark, path),
+        () => Sharding.appendToShards(d.limit(1), "doc_id", "text", path)))
+      assert(intercept[IllegalArgumentException](open()).getMessage.contains("foreign"))
     // per-shard row mismatch (partial copy)
     tamper("""{"format": "graft-shards-v1", "n_shards": 8, "rows": 1, "shards": [{"shard": 0, "rows": 1, "tokens": 1}]}""")
     val ex3 = intercept[IllegalArgumentException] {
@@ -112,6 +117,10 @@ class ShardingSpec extends SparkSpec {
     assert(intercept[IllegalArgumentException] {
       Sharding.readShardsJsonl(spark, path)
     }.getMessage.contains("graft-shards-jsonl-v1"))
+    tamper("")
+    assert(intercept[IllegalArgumentException] {
+      Sharding.readShardsJsonl(spark, path)
+    }.getMessage.contains("corrupt"))
     tamper("""{"format": "graft-shards-jsonl-v1", "n_shards": 8, "rows": 1, "schema": "doc_id BIGINT,lang STRING,text STRING,n_chars INT", "shards": [{"shard": 0, "rows": 1, "tokens": 1}]}""")
     assert(intercept[IllegalArgumentException] {
       Sharding.readShardsJsonl(spark, path)
