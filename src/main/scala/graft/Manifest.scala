@@ -7,6 +7,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FileContext, Options, Path, UnsupportedFileSystemException}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.types.StructType
 import org.yaml.snakeyaml.{LoaderOptions, Yaml}
 import org.yaml.snakeyaml.constructor.SafeConstructor
 
@@ -79,6 +80,16 @@ object Manifest {
     def string(k: String): String = get(k) match {
       case s: String => s
       case other => wrong(k, other, "a string")
+    }
+
+    /** A string field holding a Spark DDL schema, parsed. */
+    def schema(k: String): StructType = {
+      val ddl = string(k)
+      try StructType.fromDDL(ddl)
+      catch {
+        case e: Exception => corrupt(src,
+          s"field '$prefix$k' pins an unparsable schema '$ddl': ${e.getMessage}")
+      }
     }
 
     def strings(k: String): Seq[String] = list(k).zipWithIndex.map {

@@ -72,7 +72,7 @@ object Cdc {
   // to a mutable snapshot): a versioned directory tree
   //
   //   path/v0/  path/v1/ …  (immutable parquet per version)
-  //   path/ manifest        (format tag, current version, rows, schema DDL,
+  //   the manifest          (format tag, current version, rows, schema DDL,
   //                          key columns, max applied seq — written LAST)
   //
   // Each applied batch writes a NEW version directory first and commits by
@@ -98,16 +98,6 @@ object Cdc {
                             maxSeq: Long): Unit =
     graft.Manifest.write(spark, path, "format" -> Format, "version" -> version,
       "rows" -> rows, "schema" -> ddl, "key_cols" -> keyCols, "max_seq" -> maxSeq)
-
-  /** The schema the manifest pins. */
-  private def pinnedSchema(m: graft.Manifest.Fields, path: String) = {
-    val ddl = m.string("schema")
-    try org.apache.spark.sql.types.StructType.fromDDL(ddl)
-    catch {
-      case e: Exception => throw new IllegalArgumentException(
-        s"manifest at $path pins an unparsable schema '$ddl': ${e.getMessage}")
-    }
-  }
 
   /** Write version 0 of a persisted snapshot. Refusals: empty base (an
     * empty initial snapshot is almost always a mis-pointed path), key
@@ -144,7 +134,7 @@ object Cdc {
         s"not (${keyCols.mkString(", ")})")
     val version = m.long("version")
     val maxSeq = m.long("max_seq")
-    val schema = pinnedSchema(m, path)
+    val schema = m.schema("schema")
     val bounds = changes.agg(min(col(seqCol)).cast("long"),
       max(col(seqCol)).cast("long")).collect()(0)
     if (bounds.isNullAt(0)) throw new IllegalArgumentException(
@@ -172,7 +162,7 @@ object Cdc {
     val m = graft.Manifest.read(spark, path, "CDC snapshot", Format)
     val version = m.long("version")
     val rows = m.long("rows")
-    val schema = pinnedSchema(m, path)
+    val schema = m.schema("schema")
     val vp = new org.apache.hadoop.fs.Path(s"$path/v$version")
     if (!fs(spark, path).exists(vp)) throw new IllegalArgumentException(
       s"manifest at $path points at version $version but $path/v$version " +

@@ -132,14 +132,7 @@ object Sharding {
     * written. */
   def readShardsJsonl(spark: SparkSession, path: String): DataFrame = {
     val m = graft.Manifest.read(spark, path, "JSONL shard export", JsonlFormat)
-    val ddl = m.string("schema")
-    val schema =
-      try org.apache.spark.sql.types.StructType.fromDDL(ddl)
-      catch {
-        case e: Exception => throw new IllegalArgumentException(
-          s"manifest at $path pins an unparsable schema '$ddl': ${e.getMessage}")
-      }
-    matched(spark.read.schema(schema.add("shard", "int")).json(s"$path/data"),
+    matched(spark.read.schema(m.schema("schema").add("shard", "int")).json(s"$path/data"),
       m, s"JSONL export at $path")
   }
 

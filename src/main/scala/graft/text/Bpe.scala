@@ -291,8 +291,9 @@ object Bpe {
     val model = Model(merges)
     val vocabTxt = readText(spark, s"$path/vocab.json")
     val parsed = graft.Manifest.parse(s"$path/vocab.json", vocabTxt)
-    val byId = new Array[String](parsed.keys.size)
-    parsed.keys.foreach { tok =>
+    val tokens = parsed.keys
+    val byId = new Array[String](tokens.size)
+    tokens.foreach { tok =>
       val i = parsed.int(tok)
       if (i < 0 || i >= byId.length || byId(i) != null)
         throw new IllegalArgumentException(

@@ -30,6 +30,7 @@ class ManifestSpec extends SparkSpec {
     assert(m.double("x") == -0.125 && m.double("tiny") == 1e-300)
     assert(m.double("huge") == 1e10 && m.double("nan").isNaN)
     assert(m.string("ddl") == ddl)
+    assert(m.schema("ddl").fieldNames.toSeq == Seq("a\"b", "c\\d"))
     assert(m.strings("keys") == Seq("k", "é"))
     assert(m.objects("shards").map(s => (s.int("shard"), s.long("rows"))) ==
       Seq((0, 5L), (1, 7L)))
@@ -98,6 +99,8 @@ class ManifestSpec extends SparkSpec {
     assert(refusal(ok)(_.double("format")).contains("field 'format'"))
     assert(refusal(ok)(_.int("big")).contains("not a 32-bit integer"))
     assert(refusal(ok)(_.string("big")).contains("not a string"))
+    assert(refusal(ok)(_.schema("format")).startsWith(
+      s"$src is corrupt: field 'format' pins an unparsable schema '$Tag': "))
     assert(refusal(ok)(_.strings("xs")).contains("field 'xs[0]' is '1'"))
     assert(refusal(ok)(_.objects("xs")).contains("field 'xs[0]' is '1'"))
     assert(refusal(ok)(_.objects("shards").map(_.long("rows"))) ==
